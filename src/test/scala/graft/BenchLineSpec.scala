@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the driver's PERF per_query/scaling empty every round). */
 class BenchLineSpec extends AnyFunSuite {
 
-  // a corpus the size and shape of the real one: 184 queries named
-  // qNN_some_long_suffix with second-scale timings
+  // a corpus the shape of the real one and a little larger: 195 queries
+  // (q01-q47, q50-q99, q100-q197) named qNN_some_long_suffix with
+  // second-scale timings
   private val names =
     (1 to 47).map(i => f"q$i%02d_some_relational_query_name") ++
       (50 to 99).map(i => f"q$i%02d_dedup_or_text_query_name") ++
@@ -55,5 +56,22 @@ class BenchLineSpec extends AnyFunSuite {
     val line = Bench.terminalLine(dup, 3.0, "0.1", 0, "null", false)
     assert(!line.contains("\"queries\""))
     assert(line.contains("\"value\":3.000"))
+  }
+
+  test("a corpus too large even at qdiv 1 gets the over-budget marker and no map") {
+    // 250 queries at 3-digit seconds: the keyed map alone passes the budget
+    val big = (1 to 250).map(i => s"q${i}_long_running_query" -> (100.0 + i))
+    val line = Bench.terminalLine(big, 62875.0, "0.1", 0, "null", false)
+    assert(line.length <= 1900)
+    assert(line.contains("\"queries_map_dropped\":\"over_budget\""))
+    assert(!line.contains("\"queries\""))
+    assert(!line.contains("\"qdiv\""))
+    assert(line.contains("\"value\":62875.000"))
+  }
+
+  test("ambiguous prefixes name their cause in the marker") {
+    val dup = Seq("q01_a" -> 1.0, "q01_b" -> 2.0)
+    val line = Bench.terminalLine(dup, 3.0, "0.1", 0, "null", false)
+    assert(line.contains("\"queries_map_dropped\":\"ambiguous_prefixes\""))
   }
 }
