@@ -65,14 +65,18 @@ object ConnectedComponents {
     // harness releases it after materialization). Reliable mode keeps
     // checkpoint-dir files: nothing pinned in executor memory.
     var releasable = List.empty[org.apache.spark.rdd.RDD[_]]
-    // LAZY truncation (round-19, guide §1.2 — fewer actions): the
-    // checkpoint no longer runs its own materializing count job; the
+    // LAZY local truncation (round-19, guide §1.2 — fewer actions): the
+    // local checkpoint runs no materializing job of its own; the
     // convergence-checksum aggregate right after it is the materializing
     // action (computing the aggregate persists the checkpoint blocks as
     // a side effect of the storage level the lazy checkpoint sets), so
-    // every round costs ONE job where it cost two.
+    // every round costs ONE job where it cost two. The reliable
+    // checkpoint stays EAGER: it sets no storage level, and a job's
+    // checkpoint pass stops at the first marked RDD, so a lazy edges
+    // checkpoint (an ancestor of every round's labels) would never be
+    // written and every round would recompute the edges' lineage.
     def truncate(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = false)
+      if (reliable) df.checkpoint(eager = true)
       else {
         // Dataset.localCheckpoint keeps the InternalRow fast path (no
         // Row (de)serialization hop); the persisted RDD rides the
@@ -102,8 +106,8 @@ object ConnectedComponents {
       .withColumn("label", col("id")))
     // ONE aggregate returns the convergence witness AND the emptiness
     // probe (formerly a separate edges.isEmpty action), and its
-    // computation materializes the labels AND edges checkpoint blocks
-    // (labels' lineage runs through edges before truncation cuts it)
+    // computation materializes the labels AND edges local-checkpoint
+    // blocks (labels' lineage runs through edges before truncation cuts it)
     var (prevSum, n0) = checksumCount(labels)
     var iter = 0
     var converged = n0 == 0L

@@ -24,10 +24,10 @@ import org.apache.spark.sql.functions.col
   * chain frames that meant 32 tasks × 32 shuffle blocks of pure
   * overhead per pass (measured: the 0.7–1.0 s winnow jobs in
   * q153/q157 carry ~10 KB of data each). Instead the width is
-  * ceil(sizeInBytes / targetBytesPerTask), clamped to
+  * ceil(sizeInBytes / TargetBytesPerTask), clamped to
   * [1, minParallelism]; when the estimate says the current layout
   * already has enough partitions, the exchange disappears entirely.
-  * `targetBytesPerTask` defaults to 64 KB of PLAN-estimated (compressed
+  * `TargetBytesPerTask` is 64 KB of PLAN-estimated (compressed
   * parquet) bytes — deliberately far below the 128 MB scan-split
   * default, because (a) the passes behind a spread are CPU-bound per
   * char, not IO-bound (measured: a minhash pass over 1.3 MB of
@@ -36,8 +36,7 @@ import org.apache.spark.sql.functions.col
   * bytes, and (c) the asymmetry favors over-splitting: an extra task
   * costs ~20 ms of dispatch, an under-split pass serializes seconds of
   * CPU (A/B at sf0.1: 64 KB target 31.4 s vs 512 KB 36.3 s vs 4 MB
-  * 49.6 s on the six heaviest spread consumers). Parameterized
-  * (`spark.graft.spread.targetBytesPerTask`) for production tuning.
+  * 49.6 s on the six heaviest spread consumers).
   * Join-inflated size estimates can only restore the OLD behavior (the
   * clamp caps the width at `minParallelism`, exactly what the blanket
   * repartition produced), never degrade below it.
@@ -45,19 +44,9 @@ import org.apache.spark.sql.functions.col
 private[graft] object Spread {
 
   /** Plan-estimated bytes that justify one spread task. */
-  private def targetBytesPerTask(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("spark.graft.spread.targetBytesPerTask")
-      .map(_.toLong).filter(_ > 0).getOrElse(64L << 10)
+  private val TargetBytesPerTask = BigInt(64L << 10)
 
-  /** `spark.graft.spread.adaptive=false` restores the blanket
-    * repartition(col) (A/B escape hatch; default on). */
-  private def adaptive(df: DataFrame): Boolean =
-    !df.sparkSession.conf.getOption("spark.graft.spread.adaptive")
-      .contains("false")
-
-  /** `costWeight` tunes the width for passes off the tokenize/winnow
-    * per-byte norm: > 1 multiplies the byte estimate (heavier CPU per
-    * byte → wider); the special value 0 keeps the exchange UN-NUMBERED
+  /** `aqeSized = true` keeps the exchange UN-NUMBERED
     * (`repartition(col)`) above the tiny-frame cutoff, so AQE sizes the
     * reduce side from the ACTUAL shuffle bytes — measured best for
     * multi-consumer frames whose post-exchange stages are individually
@@ -66,22 +55,20 @@ private[graft] object Spread {
     * stages each pay the task fan-out while the compute is ~0.5 s
     * total). Tiny frames still skip the exchange entirely either way. */
   def byKey(df: DataFrame, key: String, minParallelism: Int,
-      costWeight: Int = 1): DataFrame =
-    // toRdd, not .rdd: the partition count is the same, but .rdd plans an
-    // extra row-deserializer stage per call — measurable at bench scale
-    if (minParallelism > 0 &&
-        df.queryExecution.toRdd.getNumPartitions < minParallelism) {
-      if (!adaptive(df)) df.repartition(col(key))
+      aqeSized: Boolean = false): DataFrame =
+    if (minParallelism <= 0) df
+    else {
+      // toRdd, not .rdd: the partition count is the same, but .rdd plans
+      // an extra row-deserializer stage per call — measurable at bench scale
+      val current = df.queryExecution.toRdd.getNumPartitions
+      if (current >= minParallelism) df
       else {
-        val current = df.queryExecution.toRdd.getNumPartitions
-        val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes *
-          math.max(1, costWeight)
-        val target = BigInt(targetBytesPerTask(df))
-        val n = ((bytes + target - 1) / target).min(BigInt(minParallelism))
-          .max(BigInt(1)).toInt
+        val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+        val n = ((bytes + TargetBytesPerTask - 1) / TargetBytesPerTask)
+          .min(BigInt(minParallelism)).max(BigInt(1)).toInt
         if (n <= current) df
-        else if (costWeight == 0) df.repartition(col(key))
+        else if (aqeSized) df.repartition(col(key))
         else df.repartition(n, col(key))
       }
-    } else df
+    }
 }

@@ -407,11 +407,11 @@ object TextAnalysis {
     val halfUp6: Column => Column =
       c => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     graft.functions.TokenCounts.register(df.sparkSession)
-    // costWeight 0: three consumers (bigram tf, vocab, the final left
+    // aqeSized: three consumers (bigram tf, vocab, the final left
     // join) each fan out over this exchange while the per-stage compute
     // is small — AQE sizing the reduce side from the actual shuffle
     // bytes measured 1.3–1.6× faster than any pinned width here
-    val toks = Spread.byKey(df, idCol, minParallelism, costWeight = 0)
+    val toks = Spread.byKey(df, idCol, minParallelism, aqeSized = true)
       .select(col(idCol).as("doc_id"), tokens(lower(col(textCol))).as("t"))
     // (doc, bigram, tf) born per-row: no occurrence-level exchange
     val tf = toks

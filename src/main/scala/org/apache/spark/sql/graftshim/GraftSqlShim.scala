@@ -66,4 +66,10 @@ object GraftSqlShim {
         Some(v1.v1Table)
       case _ => None
     }
+
+  /** Wait until every queued listener event has been delivered
+    * (`SparkContext.listenerBus` is `private[spark]`), so a listener's
+    * records are complete before they are read. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -74,4 +74,58 @@ class BenchLineSpec extends AnyFunSuite {
     val line = Bench.terminalLine(dup, 3.0, "0.1", 0, "null", false)
     assert(line.contains("\"queries_map_dropped\":\"ambiguous_prefixes\""))
   }
+
+  // ---- the per-query layer split of the full line ----
+
+  private def job(run: String, startMs: Long, endMs: Long) =
+    BenchJob(Option(run), startMs, endMs, tasks = 4, shuffleBytes = 100)
+
+  test("layer split: overlapping jobs count their union once") {
+    // AQE runs stages of one query concurrently: [0,400] ∪ [100,300] ∪
+    // [350,600] is 600 ms of job time, not the 850 ms their sum gives
+    val (split, unattributed) = Bench.layerSplit(Map("q01#1" -> 1.0),
+      Seq(job("q01#1", 0, 400), job("q01#1", 100, 300), job("q01#1", 350, 600)))
+    assert(split("q01#1") == Layers(3, 12, 300, 0.6, 0.4))
+    assert(unattributed == 0)
+  }
+
+  test("layer split: disjoint jobs add up and the driver keeps the gaps") {
+    val (split, _) = Bench.layerSplit(Map("q02#2" -> 2.0),
+      Seq(job("q02#2", 1000, 1250), job("q02#2", 1500, 2000)))
+    val l = split("q02#2")
+    assert(l.jobs == 2 && math.abs(l.jobS - 0.75) < 1e-9)
+    assert(math.abs(l.jobS + l.driverS - 2.0) < 1e-9)
+  }
+
+  test("layer split: a run without jobs is all driver time") {
+    val (split, unattributed) = Bench.layerSplit(Map("q03#1" -> 0.25), Nil)
+    assert(split("q03#1") == Layers(0, 0, 0, 0.0, 0.25))
+    assert(unattributed == 0)
+    assert(split("q03#1").json ==
+      """{"jobs":0,"tasks":0,"shuffle_bytes":0,"job_s":0.000,"driver_s":0.250}""")
+  }
+
+  test("layer split: jobs without a run are counted, other passes' jobs are not") {
+    val jobs = Seq(job("q04#2", 0, 100), job("q04#1", 0, 900),
+      BenchJob(None, 50, 60, 1, 0), BenchJob(None, 70, 80, 1, 0))
+    val (split, unattributed) = Bench.layerSplit(Map("q04#2" -> 0.5), jobs)
+    assert(split("q04#2").jobs == 1 && split("q04#2").jobS == 0.1)
+    assert(unattributed == 2)
+    // job time never exceeds the wall time the bench measured
+    val (capped, _) = Bench.layerSplit(Map("q04#1" -> 0.8), jobs)
+    assert(capped("q04#1").jobS == 0.8 && capped("q04#1").driverS == 0.0)
+  }
+
+  test("a full line carrying layers still parses all of its queries entries") {
+    val qs = results.take(30)
+    val queries = qs.map { case (n, v) => "\"" + n + "\":" + Bench.r3(v) }
+      .mkString("{", ",", "}")
+    val layers = qs.map { case (n, v) =>
+      "\"" + n + "\":" + Layers(2, 16, 4096, v / 2, v / 2).json }
+      .mkString("{", ",", "}")
+    val line = s"""{"metric":"total","value":12.345,"unit":"sec","queries":$queries,"medians":$queries,"chains":{},"median_ratio_vs_committed":null,"uniform_inflation":false,"sf":0.1,"failed":0,"layers":$layers,"unattributed_jobs":0}"""
+    val parsed = Bench.committedQueries(line)
+    assert(parsed.size == qs.size)
+    qs.foreach { case (n, v) => assert(math.abs(parsed(n) - v) < 1e-3, n) }
+  }
 }

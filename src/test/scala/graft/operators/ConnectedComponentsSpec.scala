@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 class ConnectedComponentsSpec extends SparkSpec {
@@ -81,14 +82,43 @@ class ConnectedComponentsSpec extends SparkSpec {
         (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
         .filter(p => p._1 != p._2)
       val fast = run(pairs)
-      val durable = ConnectedComponents
-        .clusters(pairs.toDF("a", "b"), "a", "b", maxIter = 25, reliable = true)
-        .as[(Long, Long)].collect().toMap
+      // no broadcast joins, as at corpus scale: a broadcast of the edges
+      // side runs a collect job whose checkpoint pass happens to write
+      // the edges frame, hiding whether the operator itself writes it
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val durable =
+        try ConnectedComponents
+          .clusters(pairs.toDF("a", "b"), "a", "b", maxIter = 25, reliable = true)
+          .as[(Long, Long)].collect().toMap
+        finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       assert(durable == fast && durable == ufClusters(pairs))
-      // the reliable run actually wrote round state to the checkpoint dir
-      val wrote = java.nio.file.Files.walk(dir).filter(_.toFile.isFile)
-        .count()
-      assert(wrote > 0, "reliable=true never touched the checkpoint dir")
+      // the reliable run wrote the loop-invariant edges frame itself to
+      // the checkpoint dir, not only the per-round labels: read every
+      // checkpointed RDD back and look for the directed edge set
+      val directed = pairs.flatMap { case (a, b) => Seq(a -> b, b -> a) }.toSet
+      val ser = org.apache.spark.SparkEnv.get.serializer.newInstance()
+      // checkpoint files go through the session's io codec (lz4 here)
+      // when spark.checkpoint.compress is on, the Spark 4.1 default
+      val conf = spark.sparkContext.getConf
+      val lz4 = new org.apache.spark.io.LZ4CompressionCodec(conf)
+      val compressed = conf.getBoolean("spark.checkpoint.compress", true)
+      def files(p: java.nio.file.Path, prefix: String) =
+        java.nio.file.Files.walk(p).iterator().asScala
+          .filter(_.getFileName.toString.startsWith(prefix)).toList
+      val checkpointed = files(dir, "rdd-").map { rdd =>
+        files(rdd, "part-").flatMap { part =>
+          val raw = java.nio.file.Files.newInputStream(part)
+          val in = if (compressed) lz4.compressedInputStream(raw) else raw
+          try ser.deserializeStream(in).asIterator.map {
+            case r: org.apache.spark.sql.catalyst.InternalRow =>
+              r.getLong(0) -> r.getLong(1)
+          }.toList
+          finally in.close()
+        }.toSet
+      }
+      assert(checkpointed.nonEmpty, "reliable=true never touched the checkpoint dir")
+      assert(checkpointed.exists(_ == directed),
+        s"no checkpointed RDD holds the edges (${checkpointed.size} RDDs written)")
     } finally {
       saved.foreach(spark.sparkContext.setCheckpointDir)
       org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)

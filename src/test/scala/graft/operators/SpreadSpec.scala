@@ -41,23 +41,12 @@ class SpreadSpec extends SparkSpec {
   }
 
   test("costWeight 0: exchange stays un-numbered (AQE-sizable), tiny frames still skip it") {
+    // `aqeSized = true` is what `costWeight = 0` used to select
     val tiny = (1L to 20L).map(i => (i, s"t$i")).toDF("id", "text").coalesce(1)
-    assert(Spread.byKey(tiny, "id", 8, costWeight = 0) eq tiny)
+    assert(Spread.byKey(tiny, "id", 8, aqeSized = true) eq tiny)
     val big = (1L to 2000L).map(i => (i, "x" * 600)).toDF("id", "text").coalesce(1)
-    val out = Spread.byKey(big, "id", 8, costWeight = 0)
+    val out = Spread.byKey(big, "id", 8, aqeSized = true)
     assert(exchanges(out) > exchanges(big))
     assert(out.queryExecution.analyzed.toString.contains("RepartitionByExpression"))
-  }
-
-  test("escape hatch restores the blanket repartition") {
-    spark.conf.set("spark.graft.spread.adaptive", "false")
-    try {
-      val df = (1L to 10L).map(i => (i, s"t$i")).toDF("id", "text")
-        .coalesce(1)
-      val out = Spread.byKey(df, "id", 8)
-      // the blanket path always inserts the hash exchange (AQE may still
-      // coalesce its reduce side, so partition count is not asserted)
-      assert(exchanges(out) > exchanges(df))
-    } finally spark.conf.unset("spark.graft.spread.adaptive")
   }
 }

@@ -9,6 +9,9 @@ multi-minute throttle windows — BASELINE.md) is kept as the separate
 `min_merge_total` field and still feeds the per-query `queries` map
 that Bench's throttle self-diagnosis compares against. `raw_totals`
 records every input run's total so the run count is self-documenting.
+Each query's `medians` entry and `layers` record (its job/driver split)
+come from the run that won its `queries` minimum; `unattributed_jobs`
+is the maximum over the runs.
 
 Usage:
 
@@ -22,7 +25,7 @@ def main():
     if not runs:
         sys.exit("need at least one run artifact")
     names = sorted(set().union(*[set(r["queries"]) for r in runs]))
-    queries, medians = {}, {}
+    queries, medians, layers = {}, {}, {}
     for n in names:
         best = min((r for r in runs if r["queries"].get(n, -1.0) >= 0),
                    key=lambda r: r["queries"][n], default=None)
@@ -32,6 +35,8 @@ def main():
         else:
             queries[n] = best["queries"][n]
             medians[n] = best.get("medians", {}).get(n, queries[n])
+            if n in best.get("layers", {}):
+                layers[n] = best["layers"][n]
     chains = {}
     for n in set().union(*[set(r.get("chains", {})) for r in runs]):
         chains[n] = min(r["chains"][n] for r in runs
@@ -52,10 +57,12 @@ def main():
         "uniform_inflation": all(bool(r.get("uniform_inflation"))
                                  for r in runs),
         "sf": runs[0].get("sf"), "failed": failed,
+        "layers": layers,
+        "unattributed_jobs": max(r.get("unattributed_jobs", 0) for r in runs),
         "note": (f"headline = best single run of {len(runs)} same-HEAD "
                  f"3-pass runs (raw totals {raw_totals}); queries map = "
                  "per-query min across runs, totalling min_merge_total; "
-                 "medians from each query's winning run"),
+                 "medians and layers from each query's winning run"),
     }
     json.dump(merged, open(out_path, "w"), separators=(",", ":"))
     print(f"merged {len(queries)} queries from {len(runs)} runs -> "

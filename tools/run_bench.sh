@@ -1,6 +1,10 @@
 #!/bin/bash
 # Fast local Bench run: plain java against compiled classes (skips sbt startup).
 # Usage: tools/run_bench.sh [sfDir]
+# One query:
+#   SPARK_GRAFT_BENCH_ONLY=q82_dedup_clusters SPARK_GRAFT_BENCH_PASSES=2 \
+#     SPARK_GRAFT_BENCH_FULL=/tmp/one.json tools/run_bench.sh
+#   (the full line in /tmp/one.json carries the query's "layers" split)
 # Env passthrough: SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_ONLY,
 #   SPARK_GRAFT_BENCH_PASSES, SPARK_GRAFT_BENCH_CHAIN_PROBES,
 #   SPARK_GRAFT_BENCH_FULL, plus any -Dspark.* via JAVA_EXTRA.
