@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** A10-A17 — the lake write path: time-partitioned, compressed, columnar,
   * catalog-registered tables.
@@ -24,17 +25,18 @@ object LakeWriter {
 
   def sanitizeIdent(s: String): String = s.replaceAll("[^A-Za-z0-9_]", "_")
 
+  /** Lake folder of a config: `folderName`, else its sanitized
+    * stream_alt_id / stream_id. */
+  def folderOf(cfg: StreamConfig): String =
+    if (cfg.folderName.nonEmpty) cfg.folderName
+    else sanitizeIdent(if (cfg.streamAltId.nonEmpty) cfg.streamAltId else cfg.streamId)
+
   /** Write one batch of routed messages for one config. `messages` must
     * carry `payload` (JSON string), `message_type_resolved`, and the
     * timestamp column `tsCol` used for bucketing.
-    * Returns (tableName, path) per message type written.
-    *
-    * `batchScope = Some((scope, batchId))` makes the write IDEMPOTENT
-    * for that (scope, batch): files publish through
-    * [[graft.streaming.BatchCommits.publishBatch]] with batch-scoped
-    * names, so a streaming replay of the same batch REPLACES its own
-    * earlier output instead of appending a second copy (A22 exactly-once
-    * egress). `None` is the plain append for one-shot batch use. */
+    * Returns (tableName, path) per message type written, in type order:
+    * one type-discovery job, then per type one schema inference and
+    * [[writeType]]. */
   def writeStreamTable(
       spark: SparkSession,
       messages: DataFrame,
@@ -45,45 +47,66 @@ object LakeWriter {
       registerTables: Boolean = true,
       maxRecordsPerFile: Long = 5000000L,
       batchScope: Option[(String, Long)] = None): Seq[(String, String)] = {
-
-    val folder = if (cfg.folderName.nonEmpty) cfg.folderName
-      else sanitizeIdent(if (cfg.streamAltId.nonEmpty) cfg.streamAltId else cfg.streamId)
-
-    // distinct message types in this batch: tiny driver-side list (schema
-    // inference is per-type because each type is its own table)
     val types = messages.select(col("message_type_resolved")).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
-
-    if (registerTables) {
-      spark.sql(s"CREATE DATABASE IF NOT EXISTS ${sanitizeIdent(database)}")
-    }
-
+    if (registerTables) createDatabase(spark, database)
     types.map { mt =>
       val sub = messages.filter(col("message_type_resolved") === mt)
-        .withColumn("part", TimePartitions.bucket(tsCol, cfg.partitionTimeId))
-      val parsed = SchemaPolicy.parseColumn(spark, sub, "payload", "__p")
-      val flat = parsed.select(col("__p.*"), col("part"))
-      val path = s"$destRoot/$folder/$mt"
-
-      val writeOpts = Map(
-        "compression" -> cfg.codec,
-        "maxRecordsPerFile" -> maxRecordsPerFile.toString)
-      batchScope match {
-        case Some((scope, batchId)) =>
-          graft.streaming.BatchCommits.publishBatch(
-            flat, path, scope, batchId, Seq("part"), writeOpts)
-        case None =>
-          flat.write
-            .mode(SaveMode.Append)
-            .partitionBy("part")
-            .options(writeOpts)
-            .parquet(path)
-      }
-
-      val table = s"${sanitizeIdent(database)}.${sanitizeIdent(folder)}_${sanitizeIdent(mt)}"
-      if (registerTables) registerTable(spark, table, path)
-      (table, path)
+      writeType(spark, sub, SchemaPolicy.inferColumn(spark, sub, "payload"), cfg, mt,
+        destRoot, tsCol, database, registerTables, maxRecordsPerFile, batchScope)
     }
+  }
+
+  def createDatabase(spark: SparkSession, database: String): Unit =
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS ${sanitizeIdent(database)}")
+
+  /** Write the messages of ONE type `mt` of one config, their payload
+    * parsed with `schema` (see [[SchemaPolicy.inferColumn]]), into
+    * `<destRoot>/<folder>/<mt>`, partitioned by the time bucket of
+    * `tsCol`. Returns (tableName, path); with `registerTables` the
+    * database must exist ([[createDatabase]]).
+    *
+    * `batchScope = Some((scope, batchId))` makes the write IDEMPOTENT
+    * for that (scope, batch): files publish through
+    * [[graft.streaming.BatchCommits.publishBatch]] with batch-scoped
+    * names, so a streaming replay of the same batch REPLACES its own
+    * earlier output instead of appending a second copy (A22 exactly-once
+    * egress). `None` is the plain append for one-shot batch use. */
+  def writeType(
+      spark: SparkSession,
+      messages: DataFrame,
+      schema: StructType,
+      cfg: StreamConfig,
+      mt: String,
+      destRoot: String,
+      tsCol: Column,
+      database: String,
+      registerTables: Boolean,
+      maxRecordsPerFile: Long = 5000000L,
+      batchScope: Option[(String, Long)] = None): (String, String) = {
+    val folder = folderOf(cfg)
+    val flat = messages
+      .select(from_json(col("payload"), schema).as("__p"),
+        TimePartitions.bucket(tsCol, cfg.partitionTimeId).as("part"))
+      .select(col("__p.*"), col("part"))
+    val path = s"$destRoot/$folder/$mt"
+    val writeOpts = Map(
+      "compression" -> cfg.codec,
+      "maxRecordsPerFile" -> maxRecordsPerFile.toString)
+    batchScope match {
+      case Some((scope, batchId)) =>
+        graft.streaming.BatchCommits.publishBatch(
+          flat, path, scope, batchId, Seq("part"), writeOpts)
+      case None =>
+        flat.write
+          .mode(SaveMode.Append)
+          .partitionBy("part")
+          .options(writeOpts)
+          .parquet(path)
+    }
+    val table = s"${sanitizeIdent(database)}.${sanitizeIdent(folder)}_${sanitizeIdent(mt)}"
+    if (registerTables) registerTable(spark, table, path)
+    (table, path)
   }
 
   /** Idempotent catalog registration (the native replacement for Dremio /

@@ -37,14 +37,18 @@ object SchemaPolicy {
     else cleaned
   }
 
+  /** Infer the schema of a JSON column under the policy (one Spark job). */
+  def inferColumn(spark: SparkSession, df: DataFrame, jsonCol: String,
+      referenceNumerics: Boolean = true): StructType = {
+    import spark.implicits._
+    inferSchema(spark, df.select(col(jsonCol)).as[String], referenceNumerics)
+  }
+
   /** Parse a JSON column into a typed struct under the policy. */
   def parseColumn(spark: SparkSession, df: DataFrame, jsonCol: String,
-      outCol: String, referenceNumerics: Boolean = true): DataFrame = {
-    import spark.implicits._
-    val docs = df.select(col(jsonCol)).as[String]
-    val schema = inferSchema(spark, docs, referenceNumerics)
-    df.withColumn(outCol, from_json(col(jsonCol), schema))
-  }
+      outCol: String, referenceNumerics: Boolean = true): DataFrame =
+    df.withColumn(outCol,
+      from_json(col(jsonCol), inferColumn(spark, df, jsonCol, referenceNumerics)))
 
   /** Drop NullType fields, empty structs, and arrays of nothing — returns
     * None when the type itself collapses to nothing. */

@@ -86,7 +86,8 @@ object TxLogTable {
     * readers plan without per-file FS stats).
     *
     * Timestamps are forced to INT64 TIMESTAMP_MICROS for the staged
-    * parquet (scoped conf, saved/restored): Spark's default INT96
+    * parquet (a session-conf scope shared by overlapping stages,
+    * [[microsTimestamps]]): Spark's default INT96
     * encoding carries NO footer statistics, and the stats sidecar is
     * harvested from footers — INT96 would silently lose timestamp
     * skipping. (Delta writes int64 timestamps for the same reason.) */
@@ -124,17 +125,10 @@ object TxLogTable {
     fs.mkdirs(logDir(root))
     val stageId = s"$prefix${java.util.UUID.randomUUID().toString.take(8)}"
     val dataDir = new HPath(root, s"data-$stageId")
-    val conf = df.sparkSession.conf
-    val tsKey = "spark.sql.parquet.outputTimestampType"
-    val prevTs = conf.getOption(tsKey)
-    conf.set(tsKey, "TIMESTAMP_MICROS")
-    try {
+    microsTimestamps(df.sparkSession) {
       val w = df.write.mode(SaveMode.ErrorIfExists)
       (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
         .parquet(dataDir.toString)
-    } finally prevTs match {
-      case Some(v) => conf.set(tsKey, v)
-      case None => conf.unset(tsKey)
     }
     writeFileStats(df.sparkSession, fs, dataDir,
       org.apache.spark.sql.types.StructType(
@@ -142,6 +136,42 @@ object TxLogTable {
     listParquet(fs, dataDir)
       .map { case (rel, size) => (s"data-$stageId/$rel", size) }
       .sortBy(_._1)
+  }
+
+  /** Stages that overlap on one session share one scope per session
+    * conf: the first to enter saves the session's value of the key and
+    * sets it, the last to leave restores it. Per-stage save/restore would
+    * leak: A saves nothing, B saves A's value, A unsets, B restores A's
+    * value for good. */
+  private final class TsScope(val prev: Option[String]) { var holders = 0 }
+  private val tsScopes = new java.util.IdentityHashMap[AnyRef, TsScope]()
+
+  /** Run `body` with `spark.sql.parquet.outputTimestampType` set to
+    * TIMESTAMP_MICROS on the session (see [[stage]]). */
+  private def microsTimestamps[T](spark: SparkSession)(body: => T): T = {
+    val conf = spark.conf
+    val key = "spark.sql.parquet.outputTimestampType"
+    tsScopes.synchronized {
+      var s = tsScopes.get(conf)
+      if (s == null) {
+        s = new TsScope(conf.getOption(key))
+        tsScopes.put(conf, s)
+        conf.set(key, "TIMESTAMP_MICROS")
+      }
+      s.holders += 1
+    }
+    try body
+    finally tsScopes.synchronized {
+      val s = tsScopes.get(conf)
+      s.holders -= 1
+      if (s.holders == 0) {
+        tsScopes.remove(conf)
+        s.prev match {
+          case Some(v) => conf.set(key, v)
+          case None => conf.unset(key)
+        }
+      }
+    }
   }
 
   /** Parquet files under `dir` (recursive — hive partition layouts nest

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Per-batch commit plumbing shared by the foreachBatch gates
@@ -89,18 +89,27 @@ private[graft] object BatchCommits {
 
   /** All files a given (scope, batch) has published into `dir`
     * (recursive, so partitioned layouts are covered). Empty when `dir`
-    * doesn't exist. */
+    * doesn't exist. Safe while other publishers work in `dir`: the walk
+    * skips `.`/`_` directories (their staging and committer dirs), treats
+    * a directory that vanished mid-walk as empty, and uses plain
+    * `listStatus` — `listFiles(recursive)` loads each entry's permissions
+    * eagerly and fails on an entry deleted under it. */
   def publishedFiles(spark: SparkSession, dir: String, scope: String,
       batchId: Long): Seq[Path] = {
     val (fs, target) = fileSystem(spark, dir)
-    if (!fs.exists(target)) return Seq.empty
-    val out = Seq.newBuilder[Path]
-    val it = fs.listFiles(target, true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.startsWith(s"part-$scope-b$batchId-")) out += f
+    val prefix = s"part-$scope-b$batchId-"
+    def walk(d: Path): Seq[Path] = {
+      val entries = try fs.listStatus(d)
+        catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+      entries.toSeq.flatMap { st =>
+        val name = st.getPath.getName
+        if (st.isDirectory) {
+          if (name.startsWith(".") || name.startsWith("_")) Nil else walk(st.getPath)
+        } else if (name.startsWith(prefix)) Seq(st.getPath)
+        else Nil
+      }
     }
-    out.result()
+    walk(target)
   }
 
   /** Offline compaction for a hive-partitioned per-batch-published index:

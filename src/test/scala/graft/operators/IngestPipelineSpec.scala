@@ -145,4 +145,152 @@ class IngestPipelineSpec extends SparkSpec {
     assert(IngestPipeline.readTable(spark, s"$dest/_delta/stream_x/pageview").count() == 1)
     assert(IngestPipeline.readTable(spark, s"$dest/_delta/stream_y/pageview").count() == 1)
   }
+
+  test("configs sharing a lake dir without batchScope both land their rows") {
+    // plain appends into one dir must not run concurrently: they share
+    // the committer's _temporary dir, and the first commit deletes it
+    val dest = tmpDir
+    val cfgs = Seq("x", "y").map(s => StreamConfig(s"stream-$s", "", active = true,
+      "pageview", 1, "shared", TimePartitions.Daily, 1, Seq("ingester")))
+    val docs = Seq("x", "y").flatMap(s => (1 to 3).map(i =>
+      s"""{"stream_id":"stream-$s","type":"pageview","url":"/$s/$i"}""")).toDF("json")
+    IngestPipeline.runBatch(spark, docs, "json", cfgs, dest,
+      tsCol = to_timestamp(lit("2026-08-13 10:00:00")), registerTables = false)
+    assert(spark.read.parquet(s"$dest/shared/pageview").count() == 6)
+  }
+
+  test("an unknown chain function is rejected before any sink writes") {
+    val dest = tmpDir
+    val e = intercept[IllegalArgumentException] {
+      IngestPipeline.runBatch(spark,
+        Seq("""{"projectId":"seg-key-1","type":"pageview","url":"/a"}""").toDF("json"), "json",
+        Seq(cfgLake, cfgChain.copy(functions = Seq("ingester", "bogus"))), dest,
+        registerTables = false)
+    }
+    assert(e.getMessage.contains("'bogus'"))
+    assert(new java.io.File(dest).list().isEmpty)
+  }
+
+  private val ts = to_timestamp(lit("2026-08-12 10:00:00"))
+
+  private def users(df: org.apache.spark.sql.DataFrame): Set[(String, String)] =
+    df.select("user", "ssn").as[(String, String)].collect().toSet
+
+  test("fan-out: two configs x two types keep result order, tables and masking") {
+    val dest = tmpDir
+    val cfgP = StreamConfig("stream-p", "", active = true, "evt", 1, "plake",
+      TimePartitions.Daily, 1, Seq("pii-detection", "ingester", "deltawriter"))
+    val cfgQ = StreamConfig("stream-q", "", active = true, "evt", 1, "qlake",
+      TimePartitions.Daily, 1, Seq("ingester", "pii-detection", "deltawriter"))
+    val docs = for (s <- Seq("p", "q"); t <- Seq("signup", "login"); i <- 1 to 2) yield
+      s"""{"stream_id":"stream-$s","type":"$t","user":"$s-$t-$i","ssn":"123-45-678$i"}"""
+    val results = IngestPipeline.runBatch(spark, docs.toDF("json"), "json",
+      Seq(cfgP, cfgQ), dest, tsCol = ts, registerTables = false)
+
+    assert(results.map(r => (r.config, r.chain)) ==
+      Seq((cfgP, cfgP.functions), (cfgQ, cfgQ.functions)))
+    def tables(s: String) = Seq(
+      (s"rtdl.${s}lake_login", s"$dest/${s}lake/login"),
+      (s"rtdl.${s}lake_signup", s"$dest/${s}lake/signup"),
+      (s"delta_stream_${s}_login", s"$dest/_delta/stream_$s/login"),
+      (s"delta_stream_${s}_signup", s"$dest/_delta/stream_$s/signup"))
+    assert(results.map(_.tables) == Seq(tables("p"), tables("q")))
+
+    def want(s: String, t: String, masked: Boolean) = (1 to 2).map(i =>
+      (s"$s-$t-$i", if (masked) PiiMask.Mask else s"123-45-678$i")).toSet
+    Seq("signup", "login").foreach { t =>
+      // pii first: both of P's sinks see the masked payload
+      assert(users(spark.read.parquet(s"$dest/plake/$t")) == want("p", t, masked = true))
+      assert(users(IngestPipeline.readTable(spark, s"$dest/_delta/stream_p/$t")) ==
+        want("p", t, masked = true))
+      // pii between the sinks: Q's lake keeps the raw payload, its delta
+      // table gets the masked one
+      assert(users(spark.read.parquet(s"$dest/qlake/$t")) == want("q", t, masked = false))
+      assert(users(IngestPipeline.readTable(spark, s"$dest/_delta/stream_q/$t")) ==
+        want("q", t, masked = true))
+    }
+  }
+
+  test("fan-out: a failing sink fails the batch after the others finish; the replay lands once") {
+    val dest = tmpDir
+    val cfgF = StreamConfig("stream-f", "", active = true, "evt", 1, "flake",
+      TimePartitions.Daily, 1, Seq("ingester", "deltawriter"))
+    val cfgG = StreamConfig("stream-g", "", active = true, "evt", 1, "glake",
+      TimePartitions.Daily, 1, Seq("ingester"))
+    val docs = (for (s <- Seq("f", "g"); t <- Seq("a", "b"); i <- 1 to 2) yield
+      s"""{"stream_id":"stream-$s","type":"$t","user":"$s-$t-$i","ssn":"x"}""") :+
+      """{"stream_id":"nobody","type":"a"}"""
+    // the fault: stream-f's "b" delta table has a plain file for a log dir
+    val broken = new java.io.File(s"$dest/_delta/stream_f/b/_log")
+    broken.getParentFile.mkdirs()
+    assert(broken.createNewFile())
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
+    def run() = IngestPipeline.runBatch(spark, docs.toDF("json"), "json",
+      Seq(cfgF, cfgG), dest, tsCol = ts, registerTables = false,
+      batchScope = Some(("s0", 0L)))
+    val e = intercept[Exception](run())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(x => String.valueOf(x.getMessage)).mkString(" | ")
+    assert(msgs.contains("stream_f/b"), msgs)
+
+    import scala.jdk.CollectionConverters._
+    val alive = Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith("ingest-sink"))
+    assert(alive.isEmpty, s"pool threads outlived runBatch: $alive")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cached)
+    // every other sink ran to its end before the error came back
+    def rows(path: String) = spark.read.parquet(path).count()
+    Seq("flake/a", "flake/b", "glake/a", "glake/b").foreach(p => assert(rows(s"$dest/$p") == 2, p))
+    assert(IngestPipeline.readTable(spark, s"$dest/_delta/stream_f/a").count() == 2)
+    assert(rows(s"$dest/_quarantine") == 1)
+
+    assert(broken.delete())
+    val results = run()
+    assert(results.map(_.config) == Seq(cfgF, cfgG))
+    Seq("flake/a", "flake/b", "glake/a", "glake/b").foreach(p => assert(rows(s"$dest/$p") == 2, p))
+    Seq("a", "b").foreach(t =>
+      assert(IngestPipeline.readTable(spark, s"$dest/_delta/stream_f/$t").count() == 2, t))
+    assert(rows(s"$dest/_quarantine") == 1)
+  }
+
+  test("job budget: a batch shaped like the ingest benchmark's runs at most 15 jobs") {
+    // configs A (pii + lake, 3 types), B (lake + txlog, routed by its alt
+    // id, 2 types), C inactive (2 types), plus unknown stream ids
+    val configs = Seq(
+      StreamConfig("web", "", active = true, "event", 1, "weblake", TimePartitions.Daily, 1,
+        Seq("pii-detection", "ingester")),
+      StreamConfig("app", "proj-app", active = true, "event", 1, "applake", TimePartitions.Hourly, 1,
+        Seq("ingester", "deltawriter")),
+      StreamConfig("legacy", "", active = false, "event", 1, "legacylake", TimePartitions.Daily, 1,
+        Seq("ingester")))
+    val ids = Seq("""{"stream_id":"web"""", """{"projectId":"proj-app"""",
+      """{"stream_id":"legacy"""", """{"stream_id":"ghost-1"""")
+    val types = Seq(Seq("page_view", "click", "purchase"), Seq("session", "error"),
+      Seq("heartbeat", "status"), Seq("probe"))
+    val docs = (0 until 60).map { i =>
+      val k = i % 4
+      val ts = f"2026-03-01T${i % 24}%02d:00:00Z"
+      s"""${ids(k)},"type":"${types(k)(i % types(k).size)}","seq":$i,"ts":"$ts",""" +
+        s""""user":{"id":$i},"note":"call 415-555-01${i % 10}0"}"""
+    }
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.batch") == tag))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.batch", tag)
+    try IngestPipeline.runBatch(spark, docs.toDF("value"), "value", configs, tmpDir,
+      tsCol = to_timestamp(get_json_object(col("payload"), "$.ts")),
+      registerTables = false, batchScope = Some(("budget", 0L)))
+    finally {
+      sc.setLocalProperty("graft.test.batch", null)
+      org.apache.spark.sql.graftshim.GraftSqlShim.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    // the budget may go down, never up
+    assert(jobs.get <= 15, s"${jobs.get} jobs")
+  }
 }

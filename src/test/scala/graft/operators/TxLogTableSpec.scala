@@ -1252,4 +1252,43 @@ class TxLogTableSpec extends SparkSpec {
       skipped.forall(!_.contains("grp=x")),
       s"clone must partition-prune: kept=$kept skipped=$skipped")
   }
+
+  test("overlapping stages on one session leave its timestamp conf as it was") {
+    // A enters the stage scope, then B; A leaves first, B last. A
+    // per-stage save/restore leaks here: B saved A's TIMESTAMP_MICROS
+    // and restores it after A already unset the key.
+    val key = "spark.sql.parquet.outputTimestampType"
+    val before = spark.conf.getOption(key)
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    StageLatches.reset()
+    def frame(await: () => Unit) = spark.range(1, 2, 1, 1)
+      .select(udf { (i: Long) => await(); i }.asNondeterministic()(col("id")).as("id"))
+    val a = frame(() => { StageLatches.aWriting.countDown(); StageLatches.bWriting.await(60, TimeUnit.SECONDS) })
+    val b = frame(() => { StageLatches.bWriting.countDown(); StageLatches.aDone.await(60, TimeUnit.SECONDS) })
+    val pa = tmp
+    val pb = tmp
+    val ta = new Thread(() => { TxLogTable.append(spark, a, pa); StageLatches.aDone.countDown() })
+    ta.start()
+    assert(StageLatches.aWriting.await(60, TimeUnit.SECONDS))
+    val tb = new Thread(() => TxLogTable.append(spark, b, pb))
+    tb.start()
+    ta.join(120000)
+    tb.join(120000)
+    assert(StageLatches.aDone.getCount == 0, "A's append did not finish")
+    val left = spark.conf.getOption(key)
+    spark.conf.unset(key)
+    assert(left == before, s"the session kept $key = $left, not $before")
+    assert(TxLogTable.read(spark, pa).count() == 1 && TxLogTable.read(spark, pb).count() == 1)
+  }
+}
+
+/** Latches the stage-scope test's UDFs wait on (executor tasks run in
+  * this JVM under the local master, so they see the same objects). */
+object StageLatches {
+  @volatile var aWriting, bWriting, aDone = new java.util.concurrent.CountDownLatch(1)
+  def reset(): Unit = {
+    aWriting = new java.util.concurrent.CountDownLatch(1)
+    bWriting = new java.util.concurrent.CountDownLatch(1)
+    aDone = new java.util.concurrent.CountDownLatch(1)
+  }
 }
