@@ -159,24 +159,30 @@ object Contamination {
     // runtime-filter confs (numBits to maxNumBits, default 2^26 = 8 MB;
     // estimatedNumItems to maxNumItems, default 4M — a clamped item
     // count mis-sizes the hash-function count, so the filter would
-    // quietly run at a worse fpp than sized for). Raise whichever cap
-    // the validated sizing exceeds, SCOPED to this one collect: the
-    // prior values are restored so the raised caps never leak into
-    // Spark's own InjectRuntimeFilter sizing for unrelated queries.
+    // quietly run at a worse fpp than sized for). Whichever cap the
+    // validated sizing exceeds is raised in a CHILD session (same
+    // SparkContext, the caller's SQL confs copied) that runs only this
+    // one collect: the caller's session is never written, so concurrent
+    // calls cannot leave a raised cap behind for Spark's own
+    // InjectRuntimeFilter sizing of unrelated queries.
     val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
     val itemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
-    val saved = Seq(bitsKey, itemsKey).map(k => k -> spark.conf.getOption(k))
-    try {
-      if (bits > 67108864L) spark.conf.set(bitsKey, bits.toString)
-      if (nf > 4000000L) spark.conf.set(itemsKey, nf.toString)
-      val row = index
-        .select(graft.functions.BloomFunctions.bloomAgg(col(fCol), nf, bits).as("bf"))
-        .collect().head
-      if (row.isNullAt(0)) None else Some(row.getAs[Array[Byte]]("bf"))
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
+    val agg = index
+      .select(graft.functions.BloomFunctions.bloomAgg(col(fCol), nf, bits).as("bf"))
+    val raised = (if (bits > 67108864L) Seq(bitsKey -> bits) else Nil) ++
+      (if (nf > 4000000L) Seq(itemsKey -> nf) else Nil)
+    val run =
+      if (raised.isEmpty) agg
+      else {
+        val child = spark.newSession()
+        spark.conf.getAll.foreach { case (k, v) =>
+          if (spark.conf.isModifiable(k)) child.conf.set(k, v) }
+        raised.foreach { case (k, v) => child.conf.set(k, v.toString) }
+        org.apache.spark.sql.graft.DatasetShim.ofRows(child,
+          agg.queryExecution.analyzed)
+      }
+    val row = run.collect().head
+    if (row.isNullAt(0)) None else Some(row.getAs[Array[Byte]]("bf"))
   }
 
   /** Check a batch of documents against a prebuilt fingerprint index

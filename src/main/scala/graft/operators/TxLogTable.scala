@@ -90,10 +90,18 @@ object TxLogTable {
     * [[microsTimestamps]]): Spark's default INT96
     * encoding carries NO footer statistics, and the stats sidecar is
     * harvested from footers — INT96 would silently lose timestamp
-    * skipping. (Delta writes int64 timestamps for the same reason.) */
+    * skipping. (Delta writes int64 timestamps for the same reason.)
+    *
+    * `dropEmpty` is for DML rewrites, whose commit removes the rewritten
+    * files whatever the rewrite yields: files whose footers count zero
+    * rows are deleted and left out of the result (Spark writes one such
+    * file for an empty output, to carry its schema), and a stage that
+    * keeps no file removes its dir. The caller needs no emptiness probe
+    * of its own. Files whose footers could not be read are kept. */
   private def stage(df0: DataFrame, fs: FileSystem, root: HPath,
       prefix: String, partitionBy: Seq[String] = Seq.empty,
-      validate: Boolean = true, toPhysical: Boolean = true)
+      validate: Boolean = true, toPhysical: Boolean = true,
+      dropEmpty: Boolean = false)
       : Seq[(String, Long)] = {
     if (validate) validateConstraints(df0, root)
     // COLUMN-MAPPING mode: files are written uniformly under PHYSICAL
@@ -130,11 +138,16 @@ object TxLogTable {
       (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
         .parquet(dataDir.toString)
     }
-    writeFileStats(df.sparkSession, fs, dataDir,
+    val written = listParquet(fs, dataDir)
+    val rows = writeFileStats(df.sparkSession, fs, dataDir, written.map(_._1),
       org.apache.spark.sql.types.StructType(
         df.schema.filterNot(f => partitionBy.contains(f.name))))
-    listParquet(fs, dataDir)
-      .map { case (rel, size) => (s"data-$stageId/$rel", size) }
+    val (empty, kept) =
+      if (!dropEmpty) (Seq.empty, written)
+      else written.partition(f => rows.get(f._1).contains(0L))
+    if (dropEmpty && kept.isEmpty) fs.delete(dataDir, true)
+    else empty.foreach(f => fs.delete(new HPath(dataDir, f._1), false))
+    kept.map { case (rel, size) => (s"data-$stageId/$rel", size) }
       .sortBy(_._1)
   }
 
@@ -242,33 +255,39 @@ object TxLogTable {
     * file regex; lives and dies with the data dir through
     * compaction/vacuum. BEST-EFFORT: a stats failure must not fail the
     * commit — a file without stats simply always scans ([[readWhere]]
-    * keeps it). */
+    * keeps it). `files` are the dir's parquet files, dataDir-relative.
+    * Returns each file's row count from the same footers (read for it
+    * alone when no column takes stats); empty when the harvest failed. */
   private def writeFileStats(spark: SparkSession, fs: FileSystem,
-      dataDir: HPath, schema: org.apache.spark.sql.types.StructType): Unit =
+      dataDir: HPath, files: Seq[String],
+      schema: org.apache.spark.sql.types.StructType): Map[String, Long] =
     try {
       import org.json4s.JsonDSL._
       import org.json4s.jackson.JsonMethods
       val cols = schema.fields.filter(f => statsSupported(f.dataType))
-      if (cols.isEmpty) return
       // keys are dataDir-RELATIVE paths (hive layouts nest k=v subdirs)
-      val files = listParquet(fs, dataDir).map(_._1)
-      val perFile: org.json4s.JObject = org.json4s.JObject(files.toList.map { rel =>
-        val bounds = footerBounds(fs.getConf, new HPath(dataDir, rel), cols)
-        val colsJson = org.json4s.JObject(cols.toList.flatMap { f =>
-          bounds.get(f.name).map { case (mn, mx) =>
-            f.name -> ((("min" -> mn) ~ ("max" -> mx)): org.json4s.JValue)
-          }
-        })
-        rel -> (colsJson: org.json4s.JValue)
+      val footers = files.map(rel =>
+        rel -> footerBounds(fs.getConf, new HPath(dataDir, rel), cols))
+      val perFile: org.json4s.JObject = org.json4s.JObject(footers.toList.map {
+        case (rel, (_, bounds)) =>
+          val colsJson = org.json4s.JObject(cols.toList.flatMap { f =>
+            bounds.get(f.name).map { case (mn, mx) =>
+              f.name -> ((("min" -> mn) ~ ("max" -> mx)): org.json4s.JValue)
+            }
+          })
+          rel -> (colsJson: org.json4s.JValue)
       })
-      writeString(fs, new HPath(dataDir, "_stats.json"),
-        JsonMethods.compact(JsonMethods.render(
-          org.json4s.JObject("files" -> perFile))), overwrite = true)
+      if (cols.nonEmpty)
+        writeString(fs, new HPath(dataDir, "_stats.json"),
+          JsonMethods.compact(JsonMethods.render(
+            org.json4s.JObject("files" -> perFile))), overwrite = true)
+      footers.map { case (rel, (rows, _)) => rel -> rows }.toMap
     } catch {
       case scala.util.control.NonFatal(e) =>
         System.err.println(
           s"[graft] footer stats for $dataDir failed ($e); re-aggregating")
         writeFileStatsByScan(spark, fs, dataDir, schema)
+        Map.empty
     }
 
   /** Min/max per supported column of one parquet file, read from its
@@ -287,10 +306,11 @@ object TxLogTable {
     *  - parquet's truncated binary stats stay sound: a truncated min is
     *    a prefix (sorts ≤ the true min), a truncated max has its last
     *    byte incremented (sorts ≥ the true max) — wider interval, never
-    *    a wrong prune. */
+    *    a wrong prune.
+    * Returned with the file's row count (the sum over its row groups). */
   private def footerBounds(conf: Configuration, file: HPath,
       cols: Seq[org.apache.spark.sql.types.StructField])
-      : Map[String, (org.json4s.JValue, org.json4s.JValue)] = {
+      : (Long, Map[String, (org.json4s.JValue, org.json4s.JValue)]) = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.spark.sql.types._
@@ -344,7 +364,7 @@ object TxLogTable {
           }
         }
       }
-      acc.toSeq.flatMap {
+      (blocks.map(_.getRowCount).sum, acc.toSeq.flatMap {
         case (name, Some(pair)) if pair != null =>
           val (lo, hi) = pair
           val unit = tsUnits.getOrElse(name, "MICROS")
@@ -353,7 +373,7 @@ object TxLogTable {
             mx <- footerScalar(wanted(name), hi, unit)
           } yield name -> ((mn, mx))
         case _ => Seq.empty
-      }.toMap
+      }.toMap)
     } finally reader.close()
   }
 
@@ -367,7 +387,7 @@ object TxLogTable {
     try footerBounds(conf, file,
         Seq(org.apache.spark.sql.types.StructField(name,
           org.apache.spark.sql.types.StringType)))
-      .get(name).collect {
+      ._2.get(name).collect {
         case (org.json4s.JString(mn), org.json4s.JString(mx)) => (mn, mx)
       }
     catch { case scala.util.control.NonFatal(_) => None }
@@ -937,7 +957,7 @@ object TxLogTable {
           pool.submit(new Runnable {
             def run(): Unit =
               try out.put(rel,
-                footerBounds(conf, new HPath(root, rel), cols.toSeq))
+                footerBounds(conf, new HPath(root, rel), cols.toSeq)._2)
               catch { case scala.util.control.NonFatal(_) => () }
           })
         }
@@ -1221,16 +1241,12 @@ object TxLogTable {
     val v0 = versions(fs, root).lastOption.getOrElse(-1L)
     require(v0 >= 0, s"cannot upsert into an empty table at $path " +
       "(use append for the first commit)")
-    import org.apache.spark.sql.functions.{count => fcount, lit => flit}
-    val dupKeys = updates.groupBy(keyCols.map(org.apache.spark.sql.functions.col): _*)
-      .agg(fcount(flit(1)).as("__n")).filter(org.apache.spark.sql.functions.col("__n") > 1)
-    require(dupKeys.isEmpty,
-      s"updates carry duplicate keys on (${keyCols.mkString(", ")})")
-    val snapshot = readVersion(spark, path, v0)
+    val leadRange = keyStats(updates, keyCols, checkDuplicates = true)
+    val schema = snapshotSchema(spark, path, v0)
     val keys = updates.select(keyCols.map(org.apache.spark.sql.functions.col): _*)
-    if (schemaKey(snapshot.schema) == schemaKey(updates.schema)) {
+    if (schemaKey(schema) == schemaKey(updates.schema)) {
       val (st, touched, rangeCol) =
-        filesMatchingKeys(spark, path, v0, keys, keyCols)
+        filesMatchingKeys(spark, path, v0, schema, keys, keyCols, leadRange)
       val (all, priorSizes) = (st.files, st.sizes)
       val untouched = all.diff(touched)
       val merged =
@@ -1239,26 +1255,29 @@ object TxLogTable {
         // snapshot's merged schema (appends never validate), and the
         // touched SUBSET's merge can lack a column every other file has
         // — those carried rows read it as null either way
-        else scanFilesDv(spark, path, touched, Some(snapshot.schema), st.dvs)
+        else scanFilesDv(spark, path, touched, Some(schema), st.dvs)
           .join(keys, keyCols, "left_anti")
           .unionByName(updates, allowMissingColumns = true)
-      val staged = stage(merged, fs, root, "merge-", partColsOf(touched))
-      // snapshot.schema came off the read-back scan of v0, and the
-      // rewrite preserves it (same-schemaKey guard above) — faithful to
-      // what a sweep of the new snapshot yields
+      val staged = stage(merged, fs, root, "merge-", partColsOf(touched),
+        dropEmpty = true)
+      // v0's snapshot schema, and the rewrite preserves it
+      // (same-schemaKey guard above) — faithful to what a sweep of the
+      // new snapshot yields
       val v = commitRebaseRetry(fs, root, v0,
         (untouched ++ staged.map(_._1)).sorted, commit, txn = None,
         op = "upsert", sizes = priorSizes ++ staged,
-        schemaJson = Some(snapshot.schema.json),
+        schemaJson = Some(schema.json),
         cleanupDirs = stagedDirs(staged),
         dvs = st.dvs -- touched,
         appendCompatible =
           keyRangeCompatible(spark, path, v0, all, rangeCol))
       DeltaInterop.mirror(spark, path, v, staged.map(_._1), touched,
-        snapshot.schema.json, commit, sizes = staged.toMap)
+        schema.json, commit, sizes = staged.toMap)
       v
     } else {
-      val carried = snapshot.join(keys, keyCols, "left_anti")
+      // the widening merge rewrites the whole snapshot
+      val carried = readVersion(spark, path, v0)
+        .join(keys, keyCols, "left_anti")
       val merged = carried.unionByName(updates, allowMissingColumns = true)
       val staged = stage(merged, fs, root, "merge-")
       val v = commitEntry(fs, root, staged.map(_._1), rebase = true, Some(v0),
@@ -1272,15 +1291,43 @@ object TxLogTable {
     }
   }
 
+  /** The one action an upsert or merge runs over its incoming rows
+    * before it writes: a single aggregate yielding the leading key's
+    * (min, max) and its NULL count, and, with `checkDuplicates`, the
+    * duplicate-key guard from the distinct key count in the same pass
+    * (a NULL key is a key: two NULLs are duplicates, as in a groupBy).
+    * Returns [[LeadRange]] for [[filesMatchingKeys]]. */
+  private def keyStats(updates: DataFrame, keyCols: Seq[String],
+      checkDuplicates: Boolean): LeadRange = {
+    import org.apache.spark.sql.functions.{col => fc, count => fcnt, count_distinct, lit => flit, max => fmax, min => fmin, struct}
+    val lead = fc(keyCols.head)
+    val aggs = Seq(fmin(lead), fmax(lead), fcnt(flit(1)), fcnt(lead)) ++
+      (if (checkDuplicates) Seq(count_distinct(struct(keyCols.map(fc): _*)))
+       else Nil)
+    val r = updates.agg(aggs.head, aggs.tail: _*).first()
+    require(!checkDuplicates || r.getLong(4) == r.getLong(2),
+      s"updates carry duplicate keys on (${keyCols.mkString(", ")})")
+    LeadRange(if (r.isNullAt(0)) None else Some((r.get(0), r.get(1))),
+      hasNull = r.getLong(2) != r.getLong(3))
+  }
+
+  /** The leading merge key's [min, max] over the incoming rows (None
+    * when the delta is empty or all-NULL on it) and whether any of them
+    * is NULL there. */
+  private final case class LeadRange(bounds: Option[(Any, Any)],
+      hasNull: Boolean)
+
   /** Snapshot-`v0` files that may hold rows whose `keyCols` match
     * `keys`: stats-pruned first on the leading key's range (a file
     * whose key interval misses [min(keys), max(keys)] cannot hold a
     * match; conservative — in-range files still probe), then exactly
     * probed via a column-pruned semi-join scan. Returns (all files of
     * v0, files containing matches). Shared by [[upsertByKey]] and
-    * [[mergeByKey]]. */
+    * [[mergeByKey]], which pass v0's snapshot `schema` and the `lead`
+    * range [[keyStats]] computed. */
   private def filesMatchingKeys(spark: SparkSession, path: String,
-      v0: Long, keys: DataFrame, keyCols: Seq[String],
+      v0: Long, schema: org.apache.spark.sql.types.StructType,
+      keys: DataFrame, keyCols: Seq[String], lead: LeadRange,
       nullSafeKeys: Boolean = false)
       : (LogState, Seq[String], Option[org.apache.spark.sql.Column]) = {
     import org.apache.spark.sql.functions.{col => fc}
@@ -1296,15 +1343,7 @@ object TxLogTable {
     // match NULL rows invisible to any interval — forces the
     // all-candidates fallback. Without this, every narrow
     // incremental-view merge probe-scanned the WHOLE view.
-    val keyRange = {
-      import org.apache.spark.sql.functions.{count => fcnt, lit => flit, max => fmax, min => fmin}
-      val r = keys.agg(fmin(fc(keyCols.head)), fmax(fc(keyCols.head)),
-        fcnt(flit(1)), fcnt(fc(keyCols.head))).first()
-      val deltaHasNullKey = r.getLong(2) != r.getLong(3)
-      if (r.isNullAt(0)) None // empty delta or all-NULL keys: no interval
-      else if (nullSafeKeys && deltaHasNullKey) None
-      else Some((r.get(0), r.get(1)))
-    }
+    val keyRange = if (nullSafeKeys && lead.hasNull) None else lead.bounds
     // the key-interval predicate doubles as the conflict-revalidation
     // condition: an interleaved append whose files' stats exclude the
     // ENTIRE update-key range can hold no row this merge should have
@@ -1314,14 +1353,15 @@ object TxLogTable {
       fc(keyCols.head) >= fl(mn) && fc(keyCols.head) <= fl(mx)
     }
     val cand = rangeCol match {
-      case Some(p) => prunedFiles(spark, path, p, Some(v0))._1
-      case None => all
+      case Some(p) if all.nonEmpty => pruneFilesWith(fs, root, all,
+        resolvedCondAt(spark, path, p, v0, all))._1
+      case _ => all
     }
     val touched =
       if (cand.isEmpty) Seq.empty[String]
       else {
-        val probe = scanFilesDv(spark, path, cand, schemaAt(path, v0),
-          st.dvs, lineage = true)
+        val probe = scanFilesDv(spark, path, cand, Some(schema), st.dvs,
+          lineage = true)
         val joined =
           if (!nullSafeKeys) probe.join(keys, keyCols, "left_semi")
           else probe.alias("t").join(keys.alias("s"),
@@ -1383,7 +1423,8 @@ object TxLogTable {
     * `txn` gives the merge [[append]]'s SetTransaction idempotency (a
     * replayed merge is a stageless no-op — note a merge that matches
     * and inserts NOTHING returns -1 without recording the txn);
-    * `checkDuplicateKeys = false` skips the duplicate-key guard action
+    * `checkDuplicateKeys = false` drops the duplicate-key guard (the
+    * distinct key count in the merge's one key-statistics aggregate)
     * for updates that are distinct by construction (off a groupBy on
     * the merge keys).
     *
@@ -1441,7 +1482,7 @@ object TxLogTable {
       schemaEvolution: Boolean = false,
       setFromStar: Boolean = false,
       insertFromStar: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{coalesce => fcoalesce, col => fc, count => fcount, lit => flit, not => fnot, when => fwhen}
+    import org.apache.spark.sql.functions.{coalesce => fcoalesce, col => fc, lit => flit, not => fnot, when => fwhen}
     require(keyCols.nonEmpty, "merge needs at least one key column")
     require(!updates.columns.contains("__m"),
       "updates must not carry a __m column (internal match marker)")
@@ -1465,7 +1506,7 @@ object TxLogTable {
     val base = versions(fs, root).lastOption.getOrElse(-1L)
     require(base >= 0, s"cannot merge into an empty table at $path " +
       "(use append for the first commit)")
-    val preSchema = readVersion(spark, path, base).schema
+    val preSchema = snapshotSchema(spark, path, base)
     val missing: Seq[org.apache.spark.sql.types.StructField] =
       if (!schemaEvolution) Seq.empty
       else {
@@ -1475,15 +1516,12 @@ object TxLogTable {
           .map(f => f.copy(nullable = true))
       }
     val widenedCols = missing.map(_.name)
-    // the guard is one extra action per merge; a caller whose updates
-    // are distinct BY CONSTRUCTION (e.g. they come off a groupBy on the
-    // merge keys) skips it with checkDuplicateKeys = false
-    if (checkDuplicateKeys) {
-      val dupKeys = updates.groupBy(keyCols.map(fc): _*)
-        .agg(fcount(flit(1)).as("__n")).filter(fc("__n") > 1)
-      require(dupKeys.isEmpty,
-        s"updates carry duplicate keys on (${keyCols.mkString(", ")})")
-    }
+    // the merge's one key-statistics action: the duplicate-key guard
+    // and the leading key's range for file pruning. A caller whose
+    // updates are distinct BY CONSTRUCTION (e.g. they come off a groupBy
+    // on the merge keys) drops the guard's distinct count from it with
+    // checkDuplicateKeys = false
+    val leadRange = keyStats(updates, keyCols, checkDuplicateKeys)
     // post-widen schema, simulated pre-commit: addColumns appends the
     // missing fields in order, so clause validation can run against it
     // before anything durable happens
@@ -1550,10 +1588,11 @@ object TxLogTable {
     val v0 =
       if (missing.isEmpty) base
       else addColumns(spark, path, missing, commit)
-    val snapshot = readVersion(spark, path, v0)
+    val schema =
+      if (missing.isEmpty) preSchema else snapshotSchema(spark, path, v0)
     val keys = updates.select(keyCols.map(fc): _*)
-    val (st, touched, rangeCol) =
-      filesMatchingKeys(spark, path, v0, keys, keyCols, nullSafeKeys)
+    val (st, touched, rangeCol) = filesMatchingKeys(spark, path, v0,
+      schema, keys, keyCols, leadRange, nullSafeKeys)
     val (all, priorSizes) = (st.files, st.sizes)
     val untouched = all.diff(touched)
     val appendOk = keyRangeCompatible(spark, path, v0, all, rangeCol)
@@ -1578,7 +1617,7 @@ object TxLogTable {
         if (touched.isEmpty) None
         else Some {
           val tgt = scanFilesDv(spark, path, touched,
-            Some(snapshot.schema), st.dvs, lineage = true)
+            Some(schema), st.dvs, lineage = true)
           val joined = tgt.alias("t").join(
             updates.withColumn("__m", flit(1)).alias("s"),
             keyCols.map(k => keyEq(s"t.`$k`", s"s.`$k`")).reduce(_ && _),
@@ -1592,7 +1631,7 @@ object TxLogTable {
             setMap match {
               case None => c => fc(s"s.`$c`")
               case Some(set) => c => set.get(c) match {
-                case Some(e) => e.cast(snapshot.schema(c).dataType)
+                case Some(e) => e.cast(schema(c).dataType)
                 case None => fc(s"t.`$c`")
               }
             }
@@ -1628,7 +1667,7 @@ object TxLogTable {
               // anti-join against the touched files' key scan (every
               // matched key lives in a touched file by construction)
               val tgtKeys = scanFilesDv(spark, path, touched,
-                Some(snapshot.schema), st.dvs).select(keyCols.map(fc): _*)
+                Some(schema), st.dvs).select(keyCols.map(fc): _*)
               if (!nullSafeKeys)
                 insertSource.join(tgtKeys, keyCols, "left_anti")
               else insertSource.join(tgtKeys.alias("t"),
@@ -1640,7 +1679,7 @@ object TxLogTable {
               case Some(proj) =>
                 val m = proj.toMap
                 df.select(dataCols.map(c =>
-                  m(c).cast(snapshot.schema(c).dataType).as(c)): _*)
+                  m(c).cast(schema(c).dataType).as(c)): _*)
             }
           }
         val outOpt = (images, inserts) match {
@@ -1648,11 +1687,15 @@ object TxLogTable {
           case (Some(a), None) => Some(a)
           case (None, b) => b
         }
-        val out = outOpt.filter(!_.isEmpty)
+        // a masking merge commits whatever its images and inserts yield,
+        // so they stage unprobed ([[stage]] drops an empty output's file)
+        val out =
+          if (maskedFiles.isEmpty) outOpt.filter(!_.isEmpty) else outOpt
         if (maskedFiles.isEmpty && out.isEmpty) return -1L
         // stage FIRST (constraints abort before any dv sidecar exists)
         val staged = out
-          .map(stage(_, fs, root, "merge-", partColsOf(touched)))
+          .map(stage(_, fs, root, "merge-", partColsOf(touched),
+            dropEmpty = true))
           .getOrElse(Seq.empty)
         if (maskedFiles.isEmpty) {
           // no clause masked anything: a pure-insert merge — an
@@ -1660,11 +1703,11 @@ object TxLogTable {
           val v = commitRebaseRetry(fs, root, v0,
             (all ++ staged.map(_._1)).sorted, commit, txn, op = "merge",
             sizes = priorSizes ++ staged,
-            schemaJson = Some(snapshot.schema.json),
+            schemaJson = Some(schema.json),
             cleanupDirs = stagedDirs(staged), dvs = st.dvs,
             appendCompatible = appendOk)
           DeltaInterop.mirror(spark, path, v, staged.map(_._1),
-            Seq.empty, snapshot.schema.json, commit,
+            Seq.empty, schema.json, commit,
             sizes = staged.toMap)
           return v
         }
@@ -1688,7 +1731,7 @@ object TxLogTable {
         val v = commitRebaseRetry(fs, root, v0,
           (all ++ staged.map(_._1)).sorted, commit, txn, op = "dvmerge",
           sizes = priorSizes ++ staged,
-          schemaJson = Some(snapshot.schema.json),
+          schemaJson = Some(schema.json),
           cleanupDirs = stagedDirs(staged) :+ dvDir,
           dvs = st.dvs ++
             maskedFiles.map(f => f -> ((dvDir, counts(f)))),
@@ -1704,7 +1747,7 @@ object TxLogTable {
     val tgtScan =
       if (touched.isEmpty) None
       else Some(
-        scanFilesDv(spark, path, touched, Some(snapshot.schema), st.dvs))
+        scanFilesDv(spark, path, touched, Some(schema), st.dvs))
     val rewritten: Option[DataFrame] = tgtScan.map { tgt =>
       val joined = tgt.alias("t").join(
         updates.withColumn("__m", flit(1)).alias("s"),
@@ -1720,7 +1763,7 @@ object TxLogTable {
         case None => c => fc(s"s.`$c`") // whole-row SET *
         case Some(set) => c => set.get(c) match {
           case Some(e) =>
-            e.cast(snapshot.schema(c).dataType) // no schema drift
+            e.cast(schema(c).dataType) // no schema drift
           case None => fc(s"t.`$c`") // unset columns keep the target's
         }
       }
@@ -1754,7 +1797,7 @@ object TxLogTable {
           case Some(proj) => // explicit per-column insert image, typed
             val m = proj.toMap // to the target (the SET no-drift rule)
             df.select(dataCols.map(c =>
-              m(c).cast(snapshot.schema(c).dataType).as(c)): _*)
+              m(c).cast(schema(c).dataType).as(c)): _*)
         }
       }
     val outOpt = (rewritten, inserts) match {
@@ -1762,18 +1805,21 @@ object TxLogTable {
       case (Some(r), None) => Some(r)
       case (None, i) => i
     }
-    val out = outOpt.filter(!_.isEmpty)
+    // with files touched the commit removes them whatever the rewrite
+    // yields, so the output stages unprobed ([[stage]] drops an empty
+    // output's file); a pure insert that inserts nothing commits nothing
+    val out = if (touched.isEmpty) outOpt.filter(!_.isEmpty) else outOpt
     if (touched.isEmpty && out.isEmpty) return -1L
-    val staged = out.map(stage(_, fs, root, "merge-", partColsOf(touched)))
-      .getOrElse(Seq.empty)
+    val staged = out.map(stage(_, fs, root, "merge-", partColsOf(touched),
+      dropEmpty = true)).getOrElse(Seq.empty)
     val v = commitRebaseRetry(fs, root, v0,
       (untouched ++ staged.map(_._1)).sorted, commit, txn, op = "merge",
-      sizes = priorSizes ++ staged, schemaJson = Some(snapshot.schema.json),
+      sizes = priorSizes ++ staged, schemaJson = Some(schema.json),
       cleanupDirs = stagedDirs(staged),
       dvs = st.dvs -- touched,
       appendCompatible = appendOk)
     DeltaInterop.mirror(spark, path, v, staged.map(_._1), touched,
-      snapshot.schema.json, commit, sizes = staged.toMap)
+      schema.json, commit, sizes = staged.toMap)
     v
   }
 
@@ -1804,7 +1850,7 @@ object TxLogTable {
     txnFastPath(fs, root, txn).foreach(v => return v)
     val v0 = versions(fs, root).lastOption.getOrElse(-1L)
     require(v0 >= 0, s"cannot delete from an empty table at $path")
-    val snapshot = readVersion(spark, path, v0)
+    val schema = snapshotSchema(spark, path, v0)
     val st = stateUpTo(fs, root, v0)
     val (all, priorSizes) = (st.files, st.sizes)
     // stats-level prefilter first (no footer even opens for a file whose
@@ -1815,7 +1861,7 @@ object TxLogTable {
     val touched =
       if (cand.isEmpty) Seq.empty[String]
       else touchedFiles(cand,
-        scanFilesDv(spark, path, cand, Some(snapshot.schema), st.dvs,
+        scanFilesDv(spark, path, cand, Some(schema), st.dvs,
           lineage = true).filter(predicate))
     if (touched.isEmpty) return -1L
     val untouched = all.diff(touched)
@@ -1825,18 +1871,17 @@ object TxLogTable {
     // untouched files carry by reference — erasure that depends on
     // which file a row shares with a match.
     val remaining =
-      scanFilesDv(spark, path, touched, Some(snapshot.schema), st.dvs)
+      scanFilesDv(spark, path, touched, Some(schema), st.dvs)
         .filter(!org.apache.spark.sql.functions.coalesce(
           predicate, org.apache.spark.sql.functions.lit(false)))
-    // a touched-file set whose every row matches stages nothing; a
-    // partitioned touched set re-stages in its own layout
-    val staged =
-      if (remaining.isEmpty) Seq.empty[(String, Long)]
-      else stage(remaining, fs, root, "delete-", partColsOf(touched),
-        validate = false)
+    // a touched-file set whose every row matches stages nothing ([[stage]]
+    // drops the empty output's file); a partitioned touched set
+    // re-stages in its own layout
+    val staged = stage(remaining, fs, root, "delete-", partColsOf(touched),
+      validate = false, dropEmpty = true)
     val v = commitRebaseRetry(fs, root, v0,
       (untouched ++ staged.map(_._1)).sorted, commit, txn, op = "delete",
-      sizes = priorSizes ++ staged, schemaJson = Some(snapshot.schema.json),
+      sizes = priorSizes ++ staged, schemaJson = Some(schema.json),
       cleanupDirs = stagedDirs(staged),
       // rewritten files fold their dvs into the rewrite; carried files
       // keep theirs
@@ -1844,7 +1889,7 @@ object TxLogTable {
       appendCompatible = nf =>
         cond.isDefined && pruneFilesWith(fs, root, nf, cond)._1.isEmpty)
     DeltaInterop.mirror(spark, path, v, staged.map(_._1), touched,
-      snapshot.schema.json, commit, sizes = staged.toMap)
+      schema.json, commit, sizes = staged.toMap)
     v
   }
 
@@ -1894,7 +1939,7 @@ object TxLogTable {
     val byDir = touched.flatMap(f => dvs.get(f).map(p => (p._1, f)))
       .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     byDir.toSeq.sortBy(_._1).map { case (d, fsOfDir) =>
-      spark.read.parquet(s"$path/$d")
+      spark.read.schema(DvSchema).parquet(s"$path/$d")
         .filter(fc("f").isin(fsOfDir: _*))
         .select(fc("f"), fc("ri"))
     }.reduceOption(_.unionByName(_))
@@ -1920,7 +1965,7 @@ object TxLogTable {
     txnFastPath(fs, root, txn).foreach(v => return v)
     val v0 = versions(fs, root).lastOption.getOrElse(-1L)
     require(v0 >= 0, s"cannot delete from an empty table at $path")
-    val snapshot = readVersion(spark, path, v0)
+    val schema = snapshotSchema(spark, path, v0)
     val st = stateUpTo(fs, root, v0)
     val cond = resolvedCondAt(spark, path, predicate, v0, st.files)
     val (cand, _) = pruneFilesWith(fs, root, st.files, cond)
@@ -1929,7 +1974,7 @@ object TxLogTable {
     // matching rows AFTER the existing dv view (a row already masked
     // must not mask twice), as (log-relative file, in-file row index)
     val matched =
-      scanFilesDv(spark, path, cand, Some(snapshot.schema), st.dvs,
+      scanFilesDv(spark, path, cand, Some(schema), st.dvs,
         lineage = true)
       .filter(predicate)
       .select(fexpr(s"substring(__f, ${qual.length + 2})").as("f"),
@@ -1972,7 +2017,7 @@ object TxLogTable {
       // by reference and the masks still name every matching row
       val v = commitRebaseRetry(fs, root, v0, st.files.sorted,
         commit, txn, op = "dvdelete",
-        sizes = st.sizes, schemaJson = Some(snapshot.schema.json),
+        sizes = st.sizes, schemaJson = Some(schema.json),
         cleanupDirs = Seq(dvDir),
         dvs = st.dvs ++ touched.map(f => f -> ((dvDir, counts(f)))),
         appendCompatible = nf =>
@@ -2017,8 +2062,8 @@ object TxLogTable {
     txnFastPath(fs, root, txn).foreach(v => return v)
     val v0 = versions(fs, root).lastOption.getOrElse(-1L)
     require(v0 >= 0, s"cannot update an empty table at $path")
-    val snapshot = readVersion(spark, path, v0)
-    val unknown = set.keys.filterNot(snapshot.columns.contains)
+    val schema = snapshotSchema(spark, path, v0)
+    val unknown = set.keys.filterNot(schema.fieldNames.contains)
     require(unknown.isEmpty,
       s"SET targets unknown column(s): ${unknown.mkString(", ")}")
     val st = stateUpTo(fs, root, v0)
@@ -2030,13 +2075,13 @@ object TxLogTable {
     // matched rows AFTER the existing dv view, carrying BOTH the mask
     // coordinates and the SET-projected new image — one probe scan
     val matched =
-      scanFilesDv(spark, path, cand, Some(snapshot.schema), st.dvs,
+      scanFilesDv(spark, path, cand, Some(schema), st.dvs,
         lineage = true)
       .filter(predicate)
       .select(
         fexpr(s"substring(__f, ${qual.length + 2})").as("__gf") +:
         fc("__ri").as("__gri") +:
-        snapshot.schema.fields.toSeq.map { f =>
+        schema.fields.toSeq.map { f =>
           set.get(f.name) match {
             case Some(e) => e.cast(f.dataType).as(f.name)
             case None => fc(s"`${f.name}`")
@@ -2059,7 +2104,7 @@ object TxLogTable {
       // violating SET aborts before any dv sidecar exists); a SET on a
       // partition column lands rows in their new dirs
       val staged = stage(matched.drop("__gf", "__gri"), fs, root,
-        "update-", partColsOf(touched))
+        "update-", partColsOf(touched), dropEmpty = true)
       // new dv rows = fresh masks ∪ the touched files' CURRENT dv rows
       // (pointer replacement; [[priorDvRows]] restricts each dir to
       // its current pointees so stale rows never duplicate)
@@ -2079,7 +2124,7 @@ object TxLogTable {
         op = "dvupdate", sizes = st.sizes ++ staged,
         schemaJson =
           if (partColsOf(touched).intersect(set.keys.toSeq).isEmpty)
-            Some(snapshot.schema.json)
+            Some(schema.json)
           else None,
         cleanupDirs = stagedDirs(staged) :+ dvDir,
         dvs = st.dvs ++ touched.map(f => f -> ((dvDir, counts(f)))),
@@ -2116,13 +2161,12 @@ object TxLogTable {
     val (fs, root) = fsFor(path)
     val v0 = versions(fs, root).lastOption.getOrElse(-1L)
     require(v0 >= 0, s"cannot alter an empty table at $path")
-    val snapshot = readVersion(spark, path, v0)
-    val existing = snapshot.schema.fieldNames.map(_.toLowerCase).toSet
+    val base = snapshotSchema(spark, path, v0)
+    val existing = base.fieldNames.map(_.toLowerCase).toSet
     val dup = newFields.filter(f => existing(f.name.toLowerCase))
     require(dup.isEmpty,
       s"column(s) already exist (case-insensitive): " +
         dup.map(_.name).mkString(", "))
-    val base = schemaAt(path, v0).getOrElse(snapshot.schema)
     // under mapping mode a NEW column takes a FRESH physical name: a
     // re-added name matching a previously-DROPPED column's physical
     // name would otherwise resurrect the dropped bytes from old files
@@ -2221,8 +2265,7 @@ object TxLogTable {
     val (fs, root) = fsFor(path)
     val v0 = versions(fs, root).lastOption.getOrElse(-1L)
     require(v0 >= 0, s"cannot alter an empty table at $path")
-    val snapshot = readVersion(spark, path, v0)
-    val base = schemaAt(path, v0).getOrElse(snapshot.schema)
+    val base = snapshotSchema(spark, path, v0)
     val idx = base.fieldNames.indexWhere(_.equalsIgnoreCase(from))
     require(idx >= 0, s"no such column $from")
     require(!base.fieldNames.exists(_.equalsIgnoreCase(to)),
@@ -2268,8 +2311,7 @@ object TxLogTable {
     val (fs, root) = fsFor(path)
     val v0 = versions(fs, root).lastOption.getOrElse(-1L)
     require(v0 >= 0, s"cannot alter an empty table at $path")
-    val snapshot = readVersion(spark, path, v0)
-    val base = schemaAt(path, v0).getOrElse(snapshot.schema)
+    val base = snapshotSchema(spark, path, v0)
     require(base.fieldNames.exists(_.equalsIgnoreCase(name)),
       s"no such column $name")
     require(base.fields.length > 1, "cannot drop the only column")
@@ -2310,20 +2352,18 @@ object TxLogTable {
     require(v0 >= 0, s"cannot purge an empty table at $path")
     val st = stateUpTo(fs, root, v0)
     if (st.dvs.isEmpty) return -1L
-    val snapshot = readVersion(spark, path, v0)
+    val schema = snapshotSchema(spark, path, v0)
     val masked = st.dvs.keys.toSeq.sorted
     val remaining =
-      scanFilesDv(spark, path, masked, Some(snapshot.schema), st.dvs)
-    val staged =
-      if (remaining.isEmpty) Seq.empty[(String, Long)]
-      else stage(remaining, fs, root, "purge-", partColsOf(masked),
-        validate = false)
+      scanFilesDv(spark, path, masked, Some(schema), st.dvs)
+    val staged = stage(remaining, fs, root, "purge-", partColsOf(masked),
+      validate = false, dropEmpty = true)
     // layout-only rewrite of already-committed rows: any interleaved
     // append is logically compatible and carries by reference
     commitRebaseRetry(fs, root, v0,
       (st.files.diff(masked) ++ staged.map(_._1)).sorted,
       commit, txn = None, op = "purge",
-      sizes = st.sizes ++ staged, schemaJson = Some(snapshot.schema.json),
+      sizes = st.sizes ++ staged, schemaJson = Some(schema.json),
       cleanupDirs = stagedDirs(staged), dvs = Map.empty,
       appendCompatible = _ => true)
   }
@@ -2364,8 +2404,8 @@ object TxLogTable {
     txnFastPath(fs, root, txn).foreach(v => return v)
     val v0 = versions(fs, root).lastOption.getOrElse(-1L)
     require(v0 >= 0, s"cannot update an empty table at $path")
-    val snapshot = readVersion(spark, path, v0)
-    val unknown = set.keys.filterNot(snapshot.columns.contains)
+    val schema = snapshotSchema(spark, path, v0)
+    val unknown = set.keys.filterNot(schema.fieldNames.contains)
     require(unknown.isEmpty,
       s"SET targets unknown column(s): ${unknown.mkString(", ")}")
     val st = stateUpTo(fs, root, v0)
@@ -2376,14 +2416,14 @@ object TxLogTable {
     val touched =
       if (cand.isEmpty) Seq.empty[String]
       else touchedFiles(cand,
-        scanFilesDv(spark, path, cand, Some(snapshot.schema), st.dvs,
+        scanFilesDv(spark, path, cand, Some(schema), st.dvs,
           lineage = true).filter(predicate))
     if (touched.isEmpty) return -1L
     val untouched = all.diff(touched)
     val cond = fcoalesce(predicate, flit(false))
     val rewritten =
-      scanFilesDv(spark, path, touched, Some(snapshot.schema), st.dvs)
-      .select(snapshot.schema.fields.toSeq.map { f =>
+      scanFilesDv(spark, path, touched, Some(schema), st.dvs)
+      .select(schema.fields.toSeq.map { f =>
         set.get(f.name) match {
           case Some(e) =>
             fwhen(cond, e.cast(f.dataType)).otherwise(fc(s"`${f.name}`"))
@@ -2391,7 +2431,8 @@ object TxLogTable {
           case None => fc(s"`${f.name}`")
         }
       }: _*)
-    val staged = stage(rewritten, fs, root, "update-", partColsOf(touched))
+    val staged = stage(rewritten, fs, root, "update-", partColsOf(touched),
+      dropEmpty = true)
     val v = commitRebaseRetry(fs, root, v0,
       (untouched ++ staged.map(_._1)).sorted, commit, txn, op = "update",
       sizes = priorSizes ++ staged,
@@ -2401,14 +2442,14 @@ object TxLogTable {
       // above when the table is column-mapped)
       schemaJson =
         if (partColsOf(touched).intersect(set.keys.toSeq).isEmpty)
-          Some(snapshot.schema.json)
+          Some(schema.json)
         else None,
       cleanupDirs = stagedDirs(staged),
       dvs = st.dvs -- touched,
       appendCompatible = nf =>
         rcond.isDefined && pruneFilesWith(fs, root, nf, rcond)._1.isEmpty)
     DeltaInterop.mirror(spark, path, v, staged.map(_._1), touched,
-      snapshot.schema.json, commit, sizes = staged.toMap)
+      schema.json, commit, sizes = staged.toMap)
     v
   }
 
@@ -2478,11 +2519,15 @@ object TxLogTable {
     * diff and cancel, so only the files in the symmetric difference of
     * the two listings are scanned at all. An append-only version range
     * reads nothing but the appended files (the common case is a pure
-    * narrow scan + zero-row except side); only rebase commits
+    * narrow scan with no old side); only rebase commits
     * (upsert/delete/compact) put rewritten files on both sides, and a
-    * pure compaction's rewrite diffs to the empty feed. The except is
-    * Spark's hash-partitioned `EXCEPT ALL` on the row image — mergeable,
-    * no window, no driver-side rows. */
+    * pure compaction's rewrite diffs to the empty feed. The two-sided
+    * diff is ONE hash aggregate on the row image: new-side rows count
+    * +1, old-side rows −1, and a row image whose count nets to n ≠ 0
+    * yields |n| rows, inserts if n > 0 and deletes if n < 0 — the
+    * multisets `EXCEPT ALL` gives both ways (Spark plans each `EXCEPT
+    * ALL` as this same aggregate, one per direction). Mergeable, no
+    * window, no driver-side rows. */
   def changesBetween(spark: SparkSession, path: String,
       fromVersion: Long, toVersion: Long): DataFrame = {
     import org.apache.spark.sql.functions.lit
@@ -2495,8 +2540,8 @@ object TxLogTable {
     // (path, dv pointer): a deletion-vector commit changes no listing,
     // but a file whose dv pointer differs between the two snapshots
     // contributes DIFFERENT effective rows — it scans on both sides
-    // (each under its own dv view) and exceptAll isolates exactly the
-    // newly-masked rows as deletes.
+    // (each under its own dv view) and the net-count diff isolates
+    // exactly the newly-masked rows as deletes.
     val st1 =
       if (fromVersion < 0) LogState(Seq.empty, Map.empty, Map.empty)
       else stateUpTo(fs, root, fromVersion)
@@ -2535,15 +2580,20 @@ object TxLogTable {
         // matching the single-sided branches (each yields its scan's
         // table order), never the alphabetical shuffle a positional
         // consumer would trip over
-        import org.apache.spark.sql.functions.col
+        import org.apache.spark.sql.functions.{abs, col, explode, sequence, sum, when}
         val cols = (nw.columns ++ old.columns.diff(nw.columns)).toSeq
         val dtype = (old.schema ++ nw.schema).map(f => f.name -> f.dataType).toMap
-        def aligned(df: DataFrame): DataFrame = df.select(cols.map(c =>
-          if (df.columns.contains(c)) col(c) else lit(null).cast(dtype(c)).as(c)): _*)
-        val a2 = aligned(nw)
-        val a1 = aligned(old)
-        a2.exceptAll(a1).withColumn("_change_type", lit("insert"))
-          .unionByName(a1.exceptAll(a2).withColumn("_change_type", lit("delete")))
+        def aligned(df: DataFrame, tag: Long): DataFrame = df.select(cols.map(c =>
+          if (df.columns.contains(c)) col(c) else lit(null).cast(dtype(c)).as(c)) :+
+          lit(tag).as("__net"): _*)
+        val row = cols.map(c => col(s"`$c`"))
+        aligned(nw, 1L).unionByName(aligned(old, -1L))
+          .groupBy(row: _*).agg(sum(col("__net")).as("__net"))
+          .filter(col("__net") =!= 0)
+          .select(row :+ explode(sequence(lit(1L), abs(col("__net")))).as("__k") :+
+            when(col("__net") > 0, lit("insert")).otherwise(lit("delete"))
+              .as("_change_type"): _*)
+          .drop("__k")
     }
   }
 
@@ -3163,6 +3213,14 @@ object TxLogTable {
     recordedSchema(readString(fs, p)).map(s =>
       asNullable(s).asInstanceOf[org.apache.spark.sql.types.StructType])
   }
+
+  /** Version `v`'s snapshot schema without a scan: the log's recording
+    * ([[schemaAt]]), else the footer sweep of a snapshot read (logs
+    * that predate recorded schemas, and the commits that cannot record
+    * one). */
+  private[graft] def snapshotSchema(spark: SparkSession, path: String,
+      v: Long): org.apache.spark.sql.types.StructType =
+    schemaAt(path, v).getOrElse(readVersion(spark, path, v).schema)
 
   private def recordedSchema(txt: String)
       : Option[org.apache.spark.sql.types.StructType] =
@@ -3791,6 +3849,14 @@ object TxLogTable {
     * forced onto every executor). */
   private val DvBroadcastBudget = 64L << 20
 
+  /** The dv sidecar's fixed schema: log-relative file path and in-file
+    * row index. Reads declare it, so no sidecar read infers a schema. */
+  private val DvSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("f",
+      org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("ri",
+      org.apache.spark.sql.types.LongType)))
+
   /** Subtract a dv map's masked rows from a stamped scan — the
     * `(file, row_index)` anti-join. Two shapes, picked by a byte
     * budget over the log-recorded mask totals (zero extra I/O):
@@ -3817,7 +3883,7 @@ object TxLogTable {
     if (live.isEmpty) return scan
     val (fs, root) = fsFor(path)
     val qual = fs.makeQualified(root).toString
-    val raw = spark.read.parquet(
+    val raw = spark.read.schema(DvSchema).parquet(
       live.values.map(_._1).toSeq.distinct.map(d => s"$path/$d"): _*)
     import spark.implicits._
     val restricted =
@@ -4124,11 +4190,12 @@ object TxLogTable {
     * rename spell the original name, which IS the physical one). The
     * result feeds [[pruneFilesWith]] both for the operation's own
     * candidate pruning and for the conflict re-validation of
-    * interleaved appends ([[commitRebaseRetry]]). Schema source: ONE
-    * file's footer first (a mergeSchema sweep would pay the exact O(N)
-    * cost the stats sidecar avoids); if the predicate references a
-    * column that file lacks (schema evolution), the full merged
-    * schema. */
+    * interleaved appends ([[commitRebaseRetry]]). Schema source: the
+    * log's recorded snapshot schema ([[schemaAt]]), no file opened;
+    * a log that recorded none falls back to ONE file's footer (a
+    * mergeSchema sweep would pay the exact O(N) cost the stats sidecar
+    * avoids), and if the predicate references a column that file lacks
+    * (schema evolution), to the full merged schema. */
   private def resolvedCondAt(spark: SparkSession, path: String,
       predicate: org.apache.spark.sql.Column, v: Long,
       files: Seq[String])
@@ -4139,12 +4206,15 @@ object TxLogTable {
         .filter(predicate).queryExecution.analyzed
         .collectFirst {
           case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition }
-    val cond0 =
-      try resolve(spark.read.parquet(s"$path/${files.last}").schema)
-      catch {
-        case _: org.apache.spark.sql.AnalysisException =>
-          resolve(readVersion(spark, path, v).schema)
-      }
+    val cond0 = schemaAt(path, v) match {
+      case Some(s) => resolve(s)
+      case None =>
+        try resolve(spark.read.parquet(s"$path/${files.last}").schema)
+        catch {
+          case _: org.apache.spark.sql.AnalysisException =>
+            resolve(readVersion(spark, path, v).schema)
+        }
+    }
     // CONSTANT-FOLD the analyzed tree: type coercion wraps literals in
     // casts (`int_col = '3'` analyzes to `cast(col as double) =
     // cast('3' as double)`), and an unfolded cast-of-literal is opaque
@@ -4216,11 +4286,15 @@ object TxLogTable {
       version: Option[Long] = None): DataFrame = {
     val v = version.getOrElse(currentVersion(path))
     if (v < 0) return spark.emptyDataFrame
-    val (kept, _) = prunedFiles(spark, path, predicate, Some(v))
+    val (fs, root) = fsFor(path)
+    val st = stateUpTo(fs, root, v)
+    val kept =
+      if (st.files.isEmpty) Seq.empty
+      else pruneFilesWith(fs, root, st.files,
+        resolvedCondAt(spark, path, predicate, v, st.files))._1
     if (kept.isEmpty)
       return readVersion(spark, path, v).filter(predicate).limit(0)
-    val (fs, root) = fsFor(path)
-    scanFilesDv(spark, path, kept, None, stateUpTo(fs, root, v).dvs)
+    scanFilesDv(spark, path, kept, schemaAt(path, v), st.dvs)
       .filter(predicate)
   }
 

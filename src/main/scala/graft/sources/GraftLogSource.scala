@@ -289,7 +289,7 @@ object GraftLogStreamSource {
     require(head >= 0,
       s"graftlog stream needs a committed table at $path (the schema " +
         "comes from the log)")
-    TxLogTable.readVersion(sqlContext.sparkSession, path, head).schema
+    TxLogTable.snapshotSchema(sqlContext.sparkSession, path, head)
       .add("_change_type", org.apache.spark.sql.types.StringType)
       .add("_commit_version", org.apache.spark.sql.types.LongType)
       .add("_commit_timestamp", org.apache.spark.sql.types.TimestampType)
@@ -491,8 +491,7 @@ object GraftLogRelation {
     // whose committing entry recorded none (pre-schema logs, first
     // append to a partitioned layout)
     schemaCache.getOrElseUpdate((path, v),
-      TxLogTable.schemaAt(path, v)
-        .getOrElse(TxLogTable.readVersion(spark, path, v).schema))
+      TxLogTable.snapshotSchema(spark, path, v))
   }
 
   def apply(sqlContext: SQLContext, path: String,

@@ -103,4 +103,65 @@ class ContaminationSpec extends SparkSpec {
       evalSet.limit(0), "doc_id", "text", minShared = 5)
     assert(none.isEmpty)
   }
+
+  test("bloomOf: overlapping calls that raise the bloom caps never write the caller's session") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import org.apache.spark.sql.functions.{col, udf}
+    val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
+    val before = spark.conf.getOption(bitsKey)
+    // a tiny fpp sizes past the 2^26-bit cap from a 50k-item index; the
+    // two calls size differently, so each one's gate below recognises
+    // its own raised cap in the tasks' propagated SQL confs
+    val fpp = 1e-300
+    val (nA, nB) = (50000L, 52000L)
+    val (bitsA, bitsB) = (graft.functions.BloomFunctions.optimalNumBits(nA, fpp),
+      graft.functions.BloomFunctions.optimalNumBits(nB, fpp))
+    assert(bitsA > (1L << 26) && bitsB > bitsA)
+    val aRunning, bRunning, aDone = new CountDownLatch(1)
+    // the UDF closure ships to tasks, so it names its gate by key and
+    // finds the latches in a JVM-wide registry
+    def gated(n: Long, bits: Long, gate: () => Unit) = {
+      val key = s"${java.util.UUID.randomUUID()}"
+      BloomGates.gates.put(key, gate)
+      val g = udf { (_: Long) =>
+        val tc = org.apache.spark.TaskContext.get()
+        if (tc != null && tc.getLocalProperty(bitsKey) == bits.toString)
+          BloomGates.gates.get(key)()
+        true
+      }.asNondeterministic()
+      spark.range(0, n, 1, 1).filter(g(col("id"))).select(col("id").as("f"))
+    }
+    // A's bloom collect waits until B's is running; B's waits until A
+    // has returned, so A restores before B does
+    val indexA = gated(nA, bitsA, () => { aRunning.countDown(); bRunning.await(120, TimeUnit.SECONDS) })
+    val indexB = gated(nB, bitsB, () => { bRunning.countDown(); aDone.await(120, TimeUnit.SECONDS) })
+    val results = new java.util.concurrent.ConcurrentHashMap[String, Either[Throwable, Array[Byte]]]
+    def call(name: String, index: org.apache.spark.sql.DataFrame) = new Thread(() =>
+      results.put(name,
+        try Right(Contamination.bloomOf(index, fpp = fpp).get)
+        catch { case t: Throwable => Left(t) }))
+    val ta = call("a", indexA)
+    ta.start()
+    assert(aRunning.await(120, TimeUnit.SECONDS), s"call A never reached its bloom collect: $results")
+    val tb = call("b", indexB)
+    tb.start()
+    val bStarted = bRunning.await(120, TimeUnit.SECONDS)
+    val during = spark.conf.getOption(bitsKey)
+    ta.join(120000)
+    aDone.countDown()
+    tb.join(120000)
+    assert(bStarted, "call B never reached its bloom collect")
+    Seq("a", "b").foreach(n => assert(results.get(n).isRight, s"call $n failed: ${results.get(n)}"))
+    assert(during == before, s"caller's $bitsKey was $during while both calls ran (was $before)")
+    assert(spark.conf.getOption(bitsKey) == before,
+      s"caller's $bitsKey left at ${spark.conf.getOption(bitsKey)} (was $before)")
+    // each filter was sized past the default cap, not clamped to it
+    assert(results.get("a").toOption.get.length >= bitsA / 8)
+    assert(results.get("b").toOption.get.length >= bitsB / 8)
+  }
+}
+
+/** Latch callbacks the gated UDFs of the overlapping-`bloomOf` test run. */
+private object BloomGates {
+  val gates = new java.util.concurrent.ConcurrentHashMap[String, () => Unit]
 }

@@ -1280,6 +1280,123 @@ class TxLogTableSpec extends SparkSpec {
     assert(left == before, s"the session kept $key = $left, not $before")
     assert(TxLogTable.read(spark, pa).count() == 1 && TxLogTable.read(spark, pb).count() == 1)
   }
+
+  test("changesBetween: the one-aggregate feed is the two-EXCEPT-ALL multiset") {
+    import org.apache.spark.sql.types._
+    val path = tmp
+    val schema = StructType(Seq(StructField("id", LongType), StructField("s", StringType),
+      StructField("d", DoubleType)))
+    def frame(rows: Seq[(java.lang.Long, String, java.lang.Double)]) =
+      spark.createDataFrame(spark.sparkContext.parallelize(
+        rows.map { case (a, b, c) => org.apache.spark.sql.Row(a, b, c) }, 2), schema)
+    val nan = java.lang.Double.NaN
+    // v0 → v1: duplicates on both sides with different multiplicities,
+    // NULLs in every column, NaN, and −0.0 against 0.0
+    TxLogTable.append(spark, frame(Seq(
+      (1L, "a", 1.0), (1L, "a", 1.0), (1L, "a", 1.0), (2L, "b", 2.0),
+      (3L, null, null), (3L, null, null), (null, "n", nan), (4L, "z", 0.0),
+      (5L, "e", nan))), path)
+    TxLogTable.overwrite(spark, frame(Seq(
+      (1L, "a", 1.0), (2L, "b", 2.0), (2L, "b", 2.0), (3L, null, null),
+      (null, "n", nan), (null, "n", nan), (4L, "z", -0.0), (6L, "f", -0.0))), path)
+    // v1 → v2: the new side widens, so the old side reads `x` as null
+    TxLogTable.overwrite(spark, frame(Seq((1L, "a", 1.0), (7L, "g", 7.0)))
+      .withColumn("x", when(col("id") === 7L, lit(70)).otherwise(lit(null).cast("int"))), path)
+    def exceptAllFeed(from: Long, to: Long) = {
+      val (o, n) = (TxLogTable.readVersion(spark, path, from), TxLogTable.readVersion(spark, path, to))
+      val cols = (n.columns ++ o.columns.diff(n.columns)).toSeq
+      def aligned(df: org.apache.spark.sql.DataFrame) = df.select(cols.map(c =>
+        if (df.columns.contains(c)) col(c) else lit(null).cast(n.schema(c).dataType).as(c)): _*)
+      aligned(n).exceptAll(aligned(o)).withColumn("_change_type", lit("insert"))
+        .unionByName(aligned(o).exceptAll(aligned(n)).withColumn("_change_type", lit("delete")))
+    }
+    for ((from, to) <- Seq((0L, 1L), (1L, 2L), (0L, 2L))) {
+      val feed = TxLogTable.changesBetween(spark, path, from, to)
+      val want = exceptAllFeed(from, to)
+      assert(feed.columns.toSeq == want.columns.toSeq, s"[$from, $to] columns")
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      assert(rows(feed) == rows(want), s"[$from, $to]")
+      def byType(df: org.apache.spark.sql.DataFrame) =
+        df.groupBy("_change_type").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(byType(feed) == byType(want), s"[$from, $to] _change_type counts")
+    }
+    assert(TxLogTable.changesBetween(spark, path, 1L, 2L).columns.toSeq ==
+      Seq("id", "s", "d", "x", "_change_type"))
+    // v0 → v1 by hand: 2 extra (1,a,1.0) and (3,null,null) and the
+    // (5,e,NaN) go; one (2,b,2.0), one (null,n,NaN) and (6,f,0.0) arrive;
+    // (4,z,0.0) and (4,z,-0.0) are one row image
+    val counts = TxLogTable.changesBetween(spark, path, 0L, 1L)
+      .groupBy("_change_type").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(counts == Map("delete" -> 4L, "insert" -> 3L), s"$counts")
+  }
+
+  test("mergeByKey: duplicate keys are rejected before anything is staged") {
+    val path = tmp
+    TxLogTable.append(spark, Seq((1L, "a", "x"), (2L, "b", "y")).toDF("k", "k2", "v"), path)
+    def stageDirs = new java.io.File(path).list().filter(_.startsWith("data-merge-")).toSet
+    val msg = "updates carry duplicate keys on"
+    Seq(
+      Seq("k") -> Seq[(java.lang.Long, String, String)]((1L, "a", "p"), (1L, "b", "q")),
+      Seq("k") -> Seq[(java.lang.Long, String, String)]((null, "a", "p"), (null, "b", "q")),
+      Seq("k", "k2") -> Seq[(java.lang.Long, String, String)]((1L, "a", "p"), (3L, "c", "r"), (1L, "a", "q")))
+      .foreach { case (keys, rows) =>
+        val e = intercept[IllegalArgumentException] {
+          TxLogTable.mergeByKey(spark, path, rows.toDF("k", "k2", "v"), keys)
+        }
+        assert(e.getMessage.contains(s"$msg (${keys.mkString(", ")})"), e.getMessage)
+        assert(TxLogTable.currentVersion(path) == 0L && stageDirs.isEmpty, s"$keys staged")
+      }
+    // a two-column key is duplicated only when both columns repeat
+    TxLogTable.mergeByKey(spark, path,
+      Seq((1L, "a", "p"), (1L, "b", "q")).toDF("k", "k2", "v"), Seq("k", "k2"))
+    assert(TxLogTable.read(spark, path).as[(Long, String, String)].collect().toSet ==
+      Set((1L, "a", "p"), (1L, "b", "q"), (2L, "b", "y")))
+  }
+
+  test("mergeByKey: checkDuplicateKeys = false runs no distinct count") {
+    val path = tmp
+    TxLogTable.append(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), path)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.analyzed.toString.toLowerCase)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    def distinctCounts(check: Boolean): Int = {
+      plans.clear()
+      spark.listenerManager.register(listener)
+      try TxLogTable.mergeByKey(spark, path, Seq((2L, "B"), (3L, "c")).toDF("k", "v"), Seq("k"),
+        checkDuplicateKeys = check)
+      finally {
+        org.apache.spark.sql.graftshim.GraftSqlShim.drainListenerBus(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+      plans.toArray.count(_.toString.contains("count(distinct"))
+    }
+    assert(distinctCounts(check = true) == 1)
+    assert(distinctCounts(check = false) == 0)
+    assert(TxLogTable.read(spark, path).as[(Long, String)].collect().toSet ==
+      Set((1L, "a"), (2L, "B"), (3L, "c")))
+  }
+
+  test("mergeByKey: a rewrite that deletes every touched row commits the removal, no data file") {
+    val path = tmp
+    TxLogTable.append(spark, (1L to 3L).map(i => (i, s"v$i")).toDF("k", "v").repartition(1), path)
+    TxLogTable.append(spark, (4L to 6L).map(i => (i, s"v$i")).toDF("k", "v").repartition(1), path)
+    val before = TxLogTable.snapshotFiles(path, 1L)
+    val v = TxLogTable.mergeByKey(spark, path, (1L to 3L).map(i => (i, "gone")).toDF("k", "v"),
+      Seq("k"), whenMatchedDeleteIf = Some("true"), insertUnmatched = false)
+    assert(v == 2L)
+    val after = TxLogTable.snapshotFiles(path, v)
+    assert(after.size == 1 && before.contains(after.head), s"before=$before after=$after")
+    assert(!new java.io.File(path).list().exists(_.startsWith("data-merge-")),
+      "the empty rewrite left its stage dir")
+    assert(TxLogTable.read(spark, path).select("k").as[Long].collect().sorted.toSeq == Seq(4L, 5L, 6L))
+    // the same for a copy-on-write delete of a whole file
+    val vd = TxLogTable.deleteWhere(spark, path, col("k") >= 4L)
+    assert(TxLogTable.snapshotFiles(path, vd).isEmpty)
+    assert(!new java.io.File(path).list().exists(_.startsWith("data-delete-")))
+  }
 }
 
 /** Latches the stage-scope test's UDFs wait on (executor tasks run in
