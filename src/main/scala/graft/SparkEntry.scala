@@ -11,7 +11,7 @@ import graft.queries._
   */
 object SparkEntry {
 
-  private def modules: Seq[QueryModule] = Seq(
+  private[graft] def modules: Seq[QueryModule] = Seq(
     Relational, Windows, Scalars, IngestQueries,
     CollectionQueries, DedupQueries, SimilarityQueries, TextQueries,
     MultimodalQueries, TimeSeriesQueries, SamplingQueries, ProfileQueries,

@@ -1,8 +1,9 @@
 package graft.queries
 
 import graft.{QueryDef, QueryModule, Tables}
-import graft.operators.{ConnectedComponents, Contamination, Dedup, IndexStore, Packing, Sampling}
-import graft.queries.Handoff.HandoffOps
+import graft.operators.{ConnectedComponents, Dedup, IndexStore}
+import graft.queries.CurationChain.{Attrition, Containment, Disposition, Excision,
+  Packed, Recipe, ShingleLsh, WordLsh}
 import org.apache.spark.sql.functions._
 
 /** Deduplication extension operators surfaced through the correctness
@@ -749,184 +750,18 @@ object DedupQueries extends QueryModule {
       LEFT JOIN near ON near.id = b0.id
       ORDER BY b0.id"""))
 
-  /** The curation chain with CONTAINMENT as stage 1c: split → exact
-    * dedup → drop docs ≥ 90% contained in a longer survivor
+  /** The curation chain with CONTAINMENT as its middle stage: split →
+    * exact dedup → drop docs ≥ 90% contained in a longer survivor
     * ([[graft.operators.Dedup.containment]], q143's operator — the
     * embedded-wire-story case the near-dup stage can't fire on) →
-    * near-dup → decontamination → packing. Same cap and fragments as
-    * the q118/q127 family; the oracle splices the q143 containment
-    * replay between q118's s1 and near-dup CTEs. */
-  private val q148 = QueryDef(
-    "q148_curation_chain_containment",
-    (s, d) => {
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), col("text"), col("n_chars"))
-        .filter(col("doc_id") <= 300)
-      val split = Sampling.split(docs, "doc_id",
-        Seq("train" -> 0.9, "eval" -> 0.1))
-      val train = split.filter(col("split") === "train").drop("split")
-      val evalDocs = split.filter(col("split") === "eval").drop("split")
-      val s1 = Dedup.exact(train, "doc_id", "text")
-        .select(col("doc_id"), col("text"), col("n_chars"))
-      val cont = Dedup.containment(s1, "doc_id", "text", "n_chars",
-          tau = 0.9, minShared = 10, maxDf = 50, k = 8, w = 4,
-          index = IndexStore.default,
-          minParallelism = s.sparkContext.defaultParallelism)
-        .select(col("doc_id").as("__cd"))
-      val s1c = s1.join(cont, col("doc_id") === col("__cd"), "left_anti")
-        .select(col("doc_id"), col("text"))
-        .handoff // containment-handoff persist (the q118 s1x pattern)
-      val prs = Dedup.minhashLsh(s1c, "doc_id", "text",
-        shingleK = 1, numHashes = 16, bands = 4, rows = 4,
-        threshold = 0.8, maxBucketSize = Int.MaxValue,
-        index = IndexStore.default,
-        minParallelism = s.sparkContext.defaultParallelism)
-      val s2 = s1c.join(prs.select(col("id_b").as("__d")).distinct(),
-        col("doc_id") === col("__d"), "left_anti")
-      val idx = Contamination.fingerprints(evalDocs, "doc_id", "text",
-        maxDf = 50, k = 8, w = 4, index = IndexStore.default,
-        minParallelism = s.sparkContext.defaultParallelism, rollingHash = true)
-      val contam = Contamination.checkAgainstIndex(s2, "doc_id", "text", idx,
-          minShared = 20, k = 8, w = 4,
-          minParallelism = s.sparkContext.defaultParallelism,
-          rollingHash = true)
-        .select(col("test_id").as("__c"))
-      val s3 = s2.join(contam, col("doc_id") === col("__c"), "left_anti")
-      val sized = s3.select(col("doc_id"),
-        size(graft.functions.TextFunctions.tokens(col("text"))).as("n_toks"))
-        .handoff
-      Packing.assign(sized, "doc_id", "n_toks", capacity = 1024L,
-          bucketWidth = 8L)
-        .orderBy(col("doc_id"))
-    },
-    Some("""
-      WITH sp AS (
-        SELECT doc_id, text, n_chars,
-               CASE WHEN ('0x' || substr(md5('graft|' || doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT
-                         < 1037629354146162304 THEN 'train' ELSE 'eval' END AS split
-        FROM documents WHERE doc_id <= 300),
-      tr AS (SELECT doc_id, text, n_chars FROM sp WHERE split = 'train'),
-      s1 AS (
-        SELECT doc_id, text, n_chars FROM (
-          SELECT doc_id, text, n_chars,
-                 row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-          FROM tr) WHERE rn = 1),
-      cg AS (
-        SELECT doc_id,
-               list_transform(generate_series(1, length(text) - 7), i ->
-                 CAST(list_sum(list_transform(generate_series(0, 7), j ->
-                   unicode(substr(text, i + j, 1)) * CAST(31 ** (7 - j) AS BIGINT)))
-                   % 1000000007 AS BIGINT)) AS grams
-        FROM s1),
-      cwnd AS (
-        SELECT doc_id,
-               list_sort(list_distinct(CASE WHEN len(grams) >= 4
-                 THEN list_transform(generate_series(1, len(grams) - 3),
-                      j -> list_min(grams[j:j+3]))
-                 ELSE [list_min(grams)] END)) AS wn
-        FROM cg WHERE len(grams) > 0),
-      cfp AS (SELECT doc_id, unnest(wn) AS f FROM cwnd),
-      ckeep AS (SELECT f FROM cfp GROUP BY f HAVING count(*) <= 50),
-      cpf AS (SELECT doc_id, f FROM cfp JOIN ckeep USING (f)),
-      ccnt AS (SELECT doc_id, count(*) AS nfp FROM cpf GROUP BY doc_id),
-      cpairs AS (
-        SELECT pa.doc_id AS a, pb.doc_id AS b, count(*) AS shared
-        FROM cpf pa JOIN cpf pb ON pa.f = pb.f AND pa.doc_id <> pb.doc_id
-        GROUP BY pa.doc_id, pb.doc_id
-        HAVING count(*) >= 10),
-      cdrop AS (
-        SELECT DISTINCT p.a AS doc_id
-        FROM cpairs p
-        JOIN ccnt c ON c.doc_id = p.a
-        JOIN s1 da ON da.doc_id = p.a
-        JOIN s1 db ON db.doc_id = p.b
-        WHERE CAST(p.shared AS DOUBLE) / CAST(c.nfp AS DOUBLE) >= 0.9
-          AND (db.n_chars > da.n_chars
-               OR (db.n_chars = da.n_chars AND p.b < p.a))),
-      s1c AS (
-        SELECT doc_id, text FROM s1
-        WHERE doc_id NOT IN (SELECT doc_id FROM cdrop)),
-      sets AS (
-        SELECT doc_id AS id,
-               list_distinct(list_filter(string_split_regex(text, '\s+'), x -> length(x) > 0)) AS sset
-        FROM s1c),
-      sigs AS (
-        SELECT id, sset,
-               list_transform(generate_series(0, 15),
-                 i -> list_min(list_transform(sset,
-                      s -> ('0x' || substr(md5(s || '#' || i::VARCHAR), 1, 15))::UBIGINT::BIGINT))) AS sig
-        FROM sets WHERE len(sset) > 0),
-      bands AS (
-        SELECT id, sset, unnest(list_transform(generate_series(0, 3),
-               b -> b::VARCHAR || ':' ||
-                    (('0x' || substr(md5(array_to_string(sig[4*b+1:4*b+4], ',')), 1, 15))::UBIGINT::BIGINT)::VARCHAR)) AS band
-        FROM sigs),
-      cand AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bands a JOIN bands b ON a.band = b.band AND a.id < b.id),
-      verified AS (
-        SELECT c.id_a, c.id_b,
-               len(list_intersect(sa.sset, sb.sset)) AS inter,
-               len(sa.sset) AS la, len(sb.sset) AS lb
-        FROM cand c
-        JOIN sets sa ON sa.id = c.id_a
-        JOIN sets sb ON sb.id = c.id_b),
-      drop2 AS (
-        SELECT DISTINCT id_b FROM verified
-        WHERE inter / (la + lb - inter) >= 0.8),
-      s2 AS (
-        SELECT doc_id, text FROM s1c
-        WHERE doc_id NOT IN (SELECT id_b FROM drop2)),
-      gsrc AS (
-        SELECT doc_id, text FROM sp WHERE split = 'eval'
-        UNION ALL
-        SELECT doc_id, text FROM s2),
-      g AS (
-        SELECT doc_id,
-               list_transform(generate_series(1, length(text) - 7), i ->
-                 CAST(list_sum(list_transform(generate_series(0, 7), j ->
-                   unicode(substr(text, i + j, 1)) * CAST(31 ** (7 - j) AS BIGINT)))
-                   % 1000000007 AS BIGINT)) AS grams
-        FROM gsrc),
-      wnd AS (
-        SELECT doc_id,
-               list_sort(list_distinct(CASE WHEN len(grams) >= 4
-                 THEN list_transform(generate_series(1, len(grams) - 3),
-                      j -> list_min(grams[j:j+3]))
-                 ELSE [list_min(grams)] END)) AS wn
-        FROM g WHERE len(grams) > 0),
-      fp AS (SELECT doc_id, unnest(wn) AS f FROM wnd),
-      evalfp AS (
-        SELECT fp.doc_id, fp.f FROM fp
-        JOIN sp USING (doc_id) WHERE sp.split = 'eval'),
-      pruned AS (SELECT f FROM evalfp GROUP BY f HAVING count(*) <= 50),
-      eidx AS (SELECT doc_id AS train_id, f FROM evalfp JOIN pruned USING (f)),
-      hits AS (
-        SELECT s2fp.doc_id
-        FROM (SELECT fp.doc_id, fp.f FROM fp JOIN s2 USING (doc_id)) s2fp
-        JOIN eidx ON s2fp.f = eidx.f
-        GROUP BY s2fp.doc_id, eidx.train_id
-        HAVING count(*) >= 20),
-      s3 AS (
-        SELECT doc_id, text FROM s2
-        WHERE doc_id NOT IN (SELECT DISTINCT doc_id FROM hits)),
-      t AS (
-        SELECT doc_id,
-          len(list_filter(string_split_regex(text, '\s+'),
-              x -> length(x) > 0))::BIGINT AS n_toks
-        FROM s3),
-      c AS (
-        SELECT doc_id, n_toks,
-          COALESCE(SUM(n_toks) OVER (ORDER BY doc_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT
-            AS tok_offset
-        FROM t)
-      SELECT doc_id, n_toks AS n_tokens, tok_offset,
-        tok_offset // 1024 AS seq_id,
-        tok_offset % 1024 AS seq_offset,
-        (tok_offset + greatest(n_toks, 1) - 1) // 1024 AS seq_last
-      FROM c
-      ORDER BY doc_id"""))
+    * near-dup → decontamination → packing, on the capped corpus with
+    * session-temp indexes. [[CurationChain]] builds the stages of both
+    * engines; the containment survivors are the handoff (they feed the
+    * LSH, its survivor join and the decontamination probe). */
+  private val q148 = CurationChain.query("q148_curation_chain_containment",
+    Recipe(capped = true, Some(Containment), WordLsh, IndexStore.default,
+      handoffs = Set("s1c")),
+    Packed)
 
   /** Cross-source syndication matrix ([[graft.operators.Dedup
     * .containmentPairs]]): the FULL containment graph rolled up by
@@ -997,385 +832,28 @@ object DedupQueries extends QueryModule {
       GROUP BY da.source, db.source
       ORDER BY from_source, to_source"""))
 
+  /** The q148 stages with every multi-consumer frame handed off (the
+    * funnel discipline: stage k's count or flag never recomputes stages
+    * 1..k−1), shared by the q153 attrition and q166 disposition tails. */
+  private val containmentFunnel = Recipe(capped = true, Some(Containment),
+    WordLsh, IndexStore.NoStore, handoffs = Set("train", "s1", "s1c", "s2"))
+
   /** Chain attrition report: the q148 chain instrumented — how many
     * documents and tokens survive EACH stage (input → exact →
     * containment → near-dup → decontamination), the per-stage loss
-    * accounting a curation run publishes next to its output. Every
-    * stage DataFrame is persisted once so stage k's count never
-    * recomputes stages 1..k−1 (the funnel discipline). The oracle is
-    * q148's CTE chain with a stage-count union instead of the packing
-    * tail. */
-  private val q153 = QueryDef(
-    "q153_chain_attrition",
-    (s, d) => {
-      import graft.functions.TextFunctions
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), col("text"), col("n_chars"))
-        .filter(col("doc_id") <= 300)
-      val split = Sampling.split(docs, "doc_id",
-        Seq("train" -> 0.9, "eval" -> 0.1))
-      val train = split.filter(col("split") === "train").drop("split").handoff
-      val evalDocs = split.filter(col("split") === "eval").drop("split")
-      val s1 = Dedup.exact(train, "doc_id", "text")
-        .select(col("doc_id"), col("text"), col("n_chars")).handoff
-      val cont = Dedup.containment(s1, "doc_id", "text", "n_chars",
-          tau = 0.9, minShared = 10, maxDf = 50, k = 8, w = 4,
-          index = IndexStore.NoStore,
-          minParallelism = s.sparkContext.defaultParallelism)
-        .select(col("doc_id").as("__cd"))
-      val s1c = s1.join(cont, col("doc_id") === col("__cd"), "left_anti")
-        .select(col("doc_id"), col("text")).handoff
-      val prs = Dedup.minhashLsh(s1c, "doc_id", "text",
-        shingleK = 1, numHashes = 16, bands = 4, rows = 4,
-        threshold = 0.8, maxBucketSize = Int.MaxValue,
-        index = IndexStore.NoStore,
-        minParallelism = s.sparkContext.defaultParallelism)
-      val s2 = s1c.join(prs.select(col("id_b").as("__d")).distinct(),
-        col("doc_id") === col("__d"), "left_anti").handoff
-      val idx = Contamination.fingerprints(evalDocs, "doc_id", "text",
-        maxDf = 50, k = 8, w = 4, index = IndexStore.NoStore,
-        minParallelism = s.sparkContext.defaultParallelism, rollingHash = true)
-      val contam = Contamination.checkAgainstIndex(s2, "doc_id", "text", idx,
-          minShared = 20, k = 8, w = 4,
-          minParallelism = s.sparkContext.defaultParallelism,
-          rollingHash = true)
-        .select(col("test_id").as("__c"))
-      val s3 = s2.join(contam, col("doc_id") === col("__c"), "left_anti")
-      def report(stage: Int, name: String, df: org.apache.spark.sql.DataFrame) =
-        df.agg(count(lit(1)).as("n_docs"),
-            sum(size(TextFunctions.tokens(col("text"))).cast("long"))
-              .as("n_tokens"))
-          .select(lit(stage).as("stage"), lit(name).as("stage_name"),
-            col("n_docs"), coalesce(col("n_tokens"), lit(0L)).as("n_tokens"))
-      Seq(report(0, "input", train), report(1, "exact", s1),
-          report(2, "containment", s1c), report(3, "near_dup", s2),
-          report(4, "decontam", s3))
-        .reduce(_ unionByName _)
-        .orderBy(col("stage"))
-    },
-    Some("""
-      WITH sp AS (
-        SELECT doc_id, text, n_chars,
-               CASE WHEN ('0x' || substr(md5('graft|' || doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT
-                         < 1037629354146162304 THEN 'train' ELSE 'eval' END AS split
-        FROM documents WHERE doc_id <= 300),
-      tr AS (SELECT doc_id, text, n_chars FROM sp WHERE split = 'train'),
-      s1 AS (
-        SELECT doc_id, text, n_chars FROM (
-          SELECT doc_id, text, n_chars,
-                 row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-          FROM tr) WHERE rn = 1),
-      cg AS (
-        SELECT doc_id,
-               list_transform(generate_series(1, length(text) - 7), i ->
-                 CAST(list_sum(list_transform(generate_series(0, 7), j ->
-                   unicode(substr(text, i + j, 1)) * CAST(31 ** (7 - j) AS BIGINT)))
-                   % 1000000007 AS BIGINT)) AS grams
-        FROM s1),
-      cwnd AS (
-        SELECT doc_id,
-               list_sort(list_distinct(CASE WHEN len(grams) >= 4
-                 THEN list_transform(generate_series(1, len(grams) - 3),
-                      j -> list_min(grams[j:j+3]))
-                 ELSE [list_min(grams)] END)) AS wn
-        FROM cg WHERE len(grams) > 0),
-      cfp AS (SELECT doc_id, unnest(wn) AS f FROM cwnd),
-      ckeep AS (SELECT f FROM cfp GROUP BY f HAVING count(*) <= 50),
-      cpf AS (SELECT doc_id, f FROM cfp JOIN ckeep USING (f)),
-      ccnt AS (SELECT doc_id, count(*) AS nfp FROM cpf GROUP BY doc_id),
-      cpairs AS (
-        SELECT pa.doc_id AS a, pb.doc_id AS b, count(*) AS shared
-        FROM cpf pa JOIN cpf pb ON pa.f = pb.f AND pa.doc_id <> pb.doc_id
-        GROUP BY pa.doc_id, pb.doc_id
-        HAVING count(*) >= 10),
-      cdrop AS (
-        SELECT DISTINCT p.a AS doc_id
-        FROM cpairs p
-        JOIN ccnt c ON c.doc_id = p.a
-        JOIN s1 da ON da.doc_id = p.a
-        JOIN s1 db ON db.doc_id = p.b
-        WHERE CAST(p.shared AS DOUBLE) / CAST(c.nfp AS DOUBLE) >= 0.9
-          AND (db.n_chars > da.n_chars
-               OR (db.n_chars = da.n_chars AND p.b < p.a))),
-      s1c AS (
-        SELECT doc_id, text FROM s1
-        WHERE doc_id NOT IN (SELECT doc_id FROM cdrop)),
-      sets AS (
-        SELECT doc_id AS id,
-               list_distinct(list_filter(string_split_regex(text, '\s+'), x -> length(x) > 0)) AS sset
-        FROM s1c),
-      sigs AS (
-        SELECT id, sset,
-               list_transform(generate_series(0, 15),
-                 i -> list_min(list_transform(sset,
-                      s -> ('0x' || substr(md5(s || '#' || i::VARCHAR), 1, 15))::UBIGINT::BIGINT))) AS sig
-        FROM sets WHERE len(sset) > 0),
-      bands AS (
-        SELECT id, sset, unnest(list_transform(generate_series(0, 3),
-               b -> b::VARCHAR || ':' ||
-                    (('0x' || substr(md5(array_to_string(sig[4*b+1:4*b+4], ',')), 1, 15))::UBIGINT::BIGINT)::VARCHAR)) AS band
-        FROM sigs),
-      cand AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bands a JOIN bands b ON a.band = b.band AND a.id < b.id),
-      verified AS (
-        SELECT c.id_a, c.id_b,
-               len(list_intersect(sa.sset, sb.sset)) AS inter,
-               len(sa.sset) AS la, len(sb.sset) AS lb
-        FROM cand c
-        JOIN sets sa ON sa.id = c.id_a
-        JOIN sets sb ON sb.id = c.id_b),
-      drop2 AS (
-        SELECT DISTINCT id_b FROM verified
-        WHERE inter / (la + lb - inter) >= 0.8),
-      s2 AS (
-        SELECT doc_id, text FROM s1c
-        WHERE doc_id NOT IN (SELECT id_b FROM drop2)),
-      gsrc AS (
-        SELECT doc_id, text FROM sp WHERE split = 'eval'
-        UNION ALL
-        SELECT doc_id, text FROM s2),
-      g AS (
-        SELECT doc_id,
-               list_transform(generate_series(1, length(text) - 7), i ->
-                 CAST(list_sum(list_transform(generate_series(0, 7), j ->
-                   unicode(substr(text, i + j, 1)) * CAST(31 ** (7 - j) AS BIGINT)))
-                   % 1000000007 AS BIGINT)) AS grams
-        FROM gsrc),
-      wnd AS (
-        SELECT doc_id,
-               list_sort(list_distinct(CASE WHEN len(grams) >= 4
-                 THEN list_transform(generate_series(1, len(grams) - 3),
-                      j -> list_min(grams[j:j+3]))
-                 ELSE [list_min(grams)] END)) AS wn
-        FROM g WHERE len(grams) > 0),
-      fp AS (SELECT doc_id, unnest(wn) AS f FROM wnd),
-      evalfp AS (
-        SELECT fp.doc_id, fp.f FROM fp
-        JOIN sp USING (doc_id) WHERE sp.split = 'eval'),
-      pruned AS (SELECT f FROM evalfp GROUP BY f HAVING count(*) <= 50),
-      eidx AS (SELECT doc_id AS train_id, f FROM evalfp JOIN pruned USING (f)),
-      hits AS (
-        SELECT s2fp.doc_id
-        FROM (SELECT fp.doc_id, fp.f FROM fp JOIN s2 USING (doc_id)) s2fp
-        JOIN eidx ON s2fp.f = eidx.f
-        GROUP BY s2fp.doc_id, eidx.train_id
-        HAVING count(*) >= 20),
-      s3 AS (
-        SELECT doc_id, text FROM s2
-        WHERE doc_id NOT IN (SELECT DISTINCT doc_id FROM hits)),
-      rep AS (
-        SELECT 0 AS stage, 'input' AS stage_name, count(*) AS n_docs,
-               COALESCE(CAST(sum(len(list_filter(string_split_regex(text, '\s+'),
-                 x -> length(x) > 0))) AS BIGINT), 0) AS n_tokens FROM tr
-        UNION ALL
-        SELECT 1, 'exact', count(*),
-               COALESCE(CAST(sum(len(list_filter(string_split_regex(text, '\s+'),
-                 x -> length(x) > 0))) AS BIGINT), 0) FROM s1
-        UNION ALL
-        SELECT 2, 'containment', count(*),
-               COALESCE(CAST(sum(len(list_filter(string_split_regex(text, '\s+'),
-                 x -> length(x) > 0))) AS BIGINT), 0) FROM s1c
-        UNION ALL
-        SELECT 3, 'near_dup', count(*),
-               COALESCE(CAST(sum(len(list_filter(string_split_regex(text, '\s+'),
-                 x -> length(x) > 0))) AS BIGINT), 0) FROM s2
-        UNION ALL
-        SELECT 4, 'decontam', count(*),
-               COALESCE(CAST(sum(len(list_filter(string_split_regex(text, '\s+'),
-                 x -> length(x) > 0))) AS BIGINT), 0) FROM s3)
-      SELECT stage, stage_name, n_docs, n_tokens FROM rep
-      ORDER BY stage"""))
+    * accounting a curation run publishes next to its output. */
+  private val q153 = CurationChain.query("q153_chain_attrition",
+    containmentFunnel, Attrition)
 
   /** Per-document curation DISPOSITION — the audit log a production
     * curation run publishes next to its output: for EVERY input
     * document, the first stage that dropped it (exact → containment →
-    * near-dup → decontamination) or 'kept'. Same stages and parameters
-    * as [[q153]]'s funnel; where q153 reports the aggregate attrition,
-    * this answers the per-doc question a pipeline operator debugging a
-    * missing document actually asks. Membership flags come from LEFT
-    * joins against the persisted stage frames (mergeable hash joins on
-    * doc_id — no window, no driver-side rows), and the first-drop rule
-    * is one CASE over the flags. */
-  private val q166 = QueryDef(
-    "q166_chain_disposition",
-    (s, d) => {
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), col("text"), col("n_chars"))
-        .filter(col("doc_id") <= 300)
-      val split = Sampling.split(docs, "doc_id",
-        Seq("train" -> 0.9, "eval" -> 0.1))
-      val train = split.filter(col("split") === "train").drop("split").handoff
-      val evalDocs = split.filter(col("split") === "eval").drop("split")
-      val s1 = Dedup.exact(train, "doc_id", "text")
-        .select(col("doc_id"), col("text"), col("n_chars")).handoff
-      val cont = Dedup.containment(s1, "doc_id", "text", "n_chars",
-          tau = 0.9, minShared = 10, maxDf = 50, k = 8, w = 4,
-          index = IndexStore.NoStore,
-          minParallelism = s.sparkContext.defaultParallelism)
-        .select(col("doc_id").as("__cd"))
-      val s1c = s1.join(cont, col("doc_id") === col("__cd"), "left_anti")
-        .select(col("doc_id"), col("text")).handoff
-      val prs = Dedup.minhashLsh(s1c, "doc_id", "text",
-        shingleK = 1, numHashes = 16, bands = 4, rows = 4,
-        threshold = 0.8, maxBucketSize = Int.MaxValue,
-        index = IndexStore.NoStore,
-        minParallelism = s.sparkContext.defaultParallelism)
-      val s2 = s1c.join(prs.select(col("id_b").as("__d")).distinct(),
-        col("doc_id") === col("__d"), "left_anti").handoff
-      val idx = Contamination.fingerprints(evalDocs, "doc_id", "text",
-        maxDf = 50, k = 8, w = 4, index = IndexStore.NoStore,
-        minParallelism = s.sparkContext.defaultParallelism, rollingHash = true)
-      val contam = Contamination.checkAgainstIndex(s2, "doc_id", "text", idx,
-          minShared = 20, k = 8, w = 4,
-          minParallelism = s.sparkContext.defaultParallelism,
-          rollingHash = true)
-        .select(col("test_id").as("__c"))
-      val s3 = s2.join(contam, col("doc_id") === col("__c"), "left_anti")
-      def flag(df: org.apache.spark.sql.DataFrame, name: String) =
-        df.select(col("doc_id"), lit(1).as(name))
-      train.select(col("doc_id"))
-        .join(flag(s1, "__s1"), Seq("doc_id"), "left")
-        .join(flag(s1c, "__s1c"), Seq("doc_id"), "left")
-        .join(flag(s2, "__s2"), Seq("doc_id"), "left")
-        .join(flag(s3, "__s3"), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(col("__s1").isNull, lit("exact"))
-            .when(col("__s1c").isNull, lit("containment"))
-            .when(col("__s2").isNull, lit("near_dup"))
-            .when(col("__s3").isNull, lit("decontam"))
-            .otherwise(lit("kept")).as("disposition"))
-        .orderBy(col("doc_id"))
-    },
-    Some("""
-      WITH sp AS (
-        SELECT doc_id, text, n_chars,
-               CASE WHEN ('0x' || substr(md5('graft|' || doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT
-                         < 1037629354146162304 THEN 'train' ELSE 'eval' END AS split
-        FROM documents WHERE doc_id <= 300),
-      tr AS (SELECT doc_id, text, n_chars FROM sp WHERE split = 'train'),
-      s1 AS (
-        SELECT doc_id, text, n_chars FROM (
-          SELECT doc_id, text, n_chars,
-                 row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-          FROM tr) WHERE rn = 1),
-      cg AS (
-        SELECT doc_id,
-               list_transform(generate_series(1, length(text) - 7), i ->
-                 CAST(list_sum(list_transform(generate_series(0, 7), j ->
-                   unicode(substr(text, i + j, 1)) * CAST(31 ** (7 - j) AS BIGINT)))
-                   % 1000000007 AS BIGINT)) AS grams
-        FROM s1),
-      cwnd AS (
-        SELECT doc_id,
-               list_sort(list_distinct(CASE WHEN len(grams) >= 4
-                 THEN list_transform(generate_series(1, len(grams) - 3),
-                      j -> list_min(grams[j:j+3]))
-                 ELSE [list_min(grams)] END)) AS wn
-        FROM cg WHERE len(grams) > 0),
-      cfp AS (SELECT doc_id, unnest(wn) AS f FROM cwnd),
-      ckeep AS (SELECT f FROM cfp GROUP BY f HAVING count(*) <= 50),
-      cpf AS (SELECT doc_id, f FROM cfp JOIN ckeep USING (f)),
-      ccnt AS (SELECT doc_id, count(*) AS nfp FROM cpf GROUP BY doc_id),
-      cpairs AS (
-        SELECT pa.doc_id AS a, pb.doc_id AS b, count(*) AS shared
-        FROM cpf pa JOIN cpf pb ON pa.f = pb.f AND pa.doc_id <> pb.doc_id
-        GROUP BY pa.doc_id, pb.doc_id
-        HAVING count(*) >= 10),
-      cdrop AS (
-        SELECT DISTINCT p.a AS doc_id
-        FROM cpairs p
-        JOIN ccnt c ON c.doc_id = p.a
-        JOIN s1 da ON da.doc_id = p.a
-        JOIN s1 db ON db.doc_id = p.b
-        WHERE CAST(p.shared AS DOUBLE) / CAST(c.nfp AS DOUBLE) >= 0.9
-          AND (db.n_chars > da.n_chars
-               OR (db.n_chars = da.n_chars AND p.b < p.a))),
-      s1c AS (
-        SELECT doc_id, text FROM s1
-        WHERE doc_id NOT IN (SELECT doc_id FROM cdrop)),
-      sets AS (
-        SELECT doc_id AS id,
-               list_distinct(list_filter(string_split_regex(text, '\s+'), x -> length(x) > 0)) AS sset
-        FROM s1c),
-      sigs AS (
-        SELECT id, sset,
-               list_transform(generate_series(0, 15),
-                 i -> list_min(list_transform(sset,
-                      s -> ('0x' || substr(md5(s || '#' || i::VARCHAR), 1, 15))::UBIGINT::BIGINT))) AS sig
-        FROM sets WHERE len(sset) > 0),
-      bands AS (
-        SELECT id, sset, unnest(list_transform(generate_series(0, 3),
-               b -> b::VARCHAR || ':' ||
-                    (('0x' || substr(md5(array_to_string(sig[4*b+1:4*b+4], ',')), 1, 15))::UBIGINT::BIGINT)::VARCHAR)) AS band
-        FROM sigs),
-      cand AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bands a JOIN bands b ON a.band = b.band AND a.id < b.id),
-      verified AS (
-        SELECT c.id_a, c.id_b,
-               len(list_intersect(sa.sset, sb.sset)) AS inter,
-               len(sa.sset) AS la, len(sb.sset) AS lb
-        FROM cand c
-        JOIN sets sa ON sa.id = c.id_a
-        JOIN sets sb ON sb.id = c.id_b),
-      drop2 AS (
-        SELECT DISTINCT id_b FROM verified
-        WHERE inter / (la + lb - inter) >= 0.8),
-      s2 AS (
-        SELECT doc_id, text FROM s1c
-        WHERE doc_id NOT IN (SELECT id_b FROM drop2)),
-      gsrc AS (
-        SELECT doc_id, text FROM sp WHERE split = 'eval'
-        UNION ALL
-        SELECT doc_id, text FROM s2),
-      g AS (
-        SELECT doc_id,
-               list_transform(generate_series(1, length(text) - 7), i ->
-                 CAST(list_sum(list_transform(generate_series(0, 7), j ->
-                   unicode(substr(text, i + j, 1)) * CAST(31 ** (7 - j) AS BIGINT)))
-                   % 1000000007 AS BIGINT)) AS grams
-        FROM gsrc),
-      wnd AS (
-        SELECT doc_id,
-               list_sort(list_distinct(CASE WHEN len(grams) >= 4
-                 THEN list_transform(generate_series(1, len(grams) - 3),
-                      j -> list_min(grams[j:j+3]))
-                 ELSE [list_min(grams)] END)) AS wn
-        FROM g WHERE len(grams) > 0),
-      fp AS (SELECT doc_id, unnest(wn) AS f FROM wnd),
-      evalfp AS (
-        SELECT fp.doc_id, fp.f FROM fp
-        JOIN sp USING (doc_id) WHERE sp.split = 'eval'),
-      pruned AS (SELECT f FROM evalfp GROUP BY f HAVING count(*) <= 50),
-      eidx AS (SELECT doc_id AS train_id, f FROM evalfp JOIN pruned USING (f)),
-      hits AS (
-        SELECT s2fp.doc_id
-        FROM (SELECT fp.doc_id, fp.f FROM fp JOIN s2 USING (doc_id)) s2fp
-        JOIN eidx ON s2fp.f = eidx.f
-        GROUP BY s2fp.doc_id, eidx.train_id
-        HAVING count(*) >= 20),
-      s3 AS (
-        SELECT doc_id, text FROM s2
-        WHERE doc_id NOT IN (SELECT DISTINCT doc_id FROM hits))
-      SELECT tr.doc_id,
-             CASE WHEN s1.doc_id IS NULL THEN 'exact'
-                  WHEN s1c.doc_id IS NULL THEN 'containment'
-                  WHEN s2.doc_id IS NULL THEN 'near_dup'
-                  WHEN s3.doc_id IS NULL THEN 'decontam'
-                  ELSE 'kept' END AS disposition
-      FROM tr
-      LEFT JOIN s1 ON s1.doc_id = tr.doc_id
-      LEFT JOIN s1c ON s1c.doc_id = tr.doc_id
-      LEFT JOIN s2 ON s2.doc_id = tr.doc_id
-      LEFT JOIN s3 ON s3.doc_id = tr.doc_id
-      ORDER BY tr.doc_id"""))
-
-  // def, not val: q105/q112 are declared below this line, and a val
-  // would capture them before initialization (null entries)
-  override def entries: Seq[QueryDef] =
-    Seq(q40, q41, q42, q43, q44, q45, q46, q82, q89, q99, q100, q105, q112,
-      q116, q118, q127, q143, q146, q148, q149, q153, q157, q159, q166)
+    * near-dup → decontamination) or 'kept'. Same stages as [[q153]]'s
+    * funnel; where q153 reports the aggregate attrition, this answers
+    * the per-doc question a pipeline operator debugging a missing
+    * document actually asks. */
+  private val q166 = CurationChain.query("q166_chain_disposition",
+    containmentFunnel, Disposition)
 
   /** The embedding-path dedup pipeline, end to end — q89's analogue over
     * vectors: sign-LSH near-dup pairs (q45) → connected-component
@@ -1453,143 +931,20 @@ object DedupQueries extends QueryModule {
     * (q83 split, q40 keeper, q42/q43 LSH, q85 winnowing, q90 prefix
     * sum); composing them verifies the HANDOFFS — and gives the
     * streaming chain's spec-verified semantics a hash-verified batch
-    * reference. Output: every surviving doc's packed assignment,
-    * row-exact. */
-  private val q112 = QueryDef(
-    "q112_curation_chain",
-    (s, d) => {
-      // doc_id <= 300: the q43/q89 LSH-corpus cap — shingleK=1 with an
-      // uncapped bucket join is quadratic in stop-shingle buckets (the
-      // capped/pruned variants are the scale path; this query verifies
-      // the chain's HANDOFFS)
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        .filter(col("doc_id") <= 300)
-      val split = Sampling.split(docs, "doc_id",
-        Seq("train" -> 0.9, "eval" -> 0.1))
-      val train = split.filter(col("split") === "train").drop("split")
-      val evalDocs = split.filter(col("split") === "eval").drop("split")
-      // stage 1: exact dedup, min-id keeper per content hash (q40 operator)
-      val s1 = Dedup.exact(train, "doc_id", "text").select(col("doc_id"), col("text"))
-      // stage 2: near-dup pairwise drop
-      val prs = Dedup.minhashLsh(s1, "doc_id", "text",
-        shingleK = 1, numHashes = 16, bands = 4, rows = 4,
-        threshold = 0.8, maxBucketSize = Int.MaxValue,
-        index = IndexStore.NoStore,
-        minParallelism = s.sparkContext.defaultParallelism)
-      val s2 = s1.join(prs.select(col("id_b").as("__d")).distinct(),
-        col("doc_id") === col("__d"), "left_anti")
-      // stage 3: decontamination action vs the eval fingerprint index
-      val idx = Contamination.fingerprints(evalDocs, "doc_id", "text",
-        maxDf = 50, k = 8, w = 4, index = IndexStore.NoStore,
-        minParallelism = s.sparkContext.defaultParallelism, rollingHash = true)
-      val contam = Contamination.checkAgainstIndex(s2, "doc_id", "text", idx,
-          minShared = 20, k = 8, w = 4, // corpus is heavily self-similar (q109's tuning note)
-          minParallelism = s.sparkContext.defaultParallelism,
-          rollingHash = true)
-        .select(col("test_id").as("__c"))
-      val s3 = s2.join(contam, col("doc_id") === col("__c"), "left_anti")
-      // stage 4: pack the survivors. The capped corpus bounds `sized` to
-      // <=301 rows with the whole chain as lineage: persist it so the
-      // packing plan's two reads (offset aggregate + join side) execute
-      // the chain once, and pass bucketWidth explicitly to skip
-      // assign's derive-width min/max action (a third execution).
-      // Width does not affect the assignment, only the plan.
-      val sized = s3.select(col("doc_id"),
-        size(graft.functions.TextFunctions.tokens(col("text"))).as("n_toks"))
-        .handoff
-      Packing.assign(sized, "doc_id", "n_toks", capacity = 1024L,
-          bucketWidth = 8L)
-        .orderBy(col("doc_id"))
-    },
-    Some("""
-      WITH sp AS (
-        SELECT doc_id, text,
-               CASE WHEN ('0x' || substr(md5('graft|' || doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT
-                         < 1037629354146162304 THEN 'train' ELSE 'eval' END AS split
-        FROM documents WHERE doc_id <= 300),
-      tr AS (SELECT doc_id, text FROM sp WHERE split = 'train'),
-      s1 AS (
-        SELECT doc_id, text FROM (
-          SELECT doc_id, text,
-                 row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-          FROM tr) WHERE rn = 1),
-      sets AS (
-        SELECT doc_id AS id,
-               list_distinct(list_filter(string_split_regex(text, '\s+'), x -> length(x) > 0)) AS sset
-        FROM s1),
-      sigs AS (
-        SELECT id, sset,
-               list_transform(generate_series(0, 15),
-                 i -> list_min(list_transform(sset,
-                      s -> ('0x' || substr(md5(s || '#' || i::VARCHAR), 1, 15))::UBIGINT::BIGINT))) AS sig
-        FROM sets WHERE len(sset) > 0),
-      bands AS (
-        SELECT id, sset, unnest(list_transform(generate_series(0, 3),
-               b -> b::VARCHAR || ':' ||
-                    (('0x' || substr(md5(array_to_string(sig[4*b+1:4*b+4], ',')), 1, 15))::UBIGINT::BIGINT)::VARCHAR)) AS band
-        FROM sigs),
-      cand AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bands a JOIN bands b ON a.band = b.band AND a.id < b.id),
-      verified AS (
-        SELECT c.id_a, c.id_b,
-               len(list_intersect(sa.sset, sb.sset)) AS inter,
-               len(sa.sset) AS la, len(sb.sset) AS lb
-        FROM cand c
-        JOIN sets sa ON sa.id = c.id_a
-        JOIN sets sb ON sb.id = c.id_b),
-      drop2 AS (
-        SELECT DISTINCT id_b FROM verified
-        WHERE inter / (la + lb - inter) >= 0.8),
-      s2 AS (
-        SELECT doc_id, text FROM s1
-        WHERE doc_id NOT IN (SELECT id_b FROM drop2)),
-      g AS (
-        SELECT doc_id,
-               list_transform(generate_series(1, length(text) - 7), i ->
-                 CAST(list_sum(list_transform(generate_series(0, 7), j ->
-                   unicode(substr(text, i + j, 1)) * CAST(31 ** (7 - j) AS BIGINT)))
-                   % 1000000007 AS BIGINT)) AS grams
-        FROM sp),
-      wnd AS (
-        SELECT doc_id,
-               list_sort(list_distinct(CASE WHEN len(grams) >= 4
-                 THEN list_transform(generate_series(1, len(grams) - 3),
-                      j -> list_min(grams[j:j+3]))
-                 ELSE [list_min(grams)] END)) AS wn
-        FROM g WHERE len(grams) > 0),
-      fp AS (SELECT doc_id, unnest(wn) AS f FROM wnd),
-      evalfp AS (
-        SELECT fp.doc_id, fp.f FROM fp
-        JOIN sp USING (doc_id) WHERE sp.split = 'eval'),
-      pruned AS (SELECT f FROM evalfp GROUP BY f HAVING count(*) <= 50),
-      eidx AS (SELECT doc_id AS train_id, f FROM evalfp JOIN pruned USING (f)),
-      hits AS (
-        SELECT s2fp.doc_id
-        FROM (SELECT fp.doc_id, fp.f FROM fp JOIN s2 USING (doc_id)) s2fp
-        JOIN eidx ON s2fp.f = eidx.f
-        GROUP BY s2fp.doc_id, eidx.train_id
-        HAVING count(*) >= 20),
-      s3 AS (
-        SELECT doc_id, text FROM s2
-        WHERE doc_id NOT IN (SELECT DISTINCT doc_id FROM hits)),
-      t AS (
-        SELECT doc_id,
-          len(list_filter(string_split_regex(text, '\s+'),
-              x -> length(x) > 0))::BIGINT AS n_toks
-        FROM s3),
-      c AS (
-        SELECT doc_id, n_toks,
-          COALESCE(SUM(n_toks) OVER (ORDER BY doc_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT
-            AS tok_offset
-        FROM t)
-      SELECT doc_id, n_toks AS n_tokens, tok_offset,
-        tok_offset // 1024 AS seq_id,
-        tok_offset % 1024 AS seq_offset,
-        (tok_offset + greatest(n_toks, 1) - 1) // 1024 AS seq_last
-      FROM c
-      ORDER BY doc_id"""))
+    * reference. Capped at doc_id <= 300: 1-word shingles with uncapped
+    * buckets are quadratic in stop-shingle buckets (q157 is the scale
+    * path). Output: every surviving doc's packed assignment, row-exact. */
+  private val q112 = CurationChain.query("q112_curation_chain",
+    Recipe(capped = true, None, WordLsh, IndexStore.NoStore,
+      handoffs = Set.empty),
+    Packed)
+
+  /** The q112 chain with span EXCISION as its middle stage — spanExcision
+    * is the chain's most expensive stage and its output fans out to the
+    * LSH (read 3x under NoStore), the survivor join and the
+    * decontamination probe, so `s1x` is the handoff. */
+  private val excisionChain = Recipe(capped = true, Some(Excision), WordLsh,
+    IndexStore.NoStore, handoffs = Set("s1x"))
 
   /** The q112 batch curation chain with a span-excision stage between
     * exact dedup and near-dup — the C4 → ExactSubstr ordering of Lee et
@@ -1603,242 +958,34 @@ object DedupQueries extends QueryModule {
     * never excised). Verifies the excision HANDOFF: spans duplicated
     * within the post-dedup train corpus change what near-dup and
     * decontam see, and the packing assignment shifts accordingly. */
-  private val q118 = QueryDef(
-    "q118_curation_chain_excision",
-    (s, d) => {
-      // doc_id <= 300: the q112 LSH-corpus cap (see q112's note)
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        .filter(col("doc_id") <= 300)
-      val split = Sampling.split(docs, "doc_id",
-        Seq("train" -> 0.9, "eval" -> 0.1))
-      val train = split.filter(col("split") === "train").drop("split")
-      val evalDocs = split.filter(col("split") === "eval").drop("split")
-      // stage 1: exact dedup, min-id keeper per content hash (q40)
-      val s1 = Dedup.exact(train, "doc_id", "text").select(col("doc_id"), col("text"))
-      // stage 1b: duplicated-span excision within the deduped train
-      // corpus (q116); text is REWRITTEN to the surviving tokens
-      // persist the excision handoff: spanExcision is the chain's most
-      // expensive stage and s1x fans out to the LSH (read 3x under
-      // NoStore), the survivor join, and the decontamination probe —
-      // without the persist the span pass re-executes per consumer
-      val s1x = Dedup.spanExcision(s1, "doc_id", "text", n = 16,
-          minParallelism = s.sparkContext.defaultParallelism)
-        .select(col("doc_id"), col("clean_text").as("text"))
-        .handoff
-      // stage 2: near-dup pairwise drop over the excised texts
-      val prs = Dedup.minhashLsh(s1x, "doc_id", "text",
-        shingleK = 1, numHashes = 16, bands = 4, rows = 4,
-        threshold = 0.8, maxBucketSize = Int.MaxValue,
-        index = IndexStore.NoStore,
-        minParallelism = s.sparkContext.defaultParallelism)
-      val s2 = s1x.join(prs.select(col("id_b").as("__d")).distinct(),
-        col("doc_id") === col("__d"), "left_anti")
-      // stage 3: decontamination — eval fingerprints from ORIGINAL eval
-      // text, train-side check over the excised survivors
-      val idx = Contamination.fingerprints(evalDocs, "doc_id", "text",
-        maxDf = 50, k = 8, w = 4, index = IndexStore.NoStore,
-        minParallelism = s.sparkContext.defaultParallelism, rollingHash = true)
-      val contam = Contamination.checkAgainstIndex(s2, "doc_id", "text", idx,
-          minShared = 20, k = 8, w = 4,
-          minParallelism = s.sparkContext.defaultParallelism,
-          rollingHash = true)
-        .select(col("test_id").as("__c"))
-      val s3 = s2.join(contam, col("doc_id") === col("__c"), "left_anti")
-      // stage 4: pack the survivors (q112's persist + explicit width)
-      val sized = s3.select(col("doc_id"),
-        size(graft.functions.TextFunctions.tokens(col("text"))).as("n_toks"))
-        .handoff
-      Packing.assign(sized, "doc_id", "n_toks", capacity = 1024L,
-          bucketWidth = 8L)
-        .orderBy(col("doc_id"))
-    },
-    Some("""
-      WITH sp AS (
-        SELECT doc_id, text,
-               CASE WHEN ('0x' || substr(md5('graft|' || doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT
-                         < 1037629354146162304 THEN 'train' ELSE 'eval' END AS split
-        FROM documents WHERE doc_id <= 300),
-      tr AS (SELECT doc_id, text FROM sp WHERE split = 'train'),
-      s1 AS (
-        SELECT doc_id, text FROM (
-          SELECT doc_id, text,
-                 row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-          FROM tr) WHERE rn = 1),
-      xt AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'),
-                           x -> length(x) > 0) AS t
-        FROM s1),
-      xo AS (
-        SELECT doc_id, unnest(generate_series(1, len(t) - 15)) AS pos, t
-        FROM xt WHERE len(t) >= 16),
-      xg AS (
-        SELECT doc_id, pos,
-               md5(array_to_string(t[pos : pos + 15], ' ')) AS h
-        FROM xo),
-      xm AS (
-        SELECT doc_id, pos,
-               count(*) OVER (PARTITION BY h) AS c,
-               row_number() OVER (PARTITION BY h
-                 ORDER BY doc_id, pos) AS rn
-        FROM xg),
-      xdup AS (
-        SELECT doc_id, pos FROM xm
-        WHERE c >= 2 AND rn > 1),
-      xcov AS (
-        SELECT doc_id, list(DISTINCT tp) AS cps
-        FROM (SELECT doc_id,
-                     unnest(generate_series(pos, pos + 15)) AS tp
-              FROM xdup)
-        GROUP BY doc_id),
-      s1x AS (
-        SELECT t.doc_id,
-               coalesce(array_to_string(
-                 list_transform(
-                   list_filter(generate_series(1, len(t.t)),
-                               i -> c.cps IS NULL OR NOT list_contains(c.cps, i)),
-                   i -> t.t[i]), ' '), '') AS text
-        FROM xt t LEFT JOIN xcov c USING (doc_id)),
-      sets AS (
-        SELECT doc_id AS id,
-               list_distinct(list_filter(string_split_regex(text, '\s+'), x -> length(x) > 0)) AS sset
-        FROM s1x),
-      sigs AS (
-        SELECT id, sset,
-               list_transform(generate_series(0, 15),
-                 i -> list_min(list_transform(sset,
-                      s -> ('0x' || substr(md5(s || '#' || i::VARCHAR), 1, 15))::UBIGINT::BIGINT))) AS sig
-        FROM sets WHERE len(sset) > 0),
-      bands AS (
-        SELECT id, sset, unnest(list_transform(generate_series(0, 3),
-               b -> b::VARCHAR || ':' ||
-                    (('0x' || substr(md5(array_to_string(sig[4*b+1:4*b+4], ',')), 1, 15))::UBIGINT::BIGINT)::VARCHAR)) AS band
-        FROM sigs),
-      cand AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bands a JOIN bands b ON a.band = b.band AND a.id < b.id),
-      verified AS (
-        SELECT c.id_a, c.id_b,
-               len(list_intersect(sa.sset, sb.sset)) AS inter,
-               len(sa.sset) AS la, len(sb.sset) AS lb
-        FROM cand c
-        JOIN sets sa ON sa.id = c.id_a
-        JOIN sets sb ON sb.id = c.id_b),
-      drop2 AS (
-        SELECT DISTINCT id_b FROM verified
-        WHERE inter / (la + lb - inter) >= 0.8),
-      s2 AS (
-        SELECT doc_id, text FROM s1x
-        WHERE doc_id NOT IN (SELECT id_b FROM drop2)),
-      gsrc AS (
-        SELECT doc_id, text FROM sp WHERE split = 'eval'
-        UNION ALL
-        SELECT doc_id, text FROM s2),
-      g AS (
-        SELECT doc_id,
-               list_transform(generate_series(1, length(text) - 7), i ->
-                 CAST(list_sum(list_transform(generate_series(0, 7), j ->
-                   unicode(substr(text, i + j, 1)) * CAST(31 ** (7 - j) AS BIGINT)))
-                   % 1000000007 AS BIGINT)) AS grams
-        FROM gsrc),
-      wnd AS (
-        SELECT doc_id,
-               list_sort(list_distinct(CASE WHEN len(grams) >= 4
-                 THEN list_transform(generate_series(1, len(grams) - 3),
-                      j -> list_min(grams[j:j+3]))
-                 ELSE [list_min(grams)] END)) AS wn
-        FROM g WHERE len(grams) > 0),
-      fp AS (SELECT doc_id, unnest(wn) AS f FROM wnd),
-      evalfp AS (
-        SELECT fp.doc_id, fp.f FROM fp
-        JOIN sp USING (doc_id) WHERE sp.split = 'eval'),
-      pruned AS (SELECT f FROM evalfp GROUP BY f HAVING count(*) <= 50),
-      eidx AS (SELECT doc_id AS train_id, f FROM evalfp JOIN pruned USING (f)),
-      hits AS (
-        SELECT s2fp.doc_id
-        FROM (SELECT fp.doc_id, fp.f FROM fp JOIN s2 USING (doc_id)) s2fp
-        JOIN eidx ON s2fp.f = eidx.f
-        GROUP BY s2fp.doc_id, eidx.train_id
-        HAVING count(*) >= 20),
-      s3 AS (
-        SELECT doc_id, text FROM s2
-        WHERE doc_id NOT IN (SELECT DISTINCT doc_id FROM hits)),
-      t AS (
-        SELECT doc_id,
-          len(list_filter(string_split_regex(text, '\s+'),
-              x -> length(x) > 0))::BIGINT AS n_toks
-        FROM s3),
-      c AS (
-        SELECT doc_id, n_toks,
-          COALESCE(SUM(n_toks) OVER (ORDER BY doc_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT
-            AS tok_offset
-        FROM t)
-      SELECT doc_id, n_toks AS n_tokens, tok_offset,
-        tok_offset // 1024 AS seq_id,
-        tok_offset % 1024 AS seq_offset,
-        (tok_offset + greatest(n_toks, 1) - 1) // 1024 AS seq_last
-      FROM c
-      ORDER BY doc_id"""))
+  private val q118 = CurationChain.query("q118_curation_chain_excision",
+    excisionChain, Packed)
 
   /** The COMPLETE curation recipe: the q118 chain with the q96 Gopher
     * quality funnel as stage 0 — the C4/RefinedWeb/Gopher ordering
     * (filter junk FIRST, then dedup what's left: repetition-flagged and
     * too-short docs never cost a dedup comparison). Eval fingerprints
     * come from the post-filter eval split, so a junk eval doc can't
-    * poison decontamination either. The oracle prepends the
-    * byte-identical q96 repetition CTEs to the q118 chain — six proven
-    * fragments composed in ONE DuckDB statement. */
+    * poison decontamination either. The funnel is this query's own
+    * corpus: the Spark repetition filter ahead of [[CurationChain]]'s
+    * stages, and q96's repetition CTEs ahead of its oracle prefix. */
   private val q127 = QueryDef(
     "q127_curation_chain_quality",
     (s, d) => {
-      // doc_id <= 300: the q112 LSH-corpus cap (see q112's note)
-      val docs0 = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        .filter(col("doc_id") <= 300)
       // stage 0: quality funnel (q96's keep rule) — repetition metrics
       // are per-row projections, so the filter is shuffle-free
-      val docs = graft.operators.TextAnalysis.repetition(docs0, "doc_id", "text")
+      val docs = graft.operators.TextAnalysis.repetition(
+          CurationChain.documents(s, d, excisionChain), "doc_id", "text")
         .filter(col("n_tokens") >= 20 && col("flagged") === 0)
         .select(col("doc_id"), col("text"))
-      val split = Sampling.split(docs, "doc_id",
-        Seq("train" -> 0.9, "eval" -> 0.1))
-      val train = split.filter(col("split") === "train").drop("split")
-      val evalDocs = split.filter(col("split") === "eval").drop("split")
-      // stages 1-4: the q118 chain verbatim
-      val s1 = Dedup.exact(train, "doc_id", "text").select(col("doc_id"), col("text"))
-      val s1x = Dedup.spanExcision(s1, "doc_id", "text", n = 16,
-          minParallelism = s.sparkContext.defaultParallelism)
-        .select(col("doc_id"), col("clean_text").as("text"))
-        .handoff // q118's excision-handoff persist: s1x fans out 5x
-      val prs = Dedup.minhashLsh(s1x, "doc_id", "text",
-        shingleK = 1, numHashes = 16, bands = 4, rows = 4,
-        threshold = 0.8, maxBucketSize = Int.MaxValue,
-        index = IndexStore.NoStore,
-        minParallelism = s.sparkContext.defaultParallelism)
-      val s2 = s1x.join(prs.select(col("id_b").as("__d")).distinct(),
-        col("doc_id") === col("__d"), "left_anti")
-      val idx = Contamination.fingerprints(evalDocs, "doc_id", "text",
-        maxDf = 50, k = 8, w = 4, index = IndexStore.NoStore,
-        minParallelism = s.sparkContext.defaultParallelism, rollingHash = true)
-      val contam = Contamination.checkAgainstIndex(s2, "doc_id", "text", idx,
-          minShared = 20, k = 8, w = 4,
-          minParallelism = s.sparkContext.defaultParallelism,
-          rollingHash = true)
-        .select(col("test_id").as("__c"))
-      val s3 = s2.join(contam, col("doc_id") === col("__c"), "left_anti")
-      val sized = s3.select(col("doc_id"),
-        size(graft.functions.TextFunctions.tokens(col("text"))).as("n_toks"))
-        .handoff
-      Packing.assign(sized, "doc_id", "n_toks", capacity = 1024L,
-          bucketWidth = 8L)
-        .orderBy(col("doc_id"))
+      Packed(excisionChain, CurationChain.stages(docs, excisionChain))
     },
-    Some("""
+    Some(raw"""
       WITH qtoks AS (
         SELECT doc_id, text,
                list_filter(string_split_regex(text, '\s+'),
                            x -> length(x) > 0) AS t
-        FROM documents WHERE doc_id <= 300),
+        FROM ${CurationChain.documentsSql(excisionChain)}),
       qbase AS (
         SELECT doc_id, text, len(t) AS n_tokens,
                len(list_distinct(t)) AS n_distinct, t
@@ -1874,133 +1021,7 @@ object DedupQueries extends QueryModule {
         WHERE n_tokens >= 20
           AND NOT (dup_token_frac > 0.4 OR top_2gram_frac > 0.2
                    OR top_3gram_frac > 0.18)),
-      sp AS (
-        SELECT doc_id, text,
-               CASE WHEN ('0x' || substr(md5('graft|' || doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT
-                         < 1037629354146162304 THEN 'train' ELSE 'eval' END AS split
-        FROM docs),
-      tr AS (SELECT doc_id, text FROM sp WHERE split = 'train'),
-      s1 AS (
-        SELECT doc_id, text FROM (
-          SELECT doc_id, text,
-                 row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-          FROM tr) WHERE rn = 1),
-      xt AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'),
-                           x -> length(x) > 0) AS t
-        FROM s1),
-      xo AS (
-        SELECT doc_id, unnest(generate_series(1, len(t) - 15)) AS pos, t
-        FROM xt WHERE len(t) >= 16),
-      xg AS (
-        SELECT doc_id, pos,
-               md5(array_to_string(t[pos : pos + 15], ' ')) AS h
-        FROM xo),
-      xm AS (
-        SELECT doc_id, pos,
-               count(*) OVER (PARTITION BY h) AS c,
-               row_number() OVER (PARTITION BY h
-                 ORDER BY doc_id, pos) AS rn
-        FROM xg),
-      xdup AS (
-        SELECT doc_id, pos FROM xm
-        WHERE c >= 2 AND rn > 1),
-      xcov AS (
-        SELECT doc_id, list(DISTINCT tp) AS cps
-        FROM (SELECT doc_id,
-                     unnest(generate_series(pos, pos + 15)) AS tp
-              FROM xdup)
-        GROUP BY doc_id),
-      s1x AS (
-        SELECT t.doc_id,
-               coalesce(array_to_string(
-                 list_transform(
-                   list_filter(generate_series(1, len(t.t)),
-                               i -> c.cps IS NULL OR NOT list_contains(c.cps, i)),
-                   i -> t.t[i]), ' '), '') AS text
-        FROM xt t LEFT JOIN xcov c USING (doc_id)),
-      sets AS (
-        SELECT doc_id AS id,
-               list_distinct(list_filter(string_split_regex(text, '\s+'), x -> length(x) > 0)) AS sset
-        FROM s1x),
-      sigs AS (
-        SELECT id, sset,
-               list_transform(generate_series(0, 15),
-                 i -> list_min(list_transform(sset,
-                      s -> ('0x' || substr(md5(s || '#' || i::VARCHAR), 1, 15))::UBIGINT::BIGINT))) AS sig
-        FROM sets WHERE len(sset) > 0),
-      bands AS (
-        SELECT id, sset, unnest(list_transform(generate_series(0, 3),
-               b -> b::VARCHAR || ':' ||
-                    (('0x' || substr(md5(array_to_string(sig[4*b+1:4*b+4], ',')), 1, 15))::UBIGINT::BIGINT)::VARCHAR)) AS band
-        FROM sigs),
-      cand AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bands a JOIN bands b ON a.band = b.band AND a.id < b.id),
-      verified AS (
-        SELECT c.id_a, c.id_b,
-               len(list_intersect(sa.sset, sb.sset)) AS inter,
-               len(sa.sset) AS la, len(sb.sset) AS lb
-        FROM cand c
-        JOIN sets sa ON sa.id = c.id_a
-        JOIN sets sb ON sb.id = c.id_b),
-      drop2 AS (
-        SELECT DISTINCT id_b FROM verified
-        WHERE inter / (la + lb - inter) >= 0.8),
-      s2 AS (
-        SELECT doc_id, text FROM s1x
-        WHERE doc_id NOT IN (SELECT id_b FROM drop2)),
-      gsrc AS (
-        SELECT doc_id, text FROM sp WHERE split = 'eval'
-        UNION ALL
-        SELECT doc_id, text FROM s2),
-      g AS (
-        SELECT doc_id,
-               list_transform(generate_series(1, length(text) - 7), i ->
-                 CAST(list_sum(list_transform(generate_series(0, 7), j ->
-                   unicode(substr(text, i + j, 1)) * CAST(31 ** (7 - j) AS BIGINT)))
-                   % 1000000007 AS BIGINT)) AS grams
-        FROM gsrc),
-      wnd AS (
-        SELECT doc_id,
-               list_sort(list_distinct(CASE WHEN len(grams) >= 4
-                 THEN list_transform(generate_series(1, len(grams) - 3),
-                      j -> list_min(grams[j:j+3]))
-                 ELSE [list_min(grams)] END)) AS wn
-        FROM g WHERE len(grams) > 0),
-      fp AS (SELECT doc_id, unnest(wn) AS f FROM wnd),
-      evalfp AS (
-        SELECT fp.doc_id, fp.f FROM fp
-        JOIN sp USING (doc_id) WHERE sp.split = 'eval'),
-      pruned AS (SELECT f FROM evalfp GROUP BY f HAVING count(*) <= 50),
-      eidx AS (SELECT doc_id AS train_id, f FROM evalfp JOIN pruned USING (f)),
-      hits AS (
-        SELECT s2fp.doc_id
-        FROM (SELECT fp.doc_id, fp.f FROM fp JOIN s2 USING (doc_id)) s2fp
-        JOIN eidx ON s2fp.f = eidx.f
-        GROUP BY s2fp.doc_id, eidx.train_id
-        HAVING count(*) >= 20),
-      s3 AS (
-        SELECT doc_id, text FROM s2
-        WHERE doc_id NOT IN (SELECT DISTINCT doc_id FROM hits)),
-      t AS (
-        SELECT doc_id,
-          len(list_filter(string_split_regex(text, '\s+'),
-              x -> length(x) > 0))::BIGINT AS n_toks
-        FROM s3),
-      c AS (
-        SELECT doc_id, n_toks,
-          COALESCE(SUM(n_toks) OVER (ORDER BY doc_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT
-            AS tok_offset
-        FROM t)
-      SELECT doc_id, n_toks AS n_tokens, tok_offset,
-        tok_offset // 1024 AS seq_id,
-        tok_offset % 1024 AS seq_offset,
-        (tok_offset + greatest(n_toks, 1) - 1) // 1024 AS seq_last
-      FROM c
-      ORDER BY doc_id"""))
+      ${CurationChain.ctes(excisionChain, "docs")}${Packed.sql(excisionChain)}"""))
 
   /** The q112 curation chain UNCAPPED — the whole documents corpus, no
     * doc_id fence. What makes it affordable is exactly the production
@@ -2012,140 +1033,14 @@ object DedupQueries extends QueryModule {
     * capped chains verify stage HANDOFFS on a fenced corpus; this one
     * verifies the chain SURVIVES the corpus. The oracle replays the
     * 3-shingle LSH (q43's scheme with q42's shingle CTE), the band cap,
-    * winnowing decontamination, and the packing tail — hash-exact. */
-  private val q157 = QueryDef(
-    "q157_curation_chain_full",
-    (s, d) => {
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val split = Sampling.split(docs, "doc_id",
-        Seq("train" -> 0.9, "eval" -> 0.1))
-      val train = split.filter(col("split") === "train").drop("split")
-      val evalDocs = split.filter(col("split") === "eval").drop("split")
-      val s1 = Dedup.exact(train, "doc_id", "text")
-        .select(col("doc_id"), col("text"))
-        .handoff // dedup handoff: s1 fans out to the LSH and both joins
-      val prs = Dedup.minhashLsh(s1, "doc_id", "text",
-        shingleK = 3, numHashes = 16, bands = 4, rows = 4,
-        threshold = 0.8, maxBucketSize = 100,
-        index = IndexStore.default,
-        minParallelism = s.sparkContext.defaultParallelism)
-      val s2 = s1.join(prs.select(col("id_b").as("__d")).distinct(),
-        col("doc_id") === col("__d"), "left_anti")
-        .handoff // survivor handoff: decontamination probe + s3 both read s2
-      val idx = Contamination.fingerprints(evalDocs, "doc_id", "text",
-        maxDf = 50, k = 8, w = 4, index = IndexStore.default,
-        minParallelism = s.sparkContext.defaultParallelism, rollingHash = true)
-      val contam = Contamination.checkAgainstIndex(s2, "doc_id", "text", idx,
-          minShared = 20, k = 8, w = 4,
-          minParallelism = s.sparkContext.defaultParallelism,
-          rollingHash = true)
-        .select(col("test_id").as("__c"))
-      val s3 = s2.join(contam, col("doc_id") === col("__c"), "left_anti")
-      val sized = s3.select(col("doc_id"),
-        size(graft.functions.TextFunctions.tokens(col("text"))).as("n_toks"))
-        .handoff
-      Packing.assign(sized, "doc_id", "n_toks", capacity = 1024L,
-          bucketWidth = 8L)
-        .orderBy(col("doc_id"))
-    },
-    Some("""
-      WITH sp AS (
-        SELECT doc_id, text,
-               CASE WHEN ('0x' || substr(md5('graft|' || doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT
-                         < 1037629354146162304 THEN 'train' ELSE 'eval' END AS split
-        FROM documents),
-      tr AS (SELECT doc_id, text FROM sp WHERE split = 'train'),
-      s1 AS (
-        SELECT doc_id, text FROM (
-          SELECT doc_id, text,
-                 row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-          FROM tr) WHERE rn = 1),
-      toks AS (
-        SELECT doc_id AS id,
-               list_filter(string_split_regex(text, '\s+'), x -> length(x) > 0) AS w
-        FROM s1),
-      sets AS (
-        SELECT id, list_distinct(CASE WHEN len(w) >= 3
-                 THEN list_transform(generate_series(1, len(w) - 2),
-                      j -> concat_ws(' ', w[j], w[j+1], w[j+2]))
-                 ELSE [] END) AS sset
-        FROM toks),
-      sets2 AS (SELECT id, sset FROM sets WHERE len(sset) > 0),
-      sigs AS (
-        SELECT id, sset,
-               list_transform(generate_series(0, 15),
-                 i -> list_min(list_transform(sset,
-                      s -> ('0x' || substr(md5(s || '#' || i::VARCHAR), 1, 15))::UBIGINT::BIGINT))) AS sig
-        FROM sets2),
-      bands AS (
-        SELECT id, sset, unnest(list_transform(generate_series(0, 3),
-               b -> b::VARCHAR || ':' ||
-                    (('0x' || substr(md5(array_to_string(sig[4*b+1:4*b+4], ',')), 1, 15))::UBIGINT::BIGINT)::VARCHAR)) AS band
-        FROM sigs),
-      keepb AS (SELECT band FROM bands GROUP BY band HAVING count(*) <= 100),
-      bands2 AS (SELECT b.id, b.sset, b.band FROM bands b JOIN keepb USING (band)),
-      cand AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bands2 a JOIN bands2 b ON a.band = b.band AND a.id < b.id),
-      verified AS (
-        SELECT c.id_a, c.id_b,
-               len(list_intersect(sa.sset, sb.sset)) AS inter,
-               len(sa.sset) AS la, len(sb.sset) AS lb
-        FROM cand c
-        JOIN sets2 sa ON sa.id = c.id_a
-        JOIN sets2 sb ON sb.id = c.id_b),
-      drop2 AS (
-        SELECT DISTINCT id_b FROM verified
-        WHERE inter / (la + lb - inter) >= 0.8),
-      s2 AS (
-        SELECT doc_id, text FROM s1
-        WHERE doc_id NOT IN (SELECT id_b FROM drop2)),
-      g AS (
-        SELECT doc_id,
-               list_transform(generate_series(1, length(text) - 7), i ->
-                 CAST(list_sum(list_transform(generate_series(0, 7), j ->
-                   unicode(substr(text, i + j, 1)) * CAST(31 ** (7 - j) AS BIGINT)))
-                   % 1000000007 AS BIGINT)) AS grams
-        FROM sp),
-      wnd AS (
-        SELECT doc_id,
-               list_sort(list_distinct(CASE WHEN len(grams) >= 4
-                 THEN list_transform(generate_series(1, len(grams) - 3),
-                      j -> list_min(grams[j:j+3]))
-                 ELSE [list_min(grams)] END)) AS wn
-        FROM g WHERE len(grams) > 0),
-      fp AS (SELECT doc_id, unnest(wn) AS f FROM wnd),
-      evalfp AS (
-        SELECT fp.doc_id, fp.f FROM fp
-        JOIN sp USING (doc_id) WHERE sp.split = 'eval'),
-      pruned AS (SELECT f FROM evalfp GROUP BY f HAVING count(*) <= 50),
-      eidx AS (SELECT doc_id AS train_id, f FROM evalfp JOIN pruned USING (f)),
-      hits AS (
-        SELECT s2fp.doc_id
-        FROM (SELECT fp.doc_id, fp.f FROM fp JOIN s2 USING (doc_id)) s2fp
-        JOIN eidx ON s2fp.f = eidx.f
-        GROUP BY s2fp.doc_id, eidx.train_id
-        HAVING count(*) >= 20),
-      s3 AS (
-        SELECT doc_id, text FROM s2
-        WHERE doc_id NOT IN (SELECT DISTINCT doc_id FROM hits)),
-      t AS (
-        SELECT doc_id,
-          len(list_filter(string_split_regex(text, '\s+'),
-              x -> length(x) > 0))::BIGINT AS n_toks
-        FROM s3),
-      c AS (
-        SELECT doc_id, n_toks,
-          COALESCE(SUM(n_toks) OVER (ORDER BY doc_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT
-            AS tok_offset
-        FROM t)
-      SELECT doc_id, n_toks AS n_tokens, tok_offset,
-        tok_offset // 1024 AS seq_id,
-        tok_offset % 1024 AS seq_offset,
-        (tok_offset + greatest(n_toks, 1) - 1) // 1024 AS seq_last
-      FROM c
-      ORDER BY doc_id"""))
+    * winnowing decontamination, and the packing tail — hash-exact. The
+    * dedup survivors (read by the LSH and both joins) and the near-dup
+    * survivors (read by the decontamination probe and s3) are handed
+    * off. */
+  private val q157 = CurationChain.query("q157_curation_chain_full",
+    Recipe(capped = false, None, ShingleLsh, IndexStore.default,
+      handoffs = Set("s1", "s2")),
+    Packed)
 
   /** Attrition report for the UNCAPPED chain — q153's per-stage loss
     * accounting over q157's full-corpus recipe (input → exact →
@@ -2153,141 +1048,12 @@ object DedupQueries extends QueryModule {
     * a production curation run publishes, at production scale posture.
     * Stage frames persist once (the funnel discipline), so stage k's
     * count never recomputes stages 1..k−1. */
-  private val q159 = QueryDef(
-    "q159_chain_attrition_full",
-    (s, d) => {
-      import graft.functions.TextFunctions
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val split = Sampling.split(docs, "doc_id",
-        Seq("train" -> 0.9, "eval" -> 0.1))
-      val train = split.filter(col("split") === "train").drop("split").handoff
-      val evalDocs = split.filter(col("split") === "eval").drop("split")
-      val s1 = Dedup.exact(train, "doc_id", "text")
-        .select(col("doc_id"), col("text")).handoff
-      val prs = Dedup.minhashLsh(s1, "doc_id", "text",
-        shingleK = 3, numHashes = 16, bands = 4, rows = 4,
-        threshold = 0.8, maxBucketSize = 100,
-        index = IndexStore.default,
-        minParallelism = s.sparkContext.defaultParallelism)
-      val s2 = s1.join(prs.select(col("id_b").as("__d")).distinct(),
-        col("doc_id") === col("__d"), "left_anti").handoff
-      val idx = Contamination.fingerprints(evalDocs, "doc_id", "text",
-        maxDf = 50, k = 8, w = 4, index = IndexStore.default,
-        minParallelism = s.sparkContext.defaultParallelism, rollingHash = true)
-      val contam = Contamination.checkAgainstIndex(s2, "doc_id", "text", idx,
-          minShared = 20, k = 8, w = 4,
-          minParallelism = s.sparkContext.defaultParallelism,
-          rollingHash = true)
-        .select(col("test_id").as("__c"))
-      val s3 = s2.join(contam, col("doc_id") === col("__c"), "left_anti")
-      def report(stage: Int, name: String, df: org.apache.spark.sql.DataFrame) =
-        df.agg(count(lit(1)).as("n_docs"),
-            sum(size(TextFunctions.tokens(col("text"))).cast("long"))
-              .as("n_tokens"))
-          .select(lit(stage).as("stage"), lit(name).as("stage_name"),
-            col("n_docs"), coalesce(col("n_tokens"), lit(0L)).as("n_tokens"))
-      Seq(report(0, "input", train), report(1, "exact", s1),
-          report(2, "near_dup", s2), report(3, "decontam", s3))
-        .reduce(_ unionByName _)
-        .orderBy(col("stage"))
-    },
-    Some("""
-      WITH sp AS (
-        SELECT doc_id, text,
-               CASE WHEN ('0x' || substr(md5('graft|' || doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT
-                         < 1037629354146162304 THEN 'train' ELSE 'eval' END AS split
-        FROM documents),
-      tr AS (SELECT doc_id, text FROM sp WHERE split = 'train'),
-      s1 AS (
-        SELECT doc_id, text FROM (
-          SELECT doc_id, text,
-                 row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-          FROM tr) WHERE rn = 1),
-      toks AS (
-        SELECT doc_id AS id,
-               list_filter(string_split_regex(text, '\s+'), x -> length(x) > 0) AS w
-        FROM s1),
-      sets AS (
-        SELECT id, list_distinct(CASE WHEN len(w) >= 3
-                 THEN list_transform(generate_series(1, len(w) - 2),
-                      j -> concat_ws(' ', w[j], w[j+1], w[j+2]))
-                 ELSE [] END) AS sset
-        FROM toks),
-      sets2 AS (SELECT id, sset FROM sets WHERE len(sset) > 0),
-      sigs AS (
-        SELECT id, sset,
-               list_transform(generate_series(0, 15),
-                 i -> list_min(list_transform(sset,
-                      s -> ('0x' || substr(md5(s || '#' || i::VARCHAR), 1, 15))::UBIGINT::BIGINT))) AS sig
-        FROM sets2),
-      bands AS (
-        SELECT id, sset, unnest(list_transform(generate_series(0, 3),
-               b -> b::VARCHAR || ':' ||
-                    (('0x' || substr(md5(array_to_string(sig[4*b+1:4*b+4], ',')), 1, 15))::UBIGINT::BIGINT)::VARCHAR)) AS band
-        FROM sigs),
-      keepb AS (SELECT band FROM bands GROUP BY band HAVING count(*) <= 100),
-      bands2 AS (SELECT b.id, b.sset, b.band FROM bands b JOIN keepb USING (band)),
-      cand AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bands2 a JOIN bands2 b ON a.band = b.band AND a.id < b.id),
-      verified AS (
-        SELECT c.id_a, c.id_b,
-               len(list_intersect(sa.sset, sb.sset)) AS inter,
-               len(sa.sset) AS la, len(sb.sset) AS lb
-        FROM cand c
-        JOIN sets2 sa ON sa.id = c.id_a
-        JOIN sets2 sb ON sb.id = c.id_b),
-      drop2 AS (
-        SELECT DISTINCT id_b FROM verified
-        WHERE inter / (la + lb - inter) >= 0.8),
-      s2 AS (
-        SELECT doc_id, text FROM s1
-        WHERE doc_id NOT IN (SELECT id_b FROM drop2)),
-      g AS (
-        SELECT doc_id,
-               list_transform(generate_series(1, length(text) - 7), i ->
-                 CAST(list_sum(list_transform(generate_series(0, 7), j ->
-                   unicode(substr(text, i + j, 1)) * CAST(31 ** (7 - j) AS BIGINT)))
-                   % 1000000007 AS BIGINT)) AS grams
-        FROM sp),
-      wnd AS (
-        SELECT doc_id,
-               list_sort(list_distinct(CASE WHEN len(grams) >= 4
-                 THEN list_transform(generate_series(1, len(grams) - 3),
-                      j -> list_min(grams[j:j+3]))
-                 ELSE [list_min(grams)] END)) AS wn
-        FROM g WHERE len(grams) > 0),
-      fp AS (SELECT doc_id, unnest(wn) AS f FROM wnd),
-      evalfp AS (
-        SELECT fp.doc_id, fp.f FROM fp
-        JOIN sp USING (doc_id) WHERE sp.split = 'eval'),
-      pruned AS (SELECT f FROM evalfp GROUP BY f HAVING count(*) <= 50),
-      eidx AS (SELECT doc_id AS train_id, f FROM evalfp JOIN pruned USING (f)),
-      hits AS (
-        SELECT s2fp.doc_id
-        FROM (SELECT fp.doc_id, fp.f FROM fp JOIN s2 USING (doc_id)) s2fp
-        JOIN eidx ON s2fp.f = eidx.f
-        GROUP BY s2fp.doc_id, eidx.train_id
-        HAVING count(*) >= 20),
-      s3 AS (
-        SELECT doc_id, text FROM s2
-        WHERE doc_id NOT IN (SELECT DISTINCT doc_id FROM hits)),
-      rep AS (
-        SELECT 0 AS stage, 'input' AS stage_name, count(*) AS n_docs,
-               COALESCE(CAST(sum(len(list_filter(string_split_regex(text, '\s+'),
-                 x -> length(x) > 0))) AS BIGINT), 0) AS n_tokens FROM tr
-        UNION ALL
-        SELECT 1, 'exact', count(*),
-               COALESCE(CAST(sum(len(list_filter(string_split_regex(text, '\s+'),
-                 x -> length(x) > 0))) AS BIGINT), 0) FROM s1
-        UNION ALL
-        SELECT 2, 'near_dup', count(*),
-               COALESCE(CAST(sum(len(list_filter(string_split_regex(text, '\s+'),
-                 x -> length(x) > 0))) AS BIGINT), 0) FROM s2
-        UNION ALL
-        SELECT 3, 'decontam', count(*),
-               COALESCE(CAST(sum(len(list_filter(string_split_regex(text, '\s+'),
-                 x -> length(x) > 0))) AS BIGINT), 0) FROM s3)
-      SELECT stage, stage_name, n_docs, n_tokens FROM rep
-      ORDER BY stage"""))
+  private val q159 = CurationChain.query("q159_chain_attrition_full",
+    Recipe(capped = false, None, ShingleLsh, IndexStore.default,
+      handoffs = Set("train", "s1", "s2")),
+    Attrition)
+
+  override def entries: Seq[QueryDef] =
+    Seq(q40, q41, q42, q43, q44, q45, q46, q82, q89, q99, q100, q105, q112,
+      q116, q118, q127, q143, q146, q148, q149, q153, q157, q159, q166)
 }

@@ -4,14 +4,14 @@ import org.apache.spark.sql.DataFrame
 
 /** Release discipline for chain handoff persists.
   *
-  * The multi-stage curation chains (q118/q127/q148/q153/q157/q159)
-  * persist 3–6 stage frames each so stage k's consumers never recompute
-  * stages 1..k−1 — but the frames are referenced by the LAZY DataFrame
-  * the query returns, so the query builder cannot unpersist them itself
-  * (unpersist before materialization would strip the cache marker and
-  * defeat the handoff). Bare `.persist()` therefore pinned storage for
-  * the session lifetime in any caller that wasn't the bench's
-  * clearCache() loop.
+  * The curation chains ([[CurationChain]]: each recipe names its handoff
+  * frames, and the packing tail adds its sized frame) persist 1–4 stage
+  * frames each so stage k's consumers never recompute stages 1..k−1 —
+  * but the frames are referenced by the LAZY DataFrame the query
+  * returns, so the query builder cannot unpersist them itself (unpersist
+  * before materialization would strip the cache marker and defeat the
+  * handoff). Bare `.persist()` therefore pinned storage for the session
+  * lifetime in any caller that wasn't the bench's clearCache() loop.
   *
   * `df.handoff` registers the persisted frame here; the harness calls
   * [[releaseAll]] AFTER materializing a query (Verify after each
