@@ -2,7 +2,6 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftshim.GraftSqlShim
 import scala.jdk.CollectionConverters._
 
@@ -41,7 +40,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+    val spark = Sessions.builder()
       .master(s"local[$cpus]")
       .appName("graft-bench")
       .withExtensions(new graft.plans.GraftExtensions)

@@ -1,19 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump the formatted physical plan of EVERY declared query in
-  * one session (no execution) and print a one-line summary per query —
-  * Exchange count, join strategies, cartesian products, codegen gaps —
-  * so a round's plan audit can sweep the whole corpus instead of
-  * sampling. Usage: PlanSweep <sfDir> <outDir> [namePrefix...] */
+  * one session and print a one-line summary per query — Exchange count,
+  * join strategies, cartesian products, codegen gaps — so a round's plan
+  * audit can sweep the whole corpus instead of sampling. The final plans
+  * are not executed, but building a query can be: q153/q166 run Spark
+  * jobs that materialize their persisted stage frames while being built,
+  * so their dumped plans (AQE stages, codegen ids, even length) differ
+  * from run to run and cannot be compared byte for byte.
+  * Usage: PlanSweep <sfDir> <outDir> [namePrefix...] */
 object PlanSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
     val only = args.drop(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+    val spark = Sessions.builder()
       .master(s"local[$cpus]")
       .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus)

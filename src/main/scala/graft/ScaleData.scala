@@ -102,7 +102,7 @@ object ScaleData {
     val srcDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val destDir = args.lift(1).getOrElse("/tmp/graft-sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
+    val spark = Sessions.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .appName("graft-scaledata")
       .config("spark.sql.shuffle.partitions", "32")

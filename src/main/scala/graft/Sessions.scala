@@ -14,8 +14,17 @@ import org.apache.spark.sql.SparkSession
   *  - maxPartitionBytes 256m: fewer, fuller input tasks for scan-heavy
   *    lake queries
   *  - UTC session timezone: oracle/engine-portable timestamp semantics
+  *  - `file:` is [[GraftLocalFileSystem]]: the stock modes and checksums
+  *    without a forked `chmod` per file written when `libhadoop` is absent
   */
 object Sessions {
+
+  /** `SparkSession.builder()` with the engine's local filesystem set; every
+    * session of the engine (bench, oracle dump, tests) starts here. It is a
+    * fixed choice, not a tuning knob. */
+  def builder(): SparkSession.Builder =
+    SparkSession.builder()
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
 
   def create(
       appName: String = "graft",
@@ -23,7 +32,7 @@ object Sessions {
       shufflePartitions: Option[Int] = None): SparkSession = {
     val parts = shufflePartitions.getOrElse(
       Runtime.getRuntime.availableProcessors())
-    val spark = SparkSession.builder()
+    val spark = builder()
       .master(master)
       .appName(appName)
       .withExtensions(new graft.plans.GraftExtensions)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,7 +7,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet // optional subset for local iteration
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val spark = Sessions.builder()
       .master(s"local[$cpus]")
       .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus)

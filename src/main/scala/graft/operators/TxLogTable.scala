@@ -188,25 +188,16 @@ object TxLogTable {
   }
 
   /** Parquet files under `dir` (recursive — hive partition layouts nest
-    * `k=v` subdirs), as (dir-relative path, size-in-bytes). The sizes
-    * ride along from the `listStatus` the walk performs anyway — they
-    * are what the commit entry records so readers never re-stat data
-    * files. Walks with plain `listStatus`, not `listFiles(recursive)`:
-    * the located-status API eagerly loads permission info through
-    * java.io.File and breaks on non-file schemes that delegate to the
-    * raw local FS. */
+    * `k=v` subdirs; a [[graft.FsWalk]] walk), as (dir-relative path,
+    * size-in-bytes). The sizes ride along from the walk's `listStatus` —
+    * they are what the commit entry records so readers never re-stat
+    * data files. */
   private def listParquet(fs: FileSystem, dir: HPath): Seq[(String, Long)] = {
     val base = dir.toUri.getPath
-    def walk(d: HPath): Seq[(String, Long)] =
-      fs.listStatus(d).toSeq.flatMap { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory && !name.startsWith(".")) walk(st.getPath)
-        else if (st.isFile && name.endsWith(".parquet") && !name.startsWith("."))
-          Seq((st.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/"),
-            st.getLen))
-        else Seq.empty
-      }
-    walk(dir)
+    graft.FsWalk.files(fs, dir).collect {
+      case st if st.getPath.getName.endsWith(".parquet") && !st.getPath.getName.startsWith(".") =>
+        (st.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/"), st.getLen)
+    }
   }
 
   // ---- per-file min/max stats (the Delta data-skipping sidecar) ----

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import graft.FsWalk
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Per-batch commit plumbing shared by the foreachBatch gates
@@ -89,28 +90,29 @@ private[graft] object BatchCommits {
 
   /** All files a given (scope, batch) has published into `dir`
     * (recursive, so partitioned layouts are covered). Empty when `dir`
-    * doesn't exist. Safe while other publishers work in `dir`: the walk
-    * skips `.`/`_` directories (their staging and committer dirs), treats
-    * a directory that vanished mid-walk as empty, and uses plain
-    * `listStatus` — `listFiles(recursive)` loads each entry's permissions
-    * eagerly and fails on an entry deleted under it. */
+    * doesn't exist. Safe while other publishers work in `dir`: the
+    * [[graft.FsWalk]] walk skips their `.`/`_` staging and committer
+    * dirs and reads a directory that vanished mid-walk as empty. */
   def publishedFiles(spark: SparkSession, dir: String, scope: String,
       batchId: Long): Seq[Path] = {
     val (fs, target) = fileSystem(spark, dir)
     val prefix = s"part-$scope-b$batchId-"
-    def walk(d: Path): Seq[Path] = {
-      val entries = try fs.listStatus(d)
-        catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
-      entries.toSeq.flatMap { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory) {
-          if (name.startsWith(".") || name.startsWith("_")) Nil else walk(st.getPath)
-        } else if (name.startsWith(prefix)) Seq(st.getPath)
-        else Nil
-      }
-    }
-    walk(target)
+    val all = try FsWalk.files(fs, target)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    all.map(_.getPath).filter(_.getName.startsWith(prefix))
   }
+
+  /** Renames every `part-` file written under `staging` into the same
+    * partition dir under `target`, the i-th as `name(i)`. */
+  private[streaming] def moveStaged(fs: FileSystem, staging: Path, target: Path)(
+      name: Int => String): Unit =
+    FsWalk.files(fs, staging).map(_.getPath)
+      .filter(_.getName.startsWith("part-")).zipWithIndex.foreach { case (f, i) =>
+        val rel = relativeDir(staging, f)
+        val destDir = if (rel.isEmpty) target else new Path(target, rel)
+        fs.mkdirs(destDir)
+        renameOrThrow(fs, f, new Path(destDir, name(i)))
+      }
 
   /** Offline compaction for a hive-partitioned per-batch-published index:
     * rewrites the dir so each partition holds one file, preserving the
@@ -132,15 +134,8 @@ private[graft] object BatchCommits {
       targetFiles: Int = 0): Unit = {
     val (fs, target) = fileSystem(spark, dir)
     if (!fs.exists(target)) return
-    val old = {
-      val out = Seq.newBuilder[Path]
-      val it = fs.listFiles(target, true)
-      while (it.hasNext) {
-        val f = it.next().getPath
-        if (f.getName.startsWith("part-")) out += f
-      }
-      out.result()
-    }
+    val old = FsWalk.files(fs, target).map(_.getPath)
+      .filter(_.getName.startsWith("part-"))
     if (old.isEmpty) return
     val staging = new Path(target, ".compact")
     import org.apache.spark.sql.functions.{col => fc}
@@ -160,18 +155,7 @@ private[graft] object BatchCommits {
     laidOut.write.mode(SaveMode.Overwrite)
       .partitionBy(partitionCol).parquet(staging.toString)
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    var i = 0
-    val it = fs.listFiles(staging, true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.startsWith("part-")) {
-        val rel = relativeDir(staging, f)
-        val destDir = if (rel.isEmpty) target else new Path(target, rel)
-        fs.mkdirs(destDir)
-        renameOrThrow(fs, f, new Path(destDir, s"part-compact-$runId-$i.parquet"))
-        i += 1
-      }
-    }
+    moveStaged(fs, staging, target)(i => s"part-compact-$runId-$i.parquet")
     fs.delete(staging, true)
     old.foreach(f => fs.delete(f, false))
   }
@@ -194,15 +178,7 @@ private[graft] object BatchCommits {
       .coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(staging.toString)
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    var i = 0
-    val it = fs.listFiles(staging, false)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.startsWith("part-")) {
-        renameOrThrow(fs, f, new Path(target, s"part-compact-$runId-$i.parquet"))
-        i += 1
-      }
-    }
+    moveStaged(fs, staging, target)(i => s"part-compact-$runId-$i.parquet")
     fs.delete(staging, true)
     old.foreach(f => fs.delete(f, false))
   }
@@ -221,18 +197,7 @@ private[graft] object BatchCommits {
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(staging.toString)
     publishedFiles(spark, dir, scope, batchId).foreach(f => fs.delete(f, false))
-    var i = 0
-    val it = fs.listFiles(staging, true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.startsWith("part-")) {
-        val rel = relativeDir(staging, f)
-        val destDir = if (rel.isEmpty) target else new Path(target, rel)
-        fs.mkdirs(destDir)
-        renameOrThrow(fs, f, new Path(destDir, s"part-$scope-b$batchId-$i.parquet"))
-        i += 1
-      }
-    }
+    moveStaged(fs, staging, target)(i => s"part-$scope-b$batchId-$i.parquet")
     fs.delete(staging, true)
   }
 }

@@ -203,21 +203,7 @@ object StreamingDedupGate {
       .partitionBy("hp").parquet(staging.toString)
     // rename-in before delete-old: a crash can only duplicate a hash
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    var i = 0
-    val it = fs.listFiles(staging, true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.startsWith("part-")) {
-        val rel = f.getParent.toUri.getPath
-          .stripPrefix(staging.toUri.getPath).stripPrefix("/")
-        val destDir =
-          if (rel.isEmpty) p else new org.apache.hadoop.fs.Path(p, rel)
-        fs.mkdirs(destDir)
-        BatchCommits.renameOrThrow(fs, f,
-          new org.apache.hadoop.fs.Path(destDir, s"part-migrate-$runId-$i.parquet"))
-        i += 1
-      }
-    }
+    BatchCommits.moveStaged(fs, staging, p)(i => s"part-migrate-$runId-$i.parquet")
     fs.delete(staging, true)
     flatFiles.foreach(f => fs.delete(f, false))
   }

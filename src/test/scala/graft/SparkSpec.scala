@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * sequentially under sbt's default test execution). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = Sessions.builder()
       .master("local[8]")
       .appName("graft-test")
       .withExtensions(new graft.plans.GraftExtensions)
