@@ -1,7 +1,10 @@
 package graft
 
+import java.net.URI
 import java.nio.file.Files
-import org.apache.hadoop.fs.{FileStatus, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FileSystem, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** The engine's `file:` filesystem (installed by [[Sessions]]): Hadoop's
@@ -33,6 +36,26 @@ object GraftLocalFileSystem {
       val kept = if ((mode & TypeMask) == Directory) mode & SetIdBits else 0
       Files.setAttribute(file, "unix:mode", Int.box((permission.toShort & 0xfff) | kept))
     }
+  }
+}
+
+/** [[GraftLocalFileSystem]] for Hadoop's `FileContext` API (installed by
+  * [[Sessions]] as `file:`'s `AbstractFileSystem`), which Structured
+  * Streaming writes its checkpoints through. The stock `LocalFs` is the
+  * same checksummed layer over a delegate to its own
+  * `RawLocalFileSystem`, which forks `chmod` for every checkpoint file,
+  * its `.crc` and each directory made. */
+class GraftLocalFs(uri: URI, conf: Configuration)
+    extends ChecksumFs(new GraftLocalFs.Raw(uri, conf))
+
+object GraftLocalFs {
+  /** `RawLocalFs` over [[GraftLocalFileSystem.Raw]]. */
+  class Raw(uri: URI, conf: Configuration) extends DelegateToFileSystem(uri,
+      new GraftLocalFileSystem.Raw, conf, FsConstants.LOCAL_FS_URI.getScheme, false) {
+    override def getUriDefaultPort: Int = -1
+    override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults
+    override def getServerDefaults: FsServerDefaults = LocalConfigKeys.getServerDefaults
+    override def isValidName(src: String): Boolean = true
   }
 }
 

@@ -14,8 +14,9 @@ import org.apache.spark.sql.SparkSession
   *  - maxPartitionBytes 256m: fewer, fuller input tasks for scan-heavy
   *    lake queries
   *  - UTC session timezone: oracle/engine-portable timestamp semantics
-  *  - `file:` is [[GraftLocalFileSystem]]: the stock modes and checksums
-  *    without a forked `chmod` per file written when `libhadoop` is absent
+  *  - `file:` is [[GraftLocalFileSystem]] (and [[GraftLocalFs]] for
+  *    `FileContext`): the stock modes and checksums without a forked
+  *    `chmod` per file written when `libhadoop` is absent
   */
 object Sessions {
 
@@ -25,6 +26,7 @@ object Sessions {
   def builder(): SparkSession.Builder =
     SparkSession.builder()
       .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[GraftLocalFs].getName)
 
   def create(
       appName: String = "graft",

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 
+import TxLogFormat.quote
+
 /** Delta-protocol mirror of a [[TxLogTable]] log — the external-reader
   * interop the reference gets by writing real Delta tables
   * (delta_writer.py:88-94). Every graft commit also publishes a
@@ -42,16 +44,6 @@ object DeltaInterop {
   private def tableId(fs: FileSystem, root: HPath): String =
     java.util.UUID.nameUUIDFromBytes(
       fs.makeQualified(root).toString.getBytes("UTF-8")).toString
-
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => "\\u%04x".format(c.toInt)
-    case c => c.toString
-  }
 
   private def protocolAction: String =
     """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
@@ -93,7 +85,7 @@ object DeltaInterop {
   private def metaDataAction(fs: FileSystem, root: HPath, schemaJson: String,
       ts: Long): String =
     s"""{"metaData":{"id":"${tableId(fs, root)}","format":{"provider":"parquet","options":{}},""" +
-      s""""schemaString":"${esc(schemaJson)}","partitionColumns":[],""" +
+      s""""schemaString":${quote(schemaJson)},"partitionColumns":[],""" +
       s""""configuration":{},"createdTime":$ts}}"""
 
   /** Physical size of a data file, None when it no longer exists (a
@@ -105,11 +97,11 @@ object DeltaInterop {
     catch { case _: java.io.FileNotFoundException => None }
 
   private def addAction(file: String, size: Long, ts: Long): String =
-    s"""{"add":{"path":"${esc(file)}","partitionValues":{},"size":$size,""" +
+    s"""{"add":{"path":${quote(file)},"partitionValues":{},"size":$size,""" +
       s""""modificationTime":$ts,"dataChange":true}}"""
 
   private def removeAction(file: String, ts: Long): String =
-    s"""{"remove":{"path":"${esc(file)}","deletionTimestamp":$ts,"dataChange":true}}"""
+    s"""{"remove":{"path":${quote(file)},"deletionTimestamp":$ts,"dataChange":true}}"""
 
   /** Publish the Delta mirror entry for native version `v`. Called by
     * [[TxLogTable.append]]/[[TxLogTable.compact]] after the native
@@ -153,7 +145,7 @@ object DeltaInterop {
     // the idempotent-append identifier, as the protocol's SetTransaction —
     // external delta writers resuming this appId see the same watermark
     txn.foreach { case (app, tv) =>
-      actions += s"""{"txn":{"appId":"${esc(app)}","version":$tv}}"""
+      actions += s"""{"txn":{"appId":${quote(app)},"version":$tv}}"""
     }
     // one metaData per commit keeps the latest schema authoritative
     // (legal per the protocol: at most one metaData action per version)
@@ -202,11 +194,9 @@ object DeltaInterop {
     val missing = TxLogTable.allVersions(path)
       .filter(_ <= upTo).filterNot(present)
     missing.foreach { v =>
-      val (added, removed) =
-        if (TxLogTable.versionIsRebase(path, v))
-          (TxLogTable.versionFiles(path, v),
-            TxLogTable.filesAt(path, v - 1))
-        else (TxLogTable.versionFiles(path, v), Seq.empty[String])
+      val entry = TxLogTable.entryAt(path, v)
+      val removed =
+        if (entry.rebase) TxLogTable.filesAt(path, v - 1) else Seq.empty[String]
       val schemaJson =
         try TxLogTable.readVersion(spark, path, v).schema.json
         catch {
@@ -217,8 +207,8 @@ object DeltaInterop {
         }
       // the throwing variant: a backfill is explicitly asked for, so a
       // failure must surface, unlike the best-effort per-commit mirror
-      mirrorOrThrow(spark, path, v, added, removed, schemaJson, cp,
-        TxLogTable.versionTxn(path, v))
+      mirrorOrThrow(spark, path, v, entry.paths, removed, schemaJson, cp,
+        entry.txn)
     }
     missing
   }

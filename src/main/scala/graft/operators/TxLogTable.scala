@@ -4,6 +4,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
+import TxLogFormat.{Checkpoint, CommitEntry, LogFile}
+
 /** Minimal transaction-logged append table ("graft-log") — restores the
   * ACID properties the reference gets from Delta Lake (delta_writer.py:
   * 88-94) in an environment without delta jars:
@@ -58,6 +60,13 @@ object TxLogTable {
   private def readString(fs: FileSystem, p: HPath): String = {
     val in = fs.open(p)
     try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  private def entryPath(root: HPath, v: Long) = new HPath(logDir(root), s"$v.json")
+
+  private def readEntry(fs: FileSystem, root: HPath, v: Long): CommitEntry = {
+    val p = entryPath(root, v)
+    CommitEntry.parse(readString(fs, p), p.toString)
   }
 
   private def writeString(fs: FileSystem, p: HPath, s: String,
@@ -242,36 +251,22 @@ object TxLogTable {
     * staged slice would double write-path I/O on every commit,
     * including the streaming-append hot path). Falls back to one
     * aggregate pass over the staged slice if footer harvesting fails.
-    * Underscore-prefixed: invisible to parquet reads and to the log's
-    * file regex; lives and dies with the data dir through
-    * compaction/vacuum. BEST-EFFORT: a stats failure must not fail the
-    * commit — a file without stats simply always scans ([[readWhere]]
-    * keeps it). `files` are the dir's parquet files, dataDir-relative.
+    * Underscore-prefixed: invisible to parquet reads; lives and dies
+    * with the data dir through compaction/vacuum. BEST-EFFORT: a stats
+    * failure must not fail the commit — a file without stats simply
+    * always scans ([[readWhere]] keeps it). `files` are the dir's parquet files, dataDir-relative.
     * Returns each file's row count from the same footers (read for it
     * alone when no column takes stats); empty when the harvest failed. */
   private def writeFileStats(spark: SparkSession, fs: FileSystem,
       dataDir: HPath, files: Seq[String],
       schema: org.apache.spark.sql.types.StructType): Map[String, Long] =
     try {
-      import org.json4s.JsonDSL._
-      import org.json4s.jackson.JsonMethods
       val cols = schema.fields.filter(f => statsSupported(f.dataType))
       // keys are dataDir-RELATIVE paths (hive layouts nest k=v subdirs)
       val footers = files.map(rel =>
         rel -> footerBounds(fs.getConf, new HPath(dataDir, rel), cols))
-      val perFile: org.json4s.JObject = org.json4s.JObject(footers.toList.map {
-        case (rel, (_, bounds)) =>
-          val colsJson = org.json4s.JObject(cols.toList.flatMap { f =>
-            bounds.get(f.name).map { case (mn, mx) =>
-              f.name -> ((("min" -> mn) ~ ("max" -> mx)): org.json4s.JValue)
-            }
-          })
-          rel -> (colsJson: org.json4s.JValue)
-      })
       if (cols.nonEmpty)
-        writeString(fs, new HPath(dataDir, "_stats.json"),
-          JsonMethods.compact(JsonMethods.render(
-            org.json4s.JObject("files" -> perFile))), overwrite = true)
+        writeStats(fs, dataDir, cols, footers.map { case (rel, (_, b)) => rel -> b })
       footers.map { case (rel, (rows, _)) => rel -> rows }.toMap
     } catch {
       case scala.util.control.NonFatal(e) =>
@@ -434,8 +429,6 @@ object TxLogTable {
       dataDir: HPath, schema: org.apache.spark.sql.types.StructType): Unit =
     try {
       import org.apache.spark.sql.functions.{col => fcol, input_file_name, max => fmax, min => fmin}
-      import org.json4s.JsonDSL._
-      import org.json4s.jackson.JsonMethods
       val cols = schema.fields.filter(f => statsSupported(f.dataType))
       if (cols.isEmpty) return
       val aggs = cols.flatMap { f =>
@@ -447,35 +440,31 @@ object TxLogTable {
         .agg(aggs.head, aggs.tail: _*)
         .collect()
       val base = dataDir.toUri.getPath
-      val perFile: org.json4s.JObject = org.json4s.JObject(rows.toList.map { r =>
-        val fname = new java.net.URI(r.getString(0)).getPath
-          .stripPrefix(base).stripPrefix("/")
-        val colsJson = org.json4s.JObject(cols.toList.flatMap { f =>
+      writeStats(fs, dataDir, cols, rows.toSeq.map { r =>
+        new java.net.URI(r.getString(0)).getPath
+          .stripPrefix(base).stripPrefix("/") -> cols.flatMap { f =>
           for {
             mn <- statScalar(r.getAs[Any](s"__min_${f.name}"))
             mx <- statScalar(r.getAs[Any](s"__max_${f.name}"))
-          } yield f.name -> (("min" -> mn) ~ ("max" -> mx))
-        })
-        fname -> (colsJson: org.json4s.JValue)
+          } yield f.name -> ((mn, mx))
+        }.toMap
       })
-      writeString(fs, new HPath(dataDir, "_stats.json"),
-        JsonMethods.compact(JsonMethods.render(
-          org.json4s.JObject("files" -> perFile))), overwrite = true)
     } catch {
       case scala.util.control.NonFatal(e) =>
         System.err.println(
           s"[graft] stats for $dataDir skipped (files will always scan): $e")
     }
 
-  /** Publish one atomic commit. `rebase = true` marks the entry as a full
-    * replacement of the accumulated file list (compaction); rebase
-    * commits require the log to still be at `expectedVersion` — the
-    * commit point either wins the exact next version or the rebase
-    * aborts, because retrying at a later number would silently drop
-    * whatever a concurrent append just published. `txn` stamps the entry
-    * with an (appId, txnVersion) transaction identifier (the delta
-    * protocol's SetTransaction), the hook idempotent streaming writers
-    * key their replay checks on. */
+  /** `dir/_stats.json` for `files` (dir-relative, in order), each with
+    * its bounded columns in schema order. */
+  private def writeStats(fs: FileSystem, dir: HPath,
+      cols: Seq[org.apache.spark.sql.types.StructField],
+      files: Seq[(String, TxLogFormat.Bounds)]): Unit =
+    writeString(fs, new HPath(dir, "_stats.json"),
+      TxLogFormat.renderStats(files.map { case (rel, bounds) =>
+        rel -> cols.flatMap(f => bounds.get(f.name).map(f.name -> _))
+      }), overwrite = true)
+
   /** Shared SetTransaction pre-commit: validates the appId and returns
     * Some(currentVersion) when the transaction already committed at or
     * past its version — the caller returns it without staging anything.
@@ -484,25 +473,29 @@ object TxLogTable {
       txn: Option[(String, Long)]): Option[Long] =
     txn.flatMap { case (app, tv) =>
       require(app.matches("[A-Za-z0-9_:/.@=-]+"),
-        s"txn appId must be JSON-literal-safe, got '$app'")
-      // the log parser extracts file names by their data- prefix from the
-      // whole entry; an appId that looks like one would be read back as a
-      // phantom data file and break every snapshot of the table
-      require(!app.startsWith("data-"),
-        s"txn appId must not start with 'data-', got '$app'")
+        s"txn appId must match [A-Za-z0-9_:/.@=-]+, got '$app'")
       if (lastTxnVersion(fs, root, app).exists(_ >= tv))
         Some(versions(fs, root).lastOption.getOrElse(-1L))
       else None
     }
 
-  /** `sizes` maps log-relative paths to physical byte sizes; a file with
-    * a known size publishes as `{"p":path,"s":size}` so readers (the
-    * log-backed FileIndex, the Delta mirror, compaction sizing) never
-    * re-stat immutable data files — the Delta protocol's `add.size`.
-    * Files absent from the map publish in the legacy bare-string form
-    * and readers fall back to one `getFileStatus` for exactly those
-    * (pre-size logs stay readable forever). */
-  /** `cleanupDirs`: the data dirs THIS commit freshly staged — deleted
+  /** Publish one atomic commit ([[TxLogFormat.CommitEntry]]).
+    * `rebase = true` marks the entry as a full replacement of the
+    * accumulated file list (compaction); rebase commits require the log
+    * to still be at `expectedVersion` — the commit point either wins the
+    * exact next version or the rebase aborts, because retrying at a
+    * later number would silently drop whatever a concurrent append just
+    * published. `txn` stamps the entry with an (appId, txnVersion)
+    * transaction identifier (the delta protocol's SetTransaction), the
+    * hook idempotent streaming writers key their replay checks on.
+    *
+    * `sizes` maps log-relative paths to physical byte sizes, recorded so
+    * readers (the log-backed FileIndex, the Delta mirror, compaction
+    * sizing) never re-stat immutable data files — the Delta protocol's
+    * `add.size`; a file absent from the map is listed without one and
+    * readers fall back to one `getFileStatus` for it.
+    *
+    * `cleanupDirs`: the data dirs THIS commit freshly staged — deleted
     * when the commit definitively does not publish them (a pinned CAS
     * loses its race, the SetTransaction replay check fires mid-commit,
     * or retries exhaust). Without this, every lost change-feed CAS
@@ -544,35 +537,16 @@ object TxLogTable {
           return v - 1
         }
       }
-      val flag = if (rebase) """"rebase":true,""" else ""
-      val txnField = txn.map { case (app, tv) =>
-        s""""txn":["$app",$tv],""" }.getOrElse("")
-      // commit wall-clock, the timestampAsOf anchor ([[versionAsOf]]
+      // ts: commit wall-clock, the timestampAsOf anchor ([[versionAsOf]]
       // monotonizes on read, so clock skew between committers cannot
-      // reorder history against version order) + the operation name
-      // (the DESCRIBE HISTORY surface; ops are a fixed enum, never
-      // caller-supplied strings, so the JSON stays literal-safe)
-      val tsField = s""""ts":${System.currentTimeMillis()},"op":"$op","""
-      // the READ-BACK snapshot schema as of this commit (when the
-      // committer can assert it — [[appendSchema]]) — Delta's metaData
-      // action: a fresh relation resolves its schema from this one
-      // entry instead of a mergeSchema footer sweep over every file
-      val schemaField = schemaJson
-        .map(s => s""""schema":"${escJson(s)}",""").getOrElse("")
-      // deletion vectors, BEFORE the files array so the file-name
-      // parser's scope ([[filesArray]]) never reads a dv path as a
-      // snapshot file; only rebase entries carry state ([[stateUpTo]])
-      val dvField =
-        if (dvs.isEmpty) ""
-        else dvs.toSeq.sortBy(_._1).map { case (f, (d, n)) =>
-          s"""{"f":"$f","d":"$d","n":$n}"""
-        }.mkString(""""dvs":[""", ",", "],")
-      val entry = files.map(f => sizes.get(f) match {
-        case Some(s) => s"""{"p":"$f","s":$s}"""
-        case None => "\"" + f + "\""
-      }).mkString(
-        s"""{"version":$v,$tsField$flag$txnField$schemaField$dvField"files":[""",
-        ",", "]}")
+      // reorder history against version order); schema: the READ-BACK
+      // snapshot schema as of this commit (when the committer can
+      // assert it — [[appendSchema]]) — Delta's metaData action: a
+      // fresh relation resolves its schema from this one entry instead
+      // of a mergeSchema footer sweep over every file
+      val entry = CommitEntry(v, Some(System.currentTimeMillis()), Some(op),
+        rebase, txn, schemaJson, dvs,
+        files.map(f => LogFile(f, sizes.get(f)))).render
       // the commit point: publish-iff-absent (hard link locally,
       // no-replace rename on HDFS, conditional put on object stores)
       if (cp.putIfAbsent(fs, logDir(root), s"$v.json", entry)) {
@@ -591,7 +565,7 @@ object TxLogTable {
       // spinning without waiting burns every retry against the same
       // version (bounded — a winner whose upload failed releases its
       // claim and never publishes, so the retry must eventually proceed)
-      val taken = new HPath(logDir(root), s"$v.json")
+      val taken = entryPath(root, v)
       val deadline = System.currentTimeMillis() + 10000
       while (!fs.exists(taken) && System.currentTimeMillis() < deadline)
         Thread.sleep(10)
@@ -645,7 +619,7 @@ object TxLogTable {
       cleanupDirs: Seq[String], dvs: Map[String, (String, Long)],
       appendCompatible: Seq[String] => Boolean,
       maxConflictRetries: Int = 5,
-      interEntriesOk: Seq[String] => Boolean = _ => true): Long = {
+      interEntriesOk: Seq[CommitEntry] => Boolean = _ => true): Long = {
     def cleanStaged(): Unit = cleanupDirs.foreach { d =>
       try fs.delete(new HPath(root, d), true)
       catch { case scala.util.control.NonFatal(_) => () }
@@ -686,9 +660,8 @@ object TxLogTable {
               head = versions(fs, root).lastOption.getOrElse(-1L)
             }
             if (head <= base) { cleanStaged(); throw e }
-            val inter = (base + 1 to head).map(ver =>
-              readString(fs, new HPath(logDir(root), s"$ver.json")))
-            if (inter.exists(isRebase)) {
+            val inter = (base + 1 to head).map(readEntry(fs, root, _))
+            if (inter.exists(_.rebase)) {
               cleanStaged()
               throw new java.util.ConcurrentModificationException(
                 s"$op at $root lost to a concurrent listing-replacing " +
@@ -705,7 +678,7 @@ object TxLogTable {
                   s"($base, $head] whose recorded schema this " +
                   "operation cannot carry; re-run against the new head")
             }
-            val newFiles = inter.flatMap(fileList)
+            val newFiles = inter.flatMap(_.paths)
             if (!appendCompatible(newFiles)) {
               cleanStaged()
               throw new java.util.ConcurrentModificationException(
@@ -714,9 +687,8 @@ object TxLogTable {
                   "this operation read (stats could not exclude them)")
             }
             extra = extra ++ newFiles
-            extraSizes = extraSizes ++
-              inter.map(fileSizes).reduceOption(_ ++ _).getOrElse(Map.empty)
-            schema = remergedSchema(schema, inter.map(recordedSchema))
+            extraSizes = extraSizes ++ inter.flatMap(_.sizes)
+            schema = remergedSchema(schema, inter.map(_.structType))
             base = head
           } catch {
             case e2: java.util.ConcurrentModificationException => throw e2
@@ -934,13 +906,11 @@ object TxLogTable {
       files: Seq[String],
       dataSchema: org.apache.spark.sql.types.StructType): Unit =
     try {
-      import org.json4s.JsonDSL._
-      import org.json4s.jackson.JsonMethods
       val cols = dataSchema.fields.filter(f => statsSupported(f.dataType))
       if (cols.isEmpty) return
       val conf = fs.getConf
       val out = new java.util.concurrent.ConcurrentHashMap[String,
-        Map[String, (org.json4s.JValue, org.json4s.JValue)]]()
+        TxLogFormat.Bounds]()
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(32, math.max(1, Runtime.getRuntime.availableProcessors())))
       try {
@@ -954,20 +924,8 @@ object TxLogTable {
         }
         tasks.foreach(_.get())
       } finally pool.shutdown()
-      val perFile: org.json4s.JObject = org.json4s.JObject(
-        files.toList.flatMap { rel =>
-          Option(out.get(rel)).filter(_.nonEmpty).map { bounds =>
-            rel -> (org.json4s.JObject(cols.toList.flatMap { f =>
-              bounds.get(f.name).map { case (mn, mx) =>
-                f.name -> ((("min" -> mn) ~ ("max" -> mx))
-                  : org.json4s.JValue)
-              }
-            }): org.json4s.JValue)
-          }
-        })
-      writeString(fs, new HPath(root, "_stats.json"),
-        JsonMethods.compact(JsonMethods.render(
-          org.json4s.JObject("files" -> perFile))), overwrite = true)
+      writeStats(fs, root, cols, files.flatMap(rel =>
+        Option(out.get(rel)).filter(_.nonEmpty).map(rel -> _)))
     } catch {
       case scala.util.control.NonFatal(e) =>
         System.err.println(
@@ -1177,8 +1135,8 @@ object TxLogTable {
           curV, curSt, liveBin, targetFileMB, commit, Seq.empty, 8,
           targetFiles = 0, partitionBy = Seq.empty, scoped = true)
         if (v == curV + 1) {
-          curSt = LogState(curSt.files.diff(liveBin) ++ stagedF,
-            curSt.sizes ++ stagedS, curSt.dvs -- liveBin)
+          curSt = curSt.copy(files = curSt.files.diff(liveBin) ++ stagedF,
+            sizes = curSt.sizes ++ stagedS, dvs = curSt.dvs -- liveBin)
           curV = v
         } else { curV = v; curSt = stateUpTo(fs, root, v) }
         Some(v)
@@ -1197,8 +1155,9 @@ object TxLogTable {
     // the caller stamps __f = input_file_name() on the SNAPSHOT scan
     // before any join (the expression is single-source: stamping after
     // a join with another file source is ambiguous and rejected)
+    // __f is a URI: a name's quote or backslash arrives %-escaped
     val hit = probe.select(org.apache.spark.sql.functions.col("__f"))
-      .distinct().collect().map(_.getString(0)).toSet
+      .distinct().collect().map(r => new java.net.URI(r.getString(0)).getPath)
     all.filter(rel => hit.exists(_.endsWith("/" + rel)))
   }
 
@@ -2268,19 +2227,12 @@ object TxLogTable {
         val phys = physicalNameOf(f)
         if (i == idx) stamped(f.copy(name = to), phys) else stamped(f, phys)
       })
-    // CONFLICT-SURVIVABLE like [[addColumns]], with one extra gate: an
-    // interleaved append is carried by reference ONLY when its recorded
-    // schema proves it did not widen the table (the rename's pinned
-    // mapping recording would otherwise hide the new column); a
-    // widening or recording-less append aborts conservatively
-    val baseNames = base.fieldNames.map(_.toLowerCase).toSet
-    val nonWidening: Seq[String] => Boolean = entries =>
-      entries.forall(e => recordedSchema(e).exists(
-        _.fieldNames.forall(n => baseNames(n.toLowerCase))))
+    // CONFLICT-SURVIVABLE like [[addColumns]], with one extra gate
+    // ([[nonWidening]])
     val v = commitRebaseRetry(fs, root, v0, st.files.sorted, commit,
       txn = None, op = "renamecolumn", sizes = st.sizes,
       schemaJson = Some(renamed.json), cleanupDirs = Nil, dvs = st.dvs,
-      appendCompatible = _ => true, interEntriesOk = nonWidening)
+      appendCompatible = _ => true, interEntriesOk = nonWidening(base))
     DeltaInterop.disable(path,
       s"version $v renamed column $from to $to via column mapping; " +
         "the JSON-action mirror cannot express logical-to-physical " +
@@ -2311,22 +2263,30 @@ object TxLogTable {
     val narrowed = org.apache.spark.sql.types.StructType(
       base.fields.filterNot(_.name.equalsIgnoreCase(name))
         .map(f => stamped(f, physicalNameOf(f))))
-    // same conflict posture as [[renameColumn]]: appends carry by
-    // reference iff provably non-widening (their recorded columns may
-    // include the dropped one — the mapping projection suppresses it)
-    val baseNames = base.fieldNames.map(_.toLowerCase).toSet
-    val nonWidening: Seq[String] => Boolean = entries =>
-      entries.forall(e => recordedSchema(e).exists(
-        _.fieldNames.forall(n => baseNames(n.toLowerCase))))
+    // same conflict posture as [[renameColumn]] (an append's recorded
+    // columns may include the dropped one — the mapping projection
+    // suppresses it)
     val v = commitRebaseRetry(fs, root, v0, st.files.sorted, commit,
       txn = None, op = "dropcolumn", sizes = st.sizes,
       schemaJson = Some(narrowed.json), cleanupDirs = Nil, dvs = st.dvs,
-      appendCompatible = _ => true, interEntriesOk = nonWidening)
+      appendCompatible = _ => true, interEntriesOk = nonWidening(base))
     DeltaInterop.disable(path,
       s"version $v dropped column $name via column mapping; the " +
         "JSON-action mirror cannot express it and external readers " +
         "would keep serving the dropped bytes")
     v
+  }
+
+  /** The column-mapping DDLs' gate on interleaved commits: an append is
+    * carried by reference ONLY when its recorded schema proves it did
+    * not widen the table past `base` (the DDL's pinned mapping
+    * recording would otherwise hide the new column); a widening or
+    * recording-less append aborts conservatively. */
+  private def nonWidening(base: org.apache.spark.sql.types.StructType)
+      : Seq[CommitEntry] => Boolean = {
+    val baseNames = base.fieldNames.map(_.toLowerCase).toSet
+    _.forall(_.structType.exists(
+      _.fieldNames.forall(n => baseNames(n.toLowerCase))))
   }
 
   /** Fold every deletion vector into a rewrite — the delta world's
@@ -2534,7 +2494,7 @@ object TxLogTable {
     // (each under its own dv view) and the net-count diff isolates
     // exactly the newly-masked rows as deletes.
     val st1 =
-      if (fromVersion < 0) LogState(Seq.empty, Map.empty, Map.empty)
+      if (fromVersion < 0) LogState(Seq.empty, Map.empty, Map.empty, Map.empty)
       else stateUpTo(fs, root, fromVersion)
     val st2 = stateUpTo(fs, root, toVersion)
     val s1 = st1.files.map(f => (f, st1.dvs.get(f))).toSet
@@ -2825,8 +2785,7 @@ object TxLogTable {
     require(v >= 0, s"no committed table at $path")
     val st = stateUpTo(fs, root, v)
     val parts = partColsOf(st.files)
-    val ops = history(path).map { case (ver, _) =>
-      opOf(path, ver).getOrElse("append") }
+    val ops = historyEntries(fs, root).map(_._3.op.getOrElse("append"))
       .groupBy(identity).view.mapValues(_.size.toLong).toMap
     Seq((path, v, st.files.size.toLong,
       st.files.flatMap(st.sizes.get).sum,
@@ -2902,12 +2861,6 @@ object TxLogTable {
     history(path).collectFirst {
       case (v, ts) if ts >= cutoff => v
     }.getOrElse(currentVersion(path))
-  }
-
-  private def opOf(path: String, v: Long): Option[String] = {
-    val (fs, root) = fsFor(path)
-    OpRe.findFirstMatchIn(
-      readString(fs, new HPath(logDir(root), s"$v.json"))).map(_.group(1))
   }
 
   // ---- table properties (Delta's metaData.configuration) ----
@@ -3016,7 +2969,8 @@ object TxLogTable {
     require(v >= 0 && v <= head, s"clone version $v outside [0, $head]")
     val (dfs, droot) = fsFor(dest)
     require(!dfs.exists(logDir(droot)), s"$dest is already a table")
-    val (files, srcSizes) = filesAndSizesUpTo(sfs, sroot, v)
+    val src = stateUpTo(sfs, sroot, v)
+    val (files, srcSizes, srcDvs) = (src.files, src.sizes, src.dvs)
     val conf = hadoopConf()
     def linkOrCopy(rel: String): Unit = {
       val src = new HPath(sroot, rel)
@@ -3040,7 +2994,6 @@ object TxLogTable {
     // DELETION VECTORS carry too — a clone of a masked snapshot
     // without its dv sidecars would RESURRECT the masked rows (the
     // clone's v0 would list the files with no masks)
-    val srcDvs = stateUpTo(sfs, sroot, v).dvs
     srcDvs.values.map(_._1).toSeq.distinct.foreach { d =>
       listParquet(sfs, new HPath(sroot, d)).foreach { case (rel, _) =>
         linkOrCopy(s"$d/$rel")
@@ -3071,60 +3024,6 @@ object TxLogTable {
       srcSchema, CommitPoint.Auto, sizes = srcSizes)
     newV
   }
-
-  /** The entry's `"files":[…]` array substring. Entries always write
-    * the files array LAST, and every other string field is either
-    * enum-safe (`op`), guarded (`txn` appIds may not start with
-    * `data-`), or JSON-escaped (`schema` — its inner quotes are `\"`,
-    * so the raw token `"files":[` cannot occur inside it); scoping the
-    * file regexes here keeps a column named `data-…` in a recorded
-    * schema from reading back as a phantom data file. */
-  private def filesArray(txt: String): String = {
-    val i = txt.lastIndexOf(""""files":[""")
-    if (i < 0) txt else txt.substring(i)
-  }
-
-  /** Every file path in the entry's files array — sized
-    * (`{"p":"…","s":n}`) or legacy bare-string elements. Paths are no
-    * longer `data-`-anchored ([[convert]] records in-place files under
-    * root-level `k=v` dirs or flat); soundness now rests on
-    * [[filesArray]]'s scoping alone, which holds: the array is the
-    * entry's LAST field and the schema field's inner quotes are
-    * JSON-escaped, so the raw `"files":[` token cannot occur early.
-    * The alternation consumes sized objects whole, so an object's `p`
-    * key can never read back as a bare-string file. */
-  private val FileElemRe =
-    """\{"p":"([^"]+)","s":\d+\}|"([^"]+)"""".r
-
-  private def fileList(txt: String): Seq[String] = {
-    val arr = filesArray(txt)
-    val body = arr.substring(math.min(arr.length, """"files":[""".length))
-    FileElemRe.findAllMatchIn(body)
-      .map(m => Option(m.group(1)).getOrElse(m.group(2))).toSeq
-  }
-
-  /** DELETION-VECTOR map recorded in a commit entry's `"dvs":[…]` field
-    * (placed BEFORE `"files":[`, so [[filesArray]]'s scope excludes it
-    * and a dv path can never read back as a phantom data file):
-    * data file → (dv parquet dir, deleted-row count). Only REBASE
-    * entries carry it; absent means no deletion vectors. */
-  private val DvRe = """\{"f":"([^"]+)","d":"(data-dvs-[^"]+)","n":(\d+)\}""".r
-
-  private def dvList(txt: String): Map[String, (String, Long)] = {
-    val i = txt.lastIndexOf(""""files":[""")
-    val scope = if (i < 0) txt else txt.substring(0, i)
-    DvRe.findAllMatchIn(scope)
-      .map(m => m.group(1) -> ((m.group(2), m.group(3).toLong))).toMap
-  }
-
-  /** Per-file physical sizes recorded in a commit entry's
-    * `{"p":path,"s":size}` elements. Legacy bare-string elements carry
-    * no size and are simply absent from the map. */
-  private val SizedFileRe = """\{"p":"([^"]+)","s":(\d+)\}""".r
-
-  private def fileSizes(txt: String): Map[String, Long] =
-    SizedFileRe.findAllMatchIn(filesArray(txt))
-      .map(m => m.group(1) -> m.group(2).toLong).toMap
 
   // ---- column mapping (Delta's columnMapping.mode = name) ----
 
@@ -3199,9 +3098,8 @@ object TxLogTable {
   def schemaAt(path: String, v: Long)
       : Option[org.apache.spark.sql.types.StructType] = {
     val (fs, root) = fsFor(path)
-    val p = new HPath(logDir(root), s"$v.json")
-    if (!fs.exists(p)) return None
-    recordedSchema(readString(fs, p)).map(s =>
+    if (!fs.exists(entryPath(root, v))) return None
+    readEntry(fs, root, v).structType.map(s =>
       asNullable(s).asInstanceOf[org.apache.spark.sql.types.StructType])
   }
 
@@ -3212,20 +3110,6 @@ object TxLogTable {
   private[graft] def snapshotSchema(spark: SparkSession, path: String,
       v: Long): org.apache.spark.sql.types.StructType =
     schemaAt(path, v).getOrElse(readVersion(spark, path, v).schema)
-
-  private def recordedSchema(txt: String)
-      : Option[org.apache.spark.sql.types.StructType] =
-    try {
-      import org.json4s._
-      jackson.JsonMethods.parse(txt) \ "schema" match {
-        case JString(s) =>
-          org.apache.spark.sql.types.DataType.fromJson(s) match {
-            case st: org.apache.spark.sql.types.StructType => Some(st)
-            case _ => None
-          }
-        case _ => None
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The snapshot schema an APPEND can record: the prior entry's
     * recorded schema merged (Spark's own `StructType.merge`, via the
@@ -3247,8 +3131,7 @@ object TxLogTable {
     if (v0 < 0) {
       if (partitionBy.isEmpty) Some(df.schema.json) else None
     } else {
-      val p = new HPath(logDir(root), s"$v0.json")
-      val prior = try recordedSchema(readString(fs, p))
+      val prior = try readEntry(fs, root, v0).structType
         catch { case scala.util.control.NonFatal(_) => None }
       prior.flatMap { ps =>
         // mapping mode: stage() already proved the frame's columns are
@@ -3264,52 +3147,9 @@ object TxLogTable {
     }
   }
 
-  /** JSON-string-escape a schema's json for embedding as the entry's
-    * `"schema"` field value (json4s renders the full escape set —
-    * quotes, backslashes, control chars, non-BMP — so the entry stays
-    * one valid JSON object whatever the field names contain). */
-  private def escJson(s: String): String = {
-    val q = org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(org.json4s.JString(s)))
-    q.substring(1, q.length - 1)
-  }
-
-  private def isRebase(txt: String): Boolean = txt.contains(""""rebase":true""")
-
-  private val TxnRe = """"txn":\["([^"]*)",(-?\d+)\]""".r
-  private val TxnsMapRe = """"txns":\{([^}]*)\}""".r
-  private val TxnsPairRe = """"([^"]*)":(-?\d+)""".r
-
-  private def txnOf(txt: String): Option[(String, Long)] =
-    TxnRe.findFirstMatchIn(txt).map(m => (m.group(1), m.group(2).toLong))
-
-  /** Latest transaction version per appId as of `v` (checkpoint rollup +
-    * incremental entries — same resolution shape as [[filesUpTo]]).
-    * Rebase entries do NOT reset transactions: compaction rewrites the
-    * file listing, not writer history (delta keeps SetTransaction across
-    * checkpoints the same way). */
-  private def txnsUpTo(fs: FileSystem, root: HPath, v: Long): Map[String, Long] = {
-    val ckpt = listLog(fs, root, ".checkpoint.json").filter(_ <= v).lastOption
-    var acc: Map[String, Long] = ckpt.map { c =>
-      val txt = readString(fs, new HPath(logDir(root), s"$c.checkpoint.json"))
-      TxnsMapRe.findFirstMatchIn(txt).map { m =>
-        TxnsPairRe.findAllMatchIn(m.group(1))
-          .map(p => p.group(1) -> p.group(2).toLong).toMap
-      }.getOrElse(Map.empty)
-    }.getOrElse(Map.empty)
-    versions(fs, root)
-      .filter(ver => ver <= v && ckpt.forall(ver > _))
-      .foreach { ver =>
-        txnOf(readString(fs, new HPath(logDir(root), s"$ver.json"))).foreach {
-          case (app, tv) => acc += app -> math.max(tv, acc.getOrElse(app, Long.MinValue))
-        }
-      }
-    acc
-  }
-
   private def lastTxnVersion(fs: FileSystem, root: HPath,
       appId: String): Option[Long] =
-    versions(fs, root).lastOption.flatMap(v => txnsUpTo(fs, root, v).get(appId))
+    versions(fs, root).lastOption.flatMap(v => stateUpTo(fs, root, v).txns.get(appId))
 
   /** Public probe: the last committed transaction version for `appId`
     * (None if the app never committed) — the reader half of the
@@ -3320,27 +3160,20 @@ object TxLogTable {
   }
 
   private def filesUpTo(fs: FileSystem, root: HPath, v: Long): Seq[String] =
-    filesAndSizesUpTo(fs, root, v)._1
-
-  /** The snapshot listing of version `v` plus every recorded file size
-    * — ONE pass over the same entries [[filesUpTo]] reads, so resolving
-    * a snapshot with sizes costs exactly a snapshot resolution (one
-    * checkpoint + at most CheckpointInterval-1 incrementals), never a
-    * per-file FS round-trip. Files from pre-size log entries are absent
-    * from the map. */
-  private def filesAndSizesUpTo(fs: FileSystem, root: HPath, v: Long)
-      : (Seq[String], Map[String, Long]) = {
-    val st = stateUpTo(fs, root, v)
-    (st.files, st.sizes)
-  }
+    stateUpTo(fs, root, v).files
 
   /** A snapshot's full log-derived state: file listing, recorded sizes,
-    * and the deletion-vector map (data file → (dv dir, deleted rows)).
-    * DVs follow the same resolution rule as the listing: a REBASE entry
-    * carries the complete current dv map (absent field = none — every
-    * dv-aware rebase writer records it), appends never change it. */
+    * the deletion-vector map (data file → (dv dir, deleted rows)) and
+    * the latest transaction version per appId. DVs follow the same
+    * resolution rule as the listing: a REBASE entry carries the complete
+    * current dv map (absent field = none — every dv-aware rebase writer
+    * records it), appends never change it. Transactions accumulate
+    * through rebases: compaction rewrites the file listing, not writer
+    * history (delta keeps SetTransaction across checkpoints the same
+    * way). */
   private[operators] case class LogState(files: Seq[String],
-      sizes: Map[String, Long], dvs: Map[String, (String, Long)])
+      sizes: Map[String, Long], dvs: Map[String, (String, Long)],
+      txns: Map[String, Long])
 
   private[operators] def stateUpTo(fs: FileSystem, root: HPath, v: Long)
       : LogState = {
@@ -3348,9 +3181,11 @@ object TxLogTable {
     var acc = Seq.empty[String]
     var sizes = Map.empty[String, Long]
     var dvs = Map.empty[String, (String, Long)]
+    var txns = Map.empty[String, Long]
     ckpt.foreach { c =>
-      val txt = readString(fs, new HPath(logDir(root), s"$c.checkpoint.json"))
-      acc = fileList(txt); sizes = fileSizes(txt); dvs = dvList(txt)
+      val p = new HPath(logDir(root), s"$c.checkpoint.json")
+      val cp = Checkpoint.parse(readString(fs, p), p.toString)
+      acc = cp.paths; sizes = cp.sizes; dvs = cp.dvs; txns = cp.txns
     }
     val incr = versions(fs, root)
       .filter(ver => ver <= v && ckpt.forall(ver > _))
@@ -3367,19 +3202,22 @@ object TxLogTable {
           "oldest surviving checkpoint remain time-travelable")
     incr
       .foreach { ver =>
-        val txt = readString(fs, new HPath(logDir(root), s"$ver.json"))
+        val e = readEntry(fs, root, ver)
         // a rebase entry (compaction) REPLACES the accumulated listing
         // and the dv map; sizes accumulate regardless — a rebase carries
         // files by reference whose sizes earlier entries may have
         // recorded, and a stale extra size for a dropped file is
         // harmless (lookups are keyed by the listing)
-        if (isRebase(txt)) { acc = fileList(txt); dvs = dvList(txt) }
-        else acc = acc ++ fileList(txt)
-        sizes = sizes ++ fileSizes(txt)
+        if (e.rebase) { acc = e.paths; dvs = e.dvs }
+        else acc = acc ++ e.paths
+        sizes = sizes ++ e.sizes
+        e.txn.foreach { case (app, tv) =>
+          txns += app -> math.max(tv, txns.getOrElse(app, Long.MinValue))
+        }
       }
     val live = acc.toSet
     LogState(acc, sizes.view.filterKeys(live).toMap,
-      dvs.view.filterKeys(live).toMap)
+      dvs.view.filterKeys(live).toMap, txns)
   }
 
   /** The log-recorded bytes of version `v`'s OWN entry — the streaming
@@ -3392,8 +3230,7 @@ object TxLogTable {
     * read, no data I/O; pre-size legacy listings price as 0. */
   private[graft] def commitBytes(path: String, v: Long): Long = {
     val (fs, root) = fsFor(path)
-    fileSizes(readString(fs,
-      new HPath(logDir(root), s"$v.json"))).values.sum
+    readEntry(fs, root, v).sizes.values.sum
   }
 
   /** Public probe: the deletion-vector map of version `v` — which data
@@ -3412,23 +3249,9 @@ object TxLogTable {
   private def maybeCheckpoint(fs: FileSystem, root: HPath, v: Long): Unit =
     if (v > 0 && v % CheckpointInterval == 0) {
       try {
-        val txns = txnsUpTo(fs, root, v)
-        val txnsField =
-          if (txns.isEmpty) ""
-          else txns.toSeq.sorted.map { case (a, tv) => s""""$a":$tv""" }
-            .mkString(""""txns":{""", ",", "},")
         val st = stateUpTo(fs, root, v)
-        val (ckptFiles, ckptSizes) = (st.files, st.sizes)
-        val dvField =
-          if (st.dvs.isEmpty) ""
-          else st.dvs.toSeq.sortBy(_._1).map { case (f, (d, n)) =>
-            s"""{"f":"$f","d":"$d","n":$n}"""
-          }.mkString(""""dvs":[""", ",", "],")
-        val entry = ckptFiles.map(f => ckptSizes.get(f) match {
-          case Some(s) => s"""{"p":"$f","s":$s}"""
-          case None => "\"" + f + "\""
-        }).mkString(
-          s"""{"version":$v,$txnsField$dvField"files":[""", ",", "]}")
+        val entry = Checkpoint(v, st.txns, st.dvs,
+          st.files.map(f => LogFile(f, st.sizes.get(f)))).render
         val tmp = new HPath(logDir(root), s".$v.ckpt.tmp")
         writeString(fs, tmp, entry, overwrite = true)
         if (!fs.rename(tmp, new HPath(logDir(root), s"$v.checkpoint.json")))
@@ -3466,8 +3289,6 @@ object TxLogTable {
     }
   }
 
-  private val TsRe = """"ts":(\d+)""".r
-
   /** Commit history: (version, commit timestamp ms) for every committed
     * version, oldest first. Timestamps come from the entry's `ts` field
     * (file modification time for pre-`ts` logs) and are MONOTONIZED the
@@ -3477,18 +3298,22 @@ object TxLogTable {
     * version order — `versionAsOf` stays well-defined. */
   def history(path: String): Seq[(Long, Long)] = {
     val (fs, root) = fsFor(path)
-    val raw = versions(fs, root).map { v =>
-      val p = new HPath(logDir(root), s"$v.json")
-      val ts = TsRe.findFirstMatchIn(readString(fs, p)).map(_.group(1).toLong)
-        .getOrElse(fs.getFileStatus(p).getModificationTime)
-      (v, ts)
-    }
-    raw.scanLeft((-1L, Long.MinValue)) { case ((_, prev), (v, ts)) =>
-      (v, math.max(ts, prev + 1))
-    }.drop(1)
+    historyEntries(fs, root).map { case (v, ts, _) => (v, ts) }
   }
 
-  private val OpRe = """"op":"([a-z]+)"""".r
+  /** Every committed entry, oldest first, each read once, with its
+    * monotonized commit timestamp ([[history]]). */
+  private def historyEntries(fs: FileSystem, root: HPath)
+      : Seq[(Long, Long, CommitEntry)] = {
+    var prev = Long.MinValue
+    versions(fs, root).map { v =>
+      val e = readEntry(fs, root, v)
+      val ts = math.max(e.ts.getOrElse(
+        fs.getFileStatus(entryPath(root, v)).getModificationTime), prev + 1)
+      prev = ts
+      (v, ts, e)
+    }
+  }
 
   /** DESCRIBE HISTORY — one row per commit, oldest first: version,
     * monotonized commit timestamp, operation (append / upsert / merge /
@@ -3498,13 +3323,10 @@ object TxLogTable {
     * construction (one JSON entry per commit). */
   def historyDf(spark: SparkSession, path: String): DataFrame = {
     val (fs, root) = fsFor(path)
-    val ts = history(path).toMap
     import spark.implicits._
-    versions(fs, root).map { v =>
-      val txt = readString(fs, new HPath(logDir(root), s"$v.json"))
-      (v, new java.sql.Timestamp(ts(v)),
-        OpRe.findFirstMatchIn(txt).map(_.group(1)).getOrElse("append"),
-        isRebase(txt), fileList(txt).size)
+    historyEntries(fs, root).map { case (v, ts, e) =>
+      (v, new java.sql.Timestamp(ts), e.op.getOrElse("append"), e.rebase,
+        e.files.size)
     }.toDF("version", "timestamp", "operation", "is_rebase", "num_files")
   }
 
@@ -3526,7 +3348,8 @@ object TxLogTable {
   def snapshotWithSizes(path: String, version: Long)
       : (Seq[String], Map[String, Long]) = {
     val (fs, root) = fsFor(path)
-    filesAndSizesUpTo(fs, root, version)
+    val st = stateUpTo(fs, root, version)
+    (st.files, st.sizes)
   }
 
   /** Listing + sizes + deletion-vector map in one log resolution — what
@@ -3627,6 +3450,18 @@ object TxLogTable {
     if (layouts.size == 1) layouts.head else Seq.empty
   }
 
+  /** Partitioned log-relative files grouped by their hive BASE dir:
+    * normally the leading `data-` stage dir, but a file whose first
+    * segment is already `k=v` is a CONVERTED table's in-place file
+    * ([[convert]]) whose hive root is the TABLE root — group key ""
+    * (the caller resolves "" to the table path itself). */
+  private def partedGroups(parted: Seq[String])
+      : Seq[(String, Seq[String])] =
+    parted.groupBy { f =>
+      val head = f.split('/').head
+      if (head.indexOf('=') > 0) "" else head
+    }.toSeq.sortBy(_._1)
+
   /** Scan a log-relative file list with hive-partition recovery: files
     * in a partitioned data dir read with that dir as `basePath` (so
     * their `k=v` segments surface as columns), all unpartitioned files
@@ -3643,22 +3478,23 @@ object TxLogTable {
     * yielded downstream. Partitioned listings keep the sweep (their
     * recorded schemas exist only for ops that saw read-back typing;
     * the conservative path costs one footer pass per dir group). */
-  /** Partitioned log-relative files grouped by their hive BASE dir:
-    * normally the leading `data-` stage dir, but a file whose first
-    * segment is already `k=v` is a CONVERTED table's in-place file
-    * ([[convert]]) whose hive root is the TABLE root — group key ""
-    * (the caller resolves "" to the table path itself). */
-  private def partedGroups(parted: Seq[String])
-      : Seq[(String, Seq[String])] =
-    parted.groupBy { f =>
-      val head = f.split('/').head
-      if (head.indexOf('=') > 0) "" else head
-    }.toSeq.sortBy(_._1)
-
   private def scanFiles(spark: SparkSession, path: String,
       files: Seq[String],
       knownSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
+      : DataFrame =
+    alignToSchema(scanLegs(spark, path, files, knownSchema)
+      .reduce(_.unionByName(_, allowMissingColumns = true)), knownSchema)
+
+  /** [[scanFiles]]' scans before their union: the plain files' one
+    * multi-path scan, then one per partitioned base dir. */
+  private def scanLegs(spark: SparkSession, path: String,
+      files: Seq[String],
+      knownSchema: Option[org.apache.spark.sql.types.StructType])
+      : Seq[DataFrame] = {
+    // Spark globs a path holding a glob metacharacter: escape them so
+    // each path matches only its own file
+    def at(f: String) = s"$path/" +
+      f.flatMap(c => if ("\\{}[]*?".indexOf(c) >= 0) s"\\$c" else c.toString)
     val (parted, plain) = files.partition(f =>
       partitionValuesOf(f).nonEmpty)
     val plainScan =
@@ -3666,11 +3502,11 @@ object TxLogTable {
       else Some(knownSchema match {
         case Some(s) if parted.isEmpty =>
           // mapping mode: ask parquet for the PHYSICAL spelling; the
-          // alignToSchema projection below renames back to logical
+          // alignToSchema projection renames back to logical
           spark.read.schema(if (mappingActive(s)) physicalize(s) else s)
-            .parquet(plain.map(f => s"$path/$f"): _*)
+            .parquet(plain.map(at): _*)
         case _ => spark.read.option("mergeSchema", true)
-          .parquet(plain.map(f => s"$path/$f"): _*)
+          .parquet(plain.map(at): _*)
       })
     val partedScans = partedGroups(parted).map { case (dir, fsOfDir) =>
         // a recorded snapshot schema (read-back-faithful by the commit
@@ -3685,12 +3521,9 @@ object TxLogTable {
           case _ => spark.read.option("mergeSchema", true)
         }
         rdr.option("basePath", if (dir.isEmpty) path else s"$path/$dir")
-          .parquet(fsOfDir.map(f => s"$path/$f"): _*)
+          .parquet(fsOfDir.map(at): _*)
       }
-    alignToSchema(
-      (plainScan.toSeq ++ partedScans)
-        .reduce(_.unionByName(_, allowMissingColumns = true)),
-      knownSchema)
+    plainScan.toSeq ++ partedScans
   }
 
   /** Serve recorded-schema columns that NO file carries as NULLs — the
@@ -3799,36 +3632,7 @@ object TxLogTable {
         df.col("_metadata.file_path").as("__f"),
         df.col("_metadata.row_index").as("__ri"))
     }
-    val (parted, plain) = files.partition(f =>
-      partitionValuesOf(f).nonEmpty)
-    val plainScan =
-      if (plain.isEmpty) None
-      else Some(knownSchema match {
-        case Some(s) if parted.isEmpty =>
-          // mapping mode scans physical; downstream alignToSchema
-          // projects to logical (the dv anti-join between them keys
-          // only on the __f/__ri stamps)
-          spark.read.schema(if (mappingActive(s)) physicalize(s) else s)
-            .parquet(plain.map(f => s"$path/$f"): _*)
-        case _ => spark.read.option("mergeSchema", true)
-          .parquet(plain.map(f => s"$path/$f"): _*)
-      })
-    val partedScans = partedGroups(parted).map { case (dir, fsOfDir) =>
-        // a recorded snapshot schema (read-back-faithful by the commit
-        // contract) pins the partitioned read too: declared partition
-        // TYPES parse instead of re-inferring from path strings (a
-        // converted catalog table's string partition column must not
-        // come back INT), and narrower files null-pad by name — the
-        // same contract as the plain branch. Mapping mode keeps the
-        // sweep (alignToSchema projects physical→logical after).
-        val rdr = knownSchema match {
-          case Some(s) if !mappingActive(s) => spark.read.schema(s)
-          case _ => spark.read.option("mergeSchema", true)
-        }
-        rdr.option("basePath", if (dir.isEmpty) path else s"$path/$dir")
-          .parquet(fsOfDir.map(f => s"$path/$f"): _*)
-      }
-    (plainScan.toSeq ++ partedScans).map(stamp)
+    scanLegs(spark, path, files, knownSchema).map(stamp)
       .reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
@@ -3971,7 +3775,7 @@ object TxLogTable {
     val fromDirs = loadDirStats(fs, root, files)
     if (files.forall(fromDirs.contains)) fromDirs
     else {
-      val rootSide = parseStatsFile(fs, new HPath(root, "_stats.json"), "")
+      val rootSide = readStats(fs, new HPath(root, "_stats.json"), "")
       rootSide ++ fromDirs
     }
   }
@@ -3979,39 +3783,18 @@ object TxLogTable {
   private def loadDirStats(fs: FileSystem, root: HPath, files: Seq[String])
       : Map[String, Map[String, (org.json4s.JValue, org.json4s.JValue)]] =
     files.map(_.split('/').head).distinct.flatMap { dir =>
-      parseStatsFile(fs, new HPath(new HPath(root, dir), "_stats.json"),
+      readStats(fs, new HPath(new HPath(root, dir), "_stats.json"),
         s"$dir/")
     }.toMap
 
   /** One `_stats.json` sidecar as (keyPrefix + file-key) → bounds;
     * empty on absence or any parse failure (stats are advisory). */
-  private def parseStatsFile(fs: FileSystem, p: HPath, keyPrefix: String)
-      : Map[String, Map[String, (org.json4s.JValue, org.json4s.JValue)]] = {
-    import org.json4s._
-    {
-      if (!fs.exists(p)) Seq.empty
-      else try {
-        // useBigDecimalForDouble: a DecimalType(38,20) bound written in
-        // full precision must not round through a JDouble on the way
-        // back — rounding a bound can move it toward the pruned side
-        jackson.JsonMethods.parse(readString(fs, p),
-            useBigDecimalForDouble = true) \ "files" match {
-          case JObject(perFile) => perFile.flatMap {
-            case (fname, JObject(cols)) =>
-              val m = cols.flatMap {
-                case (cname, o) => for {
-                  mn <- (o \ "min").toOption
-                  mx <- (o \ "max").toOption
-                } yield cname -> ((mn, mx))
-              }.toMap
-              Seq(s"$keyPrefix$fname" -> m)
-            case _ => Seq.empty
-          }
-          case _ => Seq.empty
-        }
-      } catch { case scala.util.control.NonFatal(_) => Seq.empty }
-    }.toMap
-  }
+  private def readStats(fs: FileSystem, p: HPath, keyPrefix: String)
+      : Map[String, TxLogFormat.Bounds] =
+    if (!fs.exists(p)) Map.empty
+    else try TxLogFormat.parseStats(readString(fs, p)).map {
+      case (f, bounds) => s"$keyPrefix$f" -> bounds
+    } catch { case scala.util.control.NonFatal(_) => Map.empty }
 
   /** UTF-8 binary (= code-point) comparison — the order Spark's min/max
     * aggregation uses for strings. Java's String.compareTo compares
@@ -4294,13 +4077,9 @@ object TxLogTable {
     val (fs, root) = fsFor(path)
     versions(fs, root)
   }
-  private[operators] def versionIsRebase(path: String, v: Long): Boolean = {
+  private[operators] def entryAt(path: String, v: Long): CommitEntry = {
     val (fs, root) = fsFor(path)
-    isRebase(readString(fs, new HPath(logDir(root), s"$v.json")))
-  }
-  private[operators] def versionFiles(path: String, v: Long): Seq[String] = {
-    val (fs, root) = fsFor(path)
-    fileList(readString(fs, new HPath(logDir(root), s"$v.json")))
+    readEntry(fs, root, v)
   }
   /** The snapshot's relative data-file listing at version `v` — the
     * audit surface DML queries use to assert copy-on-write file
@@ -4309,13 +4088,9 @@ object TxLogTable {
     val (fs, root) = fsFor(path)
     filesUpTo(fs, root, v)
   }
-  private[operators] def versionTxn(path: String, v: Long): Option[(String, Long)] = {
-    val (fs, root) = fsFor(path)
-    txnOf(readString(fs, new HPath(logDir(root), s"$v.json")))
-  }
   private[operators] def txnsAt(path: String, v: Long): Map[String, Long] = {
     val (fs, root) = fsFor(path)
-    txnsUpTo(fs, root, v)
+    stateUpTo(fs, root, v).txns
   }
 
   /** Vacuum: delete staging dirs never published by any commit (the

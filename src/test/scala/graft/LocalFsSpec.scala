@@ -38,6 +38,25 @@ class LocalFsSpec extends SparkSpec {
     assert(inTask.toSeq == Seq(classOf[GraftLocalFileSystem].getName))
   }
 
+  test("FileContext resolves file: to the syscall filesystem, with the stock modes and checksums") {
+    import org.apache.hadoop.fs.{CreateFlag, FileContext, Options}
+    val conf = spark.sessionState.newHadoopConf()
+    conf.set("fs.permissions.umask-mode", "022")
+    val fc = FileContext.getFileContext(URI.create("file:///"), conf)
+    assert(fc.getDefaultFileSystem.isInstanceOf[GraftLocalFs])
+    // the streaming checkpoint shape: mkdir, then create a file in it
+    val base = NioFiles.createTempDirectory("graft-localfs-fc")
+    val dir = new Path(base.toUri.toString, "offsets")
+    fc.mkdir(dir, FsPermission.getDirDefault, true)
+    val out = fc.create(new Path(dir, "0"),
+      java.util.EnumSet.of(CreateFlag.CREATE), Options.CreateOpts.createParent())
+    out.write(Array.fill[Byte](64)(1))
+    out.close()
+    assert(mode(base.resolve("offsets")) == 0x1ed) // 0755
+    assert(mode(base.resolve("offsets/0")) == 0x1a4) // 0644
+    assert(NioFiles.exists(base.resolve("offsets/.0.crc")))
+  }
+
   test("files, .crc sidecars and a nested mkdirs chain get the stock FS's modes under umask 022 and 077") {
     for (umask <- Seq("022", "077")) {
       def layout(fs: LocalFileSystem): Seq[Int] = {

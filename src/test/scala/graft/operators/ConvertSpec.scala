@@ -84,6 +84,27 @@ class ConvertSpec extends SparkSpec {
       .count() == 1)
   }
 
+  test("file names with a quote, a backslash and a non-ASCII character convert, read and round-trip") {
+    val path = tmp
+    val names = Seq("q\"uote.parquet", "back\\slash.parquet", "caf\u00e9.parquet")
+    names.zipWithIndex.foreach { case (name, b) =>
+      (b * 10 + 1 to b * 10 + 10).map(i => (i.toLong, s"s$i")).toDF("id", "s")
+        .coalesce(1).write.mode("append").parquet(path)
+      val part = new java.io.File(path).listFiles()
+        .filter(_.getName.startsWith("part-")).head
+      Files.move(part.toPath, part.toPath.resolveSibling(name))
+    }
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select("id").as[Long].collect().toSeq.sorted
+    assert(TxLogTable.convert(spark, path) == 0L)
+    assert(TxLogTable.snapshotFiles(path, 0).sorted == names.sorted)
+    assert(ids(TxLogTable.read(spark, path)) == (1L to 30L))
+    // the delete rewrites every one of the three files
+    assert(TxLogTable.deleteWhere(spark, path, col("id") % 10 === 5L) == 1L)
+    assert(ids(TxLogTable.read(spark, path)) == (1L to 30L).filterNot(_ % 10 == 5))
+    assert(ids(TxLogTable.readVersion(spark, path, 0)) == (1L to 30L))
+  }
+
   test("second convert refuses; convert of an ordinary graft table refuses") {
     val path = tmp
     (1L to 10L).map(i => (i, i)).toDF("a", "b").write.parquet(path)

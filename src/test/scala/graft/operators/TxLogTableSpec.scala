@@ -293,12 +293,18 @@ class TxLogTableSpec extends SparkSpec {
     assert(TxLogTable.lastTransaction(path, "replayer") == Some(0L))
   }
 
-  test("txn: appIds that could be parsed as data files are rejected") {
-    val e = intercept[IllegalArgumentException] {
-      TxLogTable.append(spark, Seq((1L, "a")).toDF("id", "v"), tmp,
-        txn = Some(("data-loader", 0L)))
+  test("txn: a data- prefixed appId commits and survives the checkpoint") {
+    val path = tmp
+    (0 to 11).foreach { i =>
+      TxLogTable.append(spark, Seq((i.toLong, s"r$i")).toDF("id", "v"), path,
+        txn = Some(("data-loader", i.toLong)))
+      assert(TxLogTable.lastTransaction(path, "data-loader") == Some(i.toLong))
     }
-    assert(e.getMessage.contains("data-"))
+    assert(Files.exists(java.nio.file.Paths.get(path, "_log", "10.checkpoint.json")))
+    // the snapshot lists the twelve staged files and nothing named after the appId
+    val files = TxLogTable.snapshotFiles(path, 11)
+    assert(files.size == 12 && files.forall(_.endsWith(".parquet")), files)
+    assert(TxLogTable.read(spark, path).count() == 12)
   }
 
   test("txn watermarks survive the checkpoint rollup") {
