@@ -10,7 +10,7 @@ import scala.util.{Failure, Try}
 /** A20 + end-to-end batch ingest — the whole reference hot path (SURVEY
   * §3.1) as one batch call:
   *
-  *   raw JSON → envelope (A2) → config broadcast-join routing (A3/A4) →
+  *   raw JSON → envelope (A2) → config-lookup routing (A3/A4) →
   *   control filter (A7) → per-config function chain (A20):
   *     "pii-detection" → payload masking (A21)
   *     "ingester"      → time-partitioned parquet lake write (A9-A17)
@@ -19,22 +19,24 @@ import scala.util.{Failure, Try}
   * The reference hops through Kafka + Flink StateFun between every stage
   * (6 process boundaries) and runs its functions in parallel; here the
   * chain is a fold of DataFrame transforms, and the sinks of one batch
-  * run concurrently. Job shape of one batch: the routed batch is cached
-  * and ONE job finds the (config, message type) pairs present (it also
-  * fills the cache); then the quarantine write and one sink chain per
-  * (config, type) run on a per-call pool. A chain infers its schema in
-  * one job, shared by its sinks up to the next "pii-detection", and
-  * writes each sink in one job ("deltawriter" adds the transaction-log
-  * commit's own jobs): the ingest benchmark's batch (3 configs, 5
-  * active types) runs 18 jobs.
+  * run concurrently. Job shape of one batch: the routed batch is cached,
+  * and ONE pass over it does everything before the sinks: it fills the
+  * cache, finds the (config, message type) pairs present and infers
+  * every chain's schemas ([[SchemaPolicy.inferByKey]] keyed by config,
+  * type and payload side — raw for the sinks before "pii-detection",
+  * masked for those after it). Then the quarantine write and one sink
+  * chain per (config, type) run on a per-call pool, and each sink only
+  * writes, in one job ("deltawriter" adds the transaction-log commit's
+  * own jobs): the ingest benchmark's batch (3 configs, 5 active types)
+  * runs 9 jobs.
   *
   * Chain semantics preserved: stages run in config order after dedup
   * (ingester.go:174-184, 1600-1650); each stage after the first receives
   * the (possibly transformed) payload, and sinks see the payload as it is
   * at their position in the chain (pii before ingester masks what lands
-  * in the lake; after, only downstream stages see masked data). A
-  * "pii-detection" stage invalidates the inferred schema, so the sinks
-  * after it infer theirs from the masked payload.
+  * in the lake; after, only downstream stages see masked data). The
+  * sinks after "pii-detection" parse with the schema inferred from the
+  * masked payload.
   *
   * Delta divergence note: stock Spark ships no delta-core, so
   * "deltawriter" appends to a [[TxLogTable]] — the same append-only
@@ -79,9 +81,13 @@ object IngestPipeline {
       registerTables: Boolean = true,
       batchScope: Option[(String, Long)] = None): Seq[BatchResult] = {
 
-    val chains = configs.filter(_.active).map(cfg => cfg -> StreamConfig.dedupChain(
-      if (cfg.functions.nonEmpty) cfg.functions else Seq(Router.DefaultFunction)))
-    chains.flatMap(_._2).find(f => !ChainFunctions(f)).foreach { f =>
+    // (position in `configs` — the routed rows' `cfg_at` — config, chain)
+    // per active config
+    val chains = configs.zipWithIndex.collect { case (cfg, at) if cfg.active =>
+      (at, cfg, StreamConfig.dedupChain(
+        if (cfg.functions.nonEmpty) cfg.functions else Seq(Router.DefaultFunction)))
+    }
+    chains.flatMap(_._3).find(f => !ChainFunctions(f)).foreach { f =>
       throw new IllegalArgumentException(s"unknown chain function '$f'")
     }
 
@@ -90,19 +96,15 @@ object IngestPipeline {
       .cache() // read by the quarantine and by every sink; unpersisted below
     try {
       val routed = Router.activeOnly(allRouted)
-      // one job: the (config, type) pairs present, which also fills the
-      // cache before any sink reads it
-      val present = routed
-        .select("cfg_stream_id", "cfg_stream_alt_id", "message_type_resolved")
-        .distinct().collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2)))
-      val plan = chains.map { case (cfg, chain) =>
-        val types = present.collect {
-          case (id, alt, mt) if id == cfg.streamId || cfg.streamAltId.nonEmpty && alt == cfg.streamAltId => mt
-        }.distinct.sorted.toSeq
-        (cfg, chain, types)
+      // ONE job before the sinks (it also fills the cache): every chain's
+      // schemas, keyed by (config position, type, side), whose keys are
+      // the (config, type) pairs present
+      val schemas = SchemaPolicy.inferByKey(sides(routed, configs.size, chains), SchemaKey, "doc")
+      val present = schemas.keys.map(_.take(2)).toSeq.distinct
+      val plan = chains.map { case (at, cfg, chain) =>
+        (at, cfg, chain, present.collect { case Seq(a, mt) if a == at.toString => mt }.sorted)
       }
-      if (registerTables && chains.exists(_._2.contains("ingester")))
+      if (registerTables && chains.exists(_._3.contains("ingester")))
         LakeWriter.createDatabase(spark, database)
 
       // DLQ (improvement over the reference, which logs-and-drops —
@@ -129,25 +131,52 @@ object IngestPipeline {
       // one sink chain per (config index, type); chains appending plainly
       // into one lake dir share a task, because concurrent appends into
       // one dir share the committer's _temporary dir
-      val sinkChains = for (((_, _, types), c) <- plan.zipWithIndex; mt <- types) yield (c, mt)
+      val sinkChains = for (((_, _, _, types), c) <- plan.zipWithIndex; mt <- types) yield (c, mt)
       val tasks = sinkChains.groupBy { case (c, mt) =>
-        val (cfg, chain, _) = plan(c)
+        val (_, cfg, chain, _) = plan(c)
         if (batchScope.isEmpty && chain.contains("ingester"))
           Left(s"$destRoot/${LakeWriter.folderOf(cfg)}/$mt")
         else Right((c, mt))
       }.values.toSeq.sortBy(g => sinkChains.indexOf(g.head))
       val tablesOf = runAll(spark, quarantine +: tasks.map(g => () => g.map { case (c, mt) =>
-        val (cfg, chain, _) = plan(c)
-        (c, mt) -> writeChain(spark, routed, cfg, chain, mt, destRoot, tsCol, database,
+        val (at, cfg, chain, _) = plan(c)
+        (c, mt) -> writeChain(spark, routed, schemas, at, cfg, chain, mt, destRoot, tsCol, database,
           registerTables, batchScope.map { case (s, b) => (configScope(s, cfg), b) })
       })).flatten.toMap
 
-      plan.zipWithIndex.flatMap { case ((cfg, chain, types), c) =>
+      plan.zipWithIndex.flatMap { case ((_, cfg, chain, types), c) =>
         val tables = chain.indices.flatMap(s =>
           types.flatMap(mt => tablesOf((c, mt)).collect { case (`s`, t) => t }))
         if (tables.isEmpty) None else Some(BatchResult(cfg, tables, chain))
       }
     } finally allRouted.unpersist()
+  }
+
+  /** The key of [[runBatch]]'s schemas: the routed config's position
+    * ([[Router.route]]'s `cfg_at`), the message type and the payload
+    * side. */
+  private val SchemaKey = Seq("cfg_at", "message_type_resolved", "side")
+
+  /** The routed rows as [[SchemaKey]] plus `doc`, two rows per message:
+    * side "raw" carries the payload for configs with a sink before their
+    * "pii-detection" (or without one), side "masked" the masked payload
+    * for configs with a sink after it; `doc` is null otherwise, so every
+    * message still keys its (config, type). Which configs have which
+    * side is a literal array over the `n` config positions, indexed by
+    * `cfg_at`. */
+  private def sides(routed: DataFrame, n: Int,
+      chains: Seq[(Int, StreamConfig, Seq[String])]): DataFrame = {
+    def sinkOn(p: Seq[String] => Boolean): Column = {
+      val on = chains.collect { case (at, _, chain) if p(chain) => at }.toSet
+      typedLit((0 until n).map(on)).getItem(col("cfg_at"))
+    }
+    val pii = (chain: Seq[String]) => chain.indexOf("pii-detection")
+    val raw = sinkOn(ch => pii(ch) != 0)
+    val masked = sinkOn(ch => pii(ch) >= 0 && pii(ch) < ch.size - 1)
+    routed.select(col("cfg_at"), col("message_type_resolved"),
+      inline(array(
+        struct(lit("raw").as("side"), when(raw, col("payload")).as("doc")),
+        struct(lit("masked").as("side"), when(masked, PiiMask.mask(col("payload"))).as("doc")))))
   }
 
   /** The idempotency scope of one config's sinks. It must be unique PER
@@ -165,12 +194,15 @@ object IngestPipeline {
     s"$scope-$tag"
   }
 
-  /** One config's chain over its messages of type `mt`: the schema is
-    * inferred once and shared by the sinks up to the next
-    * "pii-detection". Returns (chain position, (table, path)) per sink. */
+  /** The chain of the config at position `at` over its messages of type
+    * `mt`: the sinks before "pii-detection" parse with the raw side's
+    * schema, the sinks after it with the masked side's. Returns (chain
+    * position, (table, path)) per sink. */
   private def writeChain(
       spark: SparkSession,
       routed: DataFrame,
+      schemas: Map[Seq[String], StructType],
+      at: Int,
       cfg: StreamConfig,
       chain: Seq[String],
       mt: String,
@@ -179,25 +211,19 @@ object IngestPipeline {
       database: String,
       registerTables: Boolean,
       batchScope: Option[(String, Long)]): Seq[(Int, (String, String))] = {
-    var df = routed.filter(
-      ((col("cfg_stream_id") === cfg.streamId) ||
-        (lit(cfg.streamAltId) =!= "" && col("cfg_stream_alt_id") === cfg.streamAltId)) &&
-        col("message_type_resolved") === mt)
-    var schema: Option[StructType] = None
-    def inferred: StructType = {
-      if (schema.isEmpty) schema = Some(SchemaPolicy.inferColumn(spark, df, "payload"))
-      schema.get
-    }
+    var df = routed.filter(col("cfg_at") === at && col("message_type_resolved") === mt)
+    var side = "raw"
+    def schema = schemas(Seq(at.toString, mt, side))
     chain.zipWithIndex.flatMap {
       case ("pii-detection", _) =>
         df = PiiMask.maskColumn(df, "payload")
-        schema = None
+        side = "masked"
         None
       case ("ingester", s) =>
-        Some(s -> LakeWriter.writeType(spark, df, inferred, cfg, mt, destRoot, tsCol,
+        Some(s -> LakeWriter.writeType(spark, df, schema, cfg, mt, destRoot, tsCol,
           database, registerTables, batchScope = batchScope))
       case (_, s) =>
-        Some(s -> appendDeltaStyle(spark, df, inferred, cfg, mt, destRoot, registerTables,
+        Some(s -> appendDeltaStyle(spark, df, schema, cfg, mt, destRoot, registerTables,
           batchScope))
     }
   }
@@ -251,7 +277,8 @@ object IngestPipeline {
       batchScope: Option[(String, Long)]): (String, String) = {
     val dbName = LakeWriter.sanitizeIdent(
       if (cfg.streamAltId.nonEmpty) cfg.streamAltId else cfg.streamId)
-    val flat = messages.select(from_json(col("payload"), schema).as("__p")).select(col("__p.*"))
+    val flat = messages.select(SchemaPolicy.parseJson(col("payload"), schema).as("__p"))
+      .select(col("__p.*"))
     val path = s"$destRoot/_delta/$dbName/$mt"
     // transaction-logged append (TxLogTable): atomic versioned commits,
     // snapshot isolation, time travel — the ACID semantics the reference

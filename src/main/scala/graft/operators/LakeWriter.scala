@@ -35,8 +35,8 @@ object LakeWriter {
     * carry `payload` (JSON string), `message_type_resolved`, and the
     * timestamp column `tsCol` used for bucketing.
     * Returns (tableName, path) per message type written, in type order:
-    * one type-discovery job, then per type one schema inference and
-    * [[writeType]]. */
+    * one job finds the types and infers their schemas
+    * ([[SchemaPolicy.inferByKey]]), then [[writeType]] per type. */
   def writeStreamTable(
       spark: SparkSession,
       messages: DataFrame,
@@ -47,13 +47,11 @@ object LakeWriter {
       registerTables: Boolean = true,
       maxRecordsPerFile: Long = 5000000L,
       batchScope: Option[(String, Long)] = None): Seq[(String, String)] = {
-    val types = messages.select(col("message_type_resolved")).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
+    val schemas = SchemaPolicy.inferByKey(messages, Seq("message_type_resolved"), "payload")
     if (registerTables) createDatabase(spark, database)
-    types.map { mt =>
-      val sub = messages.filter(col("message_type_resolved") === mt)
-      writeType(spark, sub, SchemaPolicy.inferColumn(spark, sub, "payload"), cfg, mt,
-        destRoot, tsCol, database, registerTables, maxRecordsPerFile, batchScope)
+    schemas.keys.map(_.head).toSeq.sorted.map { mt =>
+      writeType(spark, messages.filter(col("message_type_resolved") === mt), schemas(Seq(mt)),
+        cfg, mt, destRoot, tsCol, database, registerTables, maxRecordsPerFile, batchScope)
     }
   }
 
@@ -61,7 +59,7 @@ object LakeWriter {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS ${sanitizeIdent(database)}")
 
   /** Write the messages of ONE type `mt` of one config, their payload
-    * parsed with `schema` (see [[SchemaPolicy.inferColumn]]), into
+    * parsed with `schema` (see [[SchemaPolicy.inferByKey]]), into
     * `<destRoot>/<folder>/<mt>`, partitioned by the time bucket of
     * `tsCol`. Returns (tableName, path); with `registerTables` the
     * database must exist ([[createDatabase]]).
@@ -86,7 +84,7 @@ object LakeWriter {
       batchScope: Option[(String, Long)] = None): (String, String) = {
     val folder = folderOf(cfg)
     val flat = messages
-      .select(from_json(col("payload"), schema).as("__p"),
+      .select(SchemaPolicy.parseJson(col("payload"), schema).as("__p"),
         TimePartitions.bucket(tsCol, cfg.partitionTimeId).as("part"))
       .select(col("__p.*"), col("part"))
     val path = s"$destRoot/$folder/$mt"

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 /** A3/A4 — config-lookup routing.
   *
@@ -10,37 +11,34 @@ import org.apache.spark.sql.functions._
   * stream_id; target topic = first entry of the config's function chain +
   * "-ingress", defaulting to "ingester-ingress" (ingest-service.go:244-257).
   *
-  * Spark-first: two broadcast hash joins (alt-id pass, then id pass for the
-  * unmatched remainder via coalesce) — configs are O(100s), messages are the
-  * 100 TB side, so the fact side never shuffles.
+  * Spark-first: the same linear scan, compiled. The config list becomes
+  * literal arrays, and each message looks its config up with
+  * `array_position` (alt id first, then stream id; the first match in
+  * config order wins) — no join, so the message side never shuffles,
+  * nothing is broadcast, and each message routes at most once.
   */
 object Router {
   val DefaultFunction = "ingester"
 
-  /** Join envelope messages to their matching config. Adds all cfg_*
-    * columns plus `route_topic` and the resolved `message_type_resolved`. */
+  /** Look each envelope message's config up. Adds `cfg_at`, the matched
+    * config's 0-based position in `configs`, and all cfg_* columns
+    * (null when no config matches) plus `route_topic` and the resolved
+    * `message_type_resolved`. */
   def route(spark: SparkSession, messages: DataFrame, configs: Seq[StreamConfig]): DataFrame = {
-    val cfg = StreamConfig.toDataFrame(spark, configs)
+    def keys(key: StreamConfig => String) = array(configs.map(c =>
+      if (key(c).nonEmpty) lit(key(c)) else lit(null)): _*).cast(ArrayType(StringType))
+    // 1-based position of the first match; 0 (no match) becomes null.
+    // alt-id match takes precedence over stream-id match (ingester.go:1569-1590)
+    def firstMatch(key: StreamConfig => String, c: String) =
+      nullif(array_position(keys(key), col(c)), lit(0L))
+    val at = coalesce(firstMatch(_.streamAltId, "stream_alt_id"), firstMatch(_.streamId, "stream_id"))
+      .cast("int")
+    val cfg = element_at(
+      array(configs.map(StreamConfig.literal): _*).cast(ArrayType(StreamConfig.RoutingSchema)), at)
 
-    val byAlt = cfg.filter(col("cfg_stream_alt_id") =!= "")
-      .select(col("cfg_stream_alt_id").as("alt_key"),
-        struct(cfg.columns.toIndexedSeq.map(col): _*).as("cfg_alt"))
-    val byId = cfg.filter(col("cfg_stream_id") =!= "")
-      .select(col("cfg_stream_id").as("id_key"),
-        struct(cfg.columns.toIndexedSeq.map(col): _*).as("cfg_id"))
-
-    val joined = messages
-      .join(broadcast(byAlt), messages("stream_alt_id") === byAlt("alt_key"), "left")
-      .join(broadcast(byId), messages("stream_id") === byId("id_key"), "left")
-      // alt-id match takes precedence over stream-id match (ingester.go:1569-1590)
-      .withColumn("cfg", coalesce(col("cfg_alt"), col("cfg_id")))
-      .drop("alt_key", "id_key", "cfg_alt", "cfg_id")
-
-    val withCfg = StreamConfig.toDataFrame(spark, configs).columns
-      .foldLeft(joined)((df, c) => df.withColumn(c, col("cfg").getField(c)))
-      .drop("cfg")
-
-    withCfg
+    messages
+      .select(col("*") +: (at - 1).as("cfg_at") +:
+        StreamConfig.RoutingSchema.fieldNames.toSeq.map(f => cfg.getField(f).as(f)): _*)
       .withColumn("message_type_resolved",
         Envelope.resolvedMessageType(col("payload"), col("message_type"), col("cfg_message_type")))
       .withColumn("route_function",

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Stream configuration (reference: config/config-service.go:21-48 and
   * ingester/ingester.go:87-116): one JSON per stream under a config dir.
@@ -82,13 +83,16 @@ object StreamConfig {
     }
   }
 
-  /** Configs as a small DataFrame suitable for `broadcast()` joins. */
-  def toDataFrame(spark: SparkSession, configs: Seq[StreamConfig]): DataFrame = {
-    import spark.implicits._
-    configs.map(c => (c.streamId, c.streamAltId, c.active, c.messageType,
-      c.partitionTimeId, c.compressionTypeId, c.functions.mkString(",")))
-      .toDF("cfg_stream_id", "cfg_stream_alt_id", "cfg_active",
-        "cfg_message_type", "cfg_partition_time_id", "cfg_compression_type_id",
-        "cfg_functions")
-  }
+  /** The routing columns a matched config adds to a message. */
+  val RoutingSchema: StructType = StructType(Seq(
+    "cfg_stream_id" -> StringType, "cfg_stream_alt_id" -> StringType,
+    "cfg_active" -> BooleanType, "cfg_message_type" -> StringType,
+    "cfg_partition_time_id" -> IntegerType, "cfg_compression_type_id" -> IntegerType,
+    "cfg_functions" -> StringType).map { case (n, t) => StructField(n, t) })
+
+  /** A config as a literal struct of [[RoutingSchema]]. */
+  def literal(c: StreamConfig): Column =
+    struct(Seq[Any](c.streamId, c.streamAltId, c.active, c.messageType,
+      c.partitionTimeId, c.compressionTypeId, c.functions.mkString(","))
+      .zip(RoutingSchema.fieldNames).map { case (v, n) => lit(v).as(n) }: _*)
 }

@@ -262,9 +262,12 @@ object TxLogTable {
       schema: org.apache.spark.sql.types.StructType): Map[String, Long] =
     try {
       val cols = schema.fields.filter(f => statsSupported(f.dataType))
-      // keys are dataDir-RELATIVE paths (hive layouts nest k=v subdirs)
+      // keys are dataDir-RELATIVE paths (hive layouts nest k=v subdirs);
+      // one read-options object serves every footer (the no-options
+      // `open` builds a fresh Hadoop Configuration per file)
+      val opts = readOptions(fs.getConf)
       val footers = files.map(rel =>
-        rel -> footerBounds(fs.getConf, new HPath(dataDir, rel), cols))
+        rel -> footerBounds(fs.getConf, opts, new HPath(dataDir, rel), cols))
       if (cols.nonEmpty)
         writeStats(fs, dataDir, cols, footers.map { case (rel, (_, b)) => rel -> b })
       footers.map { case (rel, (rows, _)) => rel -> rows }.toMap
@@ -275,6 +278,11 @@ object TxLogTable {
         writeFileStatsByScan(spark, fs, dataDir, schema)
         Map.empty
     }
+
+  /** Parquet read options over `conf`, built once per harvest and
+    * shared by its footer reads. */
+  private def readOptions(conf: Configuration): org.apache.parquet.ParquetReadOptions =
+    org.apache.parquet.HadoopReadOptions.builder(conf).build()
 
   /** Min/max per supported column of one parquet file, read from its
     * footer's column-chunk statistics and encoded EXACTLY like
@@ -294,7 +302,8 @@ object TxLogTable {
     *    byte incremented (sorts ≥ the true max) — wider interval, never
     *    a wrong prune.
     * Returned with the file's row count (the sum over its row groups). */
-  private def footerBounds(conf: Configuration, file: HPath,
+  private def footerBounds(conf: Configuration,
+      opts: org.apache.parquet.ParquetReadOptions, file: HPath,
       cols: Seq[org.apache.spark.sql.types.StructField])
       : (Long, Map[String, (org.json4s.JValue, org.json4s.JValue)]) = {
     import org.apache.parquet.hadoop.ParquetFileReader
@@ -302,7 +311,7 @@ object TxLogTable {
     import org.apache.spark.sql.types._
     import scala.jdk.CollectionConverters._
     val wanted = cols.map(f => f.name -> f.dataType).toMap
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf), opts)
     try {
       // MILLIS/MICROS/NANOS unit per timestamp column, from the file
       // schema already in hand ([[stage]] writes MICROS; foreign
@@ -370,7 +379,7 @@ object TxLogTable {
     * scan). */
   private[graft] def stringRange(conf: Configuration, file: HPath,
       name: String): Option[(String, String)] =
-    try footerBounds(conf, file,
+    try footerBounds(conf, readOptions(conf), file,
         Seq(org.apache.spark.sql.types.StructField(name,
           org.apache.spark.sql.types.StringType)))
       ._2.get(name).collect {
@@ -909,6 +918,7 @@ object TxLogTable {
       val cols = dataSchema.fields.filter(f => statsSupported(f.dataType))
       if (cols.isEmpty) return
       val conf = fs.getConf
+      val opts = readOptions(conf)
       val out = new java.util.concurrent.ConcurrentHashMap[String,
         TxLogFormat.Bounds]()
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -918,7 +928,7 @@ object TxLogTable {
           pool.submit(new Runnable {
             def run(): Unit =
               try out.put(rel,
-                footerBounds(conf, new HPath(root, rel), cols.toSeq)._2)
+                footerBounds(conf, opts, new HPath(root, rel), cols.toSeq)._2)
               catch { case scala.util.control.NonFatal(_) => () }
           })
         }
@@ -1560,8 +1570,6 @@ object TxLogTable {
     // k rows costs O(k) dv rows + O(k + inserts) appended rows, never
     // a rewrite of the touched files ----
     if (useDv) {
-      import org.apache.spark.sql.functions.{expr => fexpr}
-      val qual = fs.makeQualified(root).toString
       val setMap = effSet.map(_.toMap)
       val affectedOpt =
         if (touched.isEmpty) None
@@ -1588,15 +1596,17 @@ object TxLogTable {
           // one probe join, persisted across its consumers: mask
           // coordinates + delete flag + the update image columns
           joined.filter(delCond || updCond).select(
-            fexpr(s"substring(__f, ${qual.length + 2})").as("__gf") +:
+            fc("__f").as("__gf") +:
             fc("__ri").as("__gri") +:
             delCond.as("__gdel") +:
             dataCols.map(c => updImage(c).as(c)): _*)
             .persist()
         }
       try {
-        val maskedFiles = affectedOpt.map(_.select("__gf").distinct()
-          .collect().map(_.getString(0)).toSeq.sorted).getOrElse(Seq.empty)
+        val names = affectedOpt.map(a => logNames(fs, root,
+          a.select("__gf").distinct().collect().map(_.getString(0))))
+          .getOrElse(Map.empty)
+        val maskedFiles = names.values.toSeq.sorted
         val unknownF = maskedFiles.filterNot(st.files.toSet)
         require(unknownF.isEmpty,
           s"deletion-vector merge: probe-derived file ${unknownF.headOption
@@ -1662,8 +1672,8 @@ object TxLogTable {
           return v
         }
         val affected = affectedOpt.get
-        val freshMask = affected.select(fc("__gf").as("f"),
-          fc("__gri").as("ri"))
+        val freshMask = affected.select(
+          logNameCol(fs, root, fc("__gf"), names).as("f"), fc("__gri").as("ri"))
         // pointer replacement via [[priorDvRows]] (each dir restricted
         // to its current pointees — no stale-row duplication)
         val dvRows = priorDvRows(spark, path, st.dvs, maskedFiles) match {
@@ -1676,7 +1686,7 @@ object TxLogTable {
           .parquet(new HPath(root, dvDir).toString)
         // mask totals from the pre-write frames, no sidecar read-back
         val fresh = affected.groupBy(fc("__gf")).count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
+          .map(r => names(r.getString(0)) -> r.getLong(1)).toMap
         val counts = dvCounts(fresh, maskedFiles, st.dvs)
         val v = commitRebaseRetry(fs, root, v0,
           (all ++ staged.map(_._1)).sorted, commit, txn, op = "dvmerge",
@@ -1910,7 +1920,7 @@ object TxLogTable {
       predicate: org.apache.spark.sql.Column,
       commit: CommitPoint = CommitPoint.Auto,
       txn: Option[(String, Long)] = None): Long = {
-    import org.apache.spark.sql.functions.{col => fc, expr => fexpr}
+    import org.apache.spark.sql.functions.{col => fc}
     val (fs, root) = fsFor(path)
     txnFastPath(fs, root, txn).foreach(v => return v)
     val v0 = versions(fs, root).lastOption.getOrElse(-1L)
@@ -1920,22 +1930,22 @@ object TxLogTable {
     val cond = resolvedCondAt(spark, path, predicate, v0, st.files)
     val (cand, _) = pruneFilesWith(fs, root, st.files, cond)
     if (cand.isEmpty) return -1L
-    val qual = fs.makeQualified(root).toString
     // matching rows AFTER the existing dv view (a row already masked
     // must not mask twice), as (log-relative file, in-file row index)
     val matched =
       scanFilesDv(spark, path, cand, Some(schema), st.dvs,
         lineage = true)
       .filter(predicate)
-      .select(fexpr(s"substring(__f, ${qual.length + 2})").as("f"),
-        fc("__ri").as("ri"))
+      .select(fc("__f").as("f"), fc("__ri").as("ri"))
       .persist()
     try {
       // ONE aggregate action yields both the touched-file set and the
       // per-file fresh-mask totals (it previously ran a distinct-collect
       // AND a groupBy-count over the same persisted probe — two jobs)
-      val fresh = matched.groupBy("f").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val freshByUri = matched.groupBy("f").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1))
+      val names = logNames(fs, root, freshByUri.map(_._1))
+      val fresh = freshByUri.map { case (u, n) => names(u) -> n }.toMap
       val touched = fresh.keys.toSeq.sorted
       if (touched.isEmpty) return -1L
       // the lineage-derived names must BE listing names (they are, for
@@ -1949,9 +1959,11 @@ object TxLogTable {
       // new dv rows for the touched files = fresh matches ∪ the touched
       // files' CURRENT dv rows (pointer replacement needs the union;
       // [[priorDvRows]] restricts each dir to its current pointees)
+      val freshMask =
+        matched.select(logNameCol(fs, root, fc("f"), names).as("f"), fc("ri"))
       val dvRows = priorDvRows(spark, path, st.dvs, touched) match {
-        case None => matched
-        case Some(prior) => matched.unionByName(prior)
+        case None => freshMask
+        case Some(prior) => freshMask.unionByName(prior)
       }
       val dvDir =
         s"data-dvs-${java.util.UUID.randomUUID().toString.take(8)}"
@@ -2006,7 +2018,7 @@ object TxLogTable {
       predicate: org.apache.spark.sql.Column,
       commit: CommitPoint = CommitPoint.Auto,
       txn: Option[(String, Long)] = None): Long = {
-    import org.apache.spark.sql.functions.{col => fc, expr => fexpr}
+    import org.apache.spark.sql.functions.{col => fc}
     require(set.nonEmpty, "update needs at least one SET assignment")
     val (fs, root) = fsFor(path)
     txnFastPath(fs, root, txn).foreach(v => return v)
@@ -2021,7 +2033,6 @@ object TxLogTable {
     val cond = resolvedCondAt(spark, path, predicate, v0, st.files)
     val (cand, _) = pruneFilesWith(fs, root, st.files, cond)
     if (cand.isEmpty) return -1L
-    val qual = fs.makeQualified(root).toString
     // matched rows AFTER the existing dv view, carrying BOTH the mask
     // coordinates and the SET-projected new image — one probe scan
     val matched =
@@ -2029,7 +2040,7 @@ object TxLogTable {
         lineage = true)
       .filter(predicate)
       .select(
-        fexpr(s"substring(__f, ${qual.length + 2})").as("__gf") +:
+        fc("__f").as("__gf") +:
         fc("__ri").as("__gri") +:
         schema.fields.toSeq.map { f =>
           set.get(f.name) match {
@@ -2041,8 +2052,10 @@ object TxLogTable {
     try {
       // one aggregate action for touched files + fresh-mask totals
       // (was a distinct-collect plus a groupBy-count — two jobs)
-      val fresh = matched.groupBy(fc("__gf")).count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val freshByUri = matched.groupBy(fc("__gf")).count().collect()
+        .map(r => r.getString(0) -> r.getLong(1))
+      val names = logNames(fs, root, freshByUri.map(_._1))
+      val fresh = freshByUri.map { case (u, n) => names(u) -> n }.toMap
       val touched = fresh.keys.toSeq.sorted
       if (touched.isEmpty) return -1L
       val unknownF = touched.filterNot(st.files.toSet)
@@ -2058,7 +2071,8 @@ object TxLogTable {
       // new dv rows = fresh masks ∪ the touched files' CURRENT dv rows
       // (pointer replacement; [[priorDvRows]] restricts each dir to
       // its current pointees so stale rows never duplicate)
-      val freshMask = matched.select(fc("__gf").as("f"), fc("__gri").as("ri"))
+      val freshMask = matched.select(
+        logNameCol(fs, root, fc("__gf"), names).as("f"), fc("__gri").as("ri"))
       val dvRows = priorDvRows(spark, path, st.dvs, touched) match {
         case None => freshMask
         case Some(prior) => freshMask.unionByName(prior)
@@ -3652,12 +3666,50 @@ object TxLogTable {
     org.apache.spark.sql.types.StructField("ri",
       org.apache.spark.sql.types.LongType)))
 
+  /** A probe's `__f` is `_metadata.file_path`, the file's URI
+    * `<qualified root>/<name>`, in which `java.net.URI` %-escapes a
+    * name's quote, backslash or space; the log and the dv sidecars hold
+    * the plain log name. `logNames` decodes a probe's collected distinct
+    * URIs with URI path semantics (as [[touchedFiles]] does). The two
+    * column translations are each one expression for every name: a
+    * literal map of just the names that escaping changes, else the
+    * plain cut after (or concat onto) the qualified root. So no scanned
+    * row is ever decoded, and a row's cost does not grow with the
+    * number of plain names. */
+  private def logNames(fs: FileSystem, root: HPath,
+      uris: Seq[String]): Map[String, String] = {
+    val prefix = fs.makeQualified(root).toUri.getPath + "/"
+    uris.map(u => u -> new java.net.URI(u).getPath.stripPrefix(prefix)).toMap
+  }
+
+  /** URI → log name, over [[logNames]]' `names` (uri → name). */
+  private def logNameCol(fs: FileSystem, root: HPath,
+      uri: org.apache.spark.sql.Column,
+      names: Map[String, String]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{coalesce, element_at, substring, typedLit}
+    val qual = fs.makeQualified(root).toString
+    coalesce(element_at(typedLit(names.filter { case (u, n) => u != s"$qual/$n" }), uri),
+      substring(uri, qual.length + 2, Int.MaxValue))
+  }
+
+  /** Log name → URI, for the log names `names`. */
+  private def uriCol(fs: FileSystem, root: HPath,
+      name: org.apache.spark.sql.Column,
+      names: Iterable[String]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{coalesce, concat, element_at, lit, typedLit}
+    val qualRoot = fs.makeQualified(root)
+    val qual = qualRoot.toString
+    val escaped = names.map(n => n -> new HPath(qualRoot, n).toUri.toString)
+      .filter { case (n, u) => u != s"$qual/$n" }.toMap
+    coalesce(element_at(typedLit(escaped), name), concat(lit(qual + "/"), name))
+  }
+
   /** Subtract a dv map's masked rows from a stamped scan — the
     * `(file, row_index)` anti-join. Two shapes, picked by a byte
     * budget over the log-recorded mask totals (zero extra I/O):
     *
     *  - SMALL mask (the common point-delete case): the dv rows
-    *    broadcast with fully-qualified path keys — one hashed-relation
+    *    broadcast keyed by their file's URI — one hashed-relation
     *    probe per scanned row, nothing added to the hot path.
     *  - LARGE mask (over [[DvBroadcastBudget]] priced at
     *    rows × (avg qualified path + 16 B)): the join must shuffle, so
@@ -3674,10 +3726,12 @@ object TxLogTable {
     * rewrote). */
   private[graft] def dvAntiJoin(spark: SparkSession, path: String,
       scan: DataFrame, live: Map[String, (String, Long)]): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, concat, lit}
+    import org.apache.spark.sql.functions.{broadcast, col}
     if (live.isEmpty) return scan
     val (fs, root) = fsFor(path)
     val qual = fs.makeQualified(root).toString
+    // the scan's __f is the file's URI; the dv rows name the log file
+    val uriOf = uriCol(fs, root, _: org.apache.spark.sql.Column, live.keys)
     val raw = spark.read.schema(DvSchema).parquet(
       live.values.map(_._1).toSeq.distinct.map(d => s"$path/$d"): _*)
     import spark.implicits._
@@ -3692,7 +3746,7 @@ object TxLogTable {
       live.keys.map(_.length).sum / live.size + qual.length + 1 + 16L
     if (maskRows * avgKeyBytes <= DvBroadcastBudget) {
       val dvRows = restricted.select(
-        concat(lit(qual + "/"), col("f")).as("__dvf"),
+        uriOf(col("f")).as("__dvf"),
         col("ri").as("__dvri"))
       scan.join(broadcast(dvRows),
         scan("__f") === dvRows("__dvf") && scan("__ri") === dvRows("__dvri"),
@@ -3702,7 +3756,7 @@ object TxLogTable {
       val dvRows = restricted.join(broadcast(idDf), Seq("f"))
         .select(col("__fid").as("__dvfid"), col("ri").as("__dvri"))
       val withId = scan.join(
-        broadcast(idDf.select(concat(lit(qual + "/"), col("f")).as("__f"),
+        broadcast(idDf.select(uriOf(col("f")).as("__f"),
           col("__fid"))),
         Seq("__f"), "left")
       withId.join(dvRows,

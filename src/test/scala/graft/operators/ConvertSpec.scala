@@ -105,6 +105,37 @@ class ConvertSpec extends SparkSpec {
     assert(ids(TxLogTable.readVersion(spark, path, 0)) == (1L to 30L))
   }
 
+  test("deletion-vector delete, update and merge run on file names that need URI escaping") {
+    val path = tmp
+    val names = Seq("q\"uote.parquet", "back\\slash.parquet", "caf\u00e9.parquet")
+    names.zipWithIndex.foreach { case (name, b) =>
+      (b * 10 + 1 to b * 10 + 10).map(i => (i.toLong, s"s$i")).toDF("id", "s")
+        .coalesce(1).write.mode("append").parquet(path)
+      val part = new java.io.File(path).listFiles()
+        .filter(_.getName.startsWith("part-")).head
+      Files.move(part.toPath, part.toPath.resolveSibling(name))
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
+      df.select("id", "s").as[(Long, String)].collect().toSeq.sorted
+    val v0 = (1L to 30L).map(i => (i, s"s$i"))
+    assert(TxLogTable.convert(spark, path) == 0L)
+    // one masked row in every file, then a second mask on top of the first
+    assert(TxLogTable.deleteWhereDv(spark, path, col("id") % 10 === 5L) == 1L)
+    assert(TxLogTable.deleteWhereDv(spark, path, col("id") % 10 === 6L) == 2L)
+    val v2 = v0.filterNot(r => Set(5L, 6L)(r._1 % 10))
+    assert(rows(TxLogTable.read(spark, path)) == v2)
+    assert(TxLogTable.updateWhereDv(spark, path, Map("s" -> lit("u")),
+      col("id") % 10 === 7L) == 3L)
+    val v3 = v2.map { case (i, s) => (i, if (i % 10 == 7) "u" else s) }
+    assert(rows(TxLogTable.read(spark, path)) == v3)
+    val updates = Seq((3L, "m"), (13L, "m"), (23L, "m"), (99L, "new")).toDF("id", "s")
+    assert(TxLogTable.mergeByKey(spark, path, updates, Seq("id"), useDv = true) == 4L)
+    val v4 = v3.map { case (i, s) => (i, if (i % 10 == 3) "m" else s) } :+ ((99L, "new"))
+    assert(rows(TxLogTable.read(spark, path)) == v4.sorted)
+    assert(rows(TxLogTable.readVersion(spark, path, 0)) == v0)
+    assert(rows(TxLogTable.readVersion(spark, path, 2)) == v2)
+  }
+
   test("second convert refuses; convert of an ordinary graft table refuses") {
     val path = tmp
     (1L to 10L).map(i => (i, i)).toDF("a", "b").write.parquet(path)

@@ -159,6 +159,19 @@ class IngestPipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dest/shared/pageview").count() == 6)
   }
 
+  test("configs sharing a stream id: each message is written once, by the first config") {
+    val dest = tmpDir
+    val cfgs = Seq("first", "second").map(f => StreamConfig("stream-x", "", active = true,
+      "pageview", 1, f, TimePartitions.Daily, 1, Seq("ingester")))
+    val docs = (1 to 3).map(i =>
+      s"""{"stream_id":"stream-x","type":"pageview","url":"/$i"}""").toDF("json")
+    val results = IngestPipeline.runBatch(spark, docs, "json", cfgs, dest,
+      tsCol = to_timestamp(lit("2026-08-13 10:00:00")), registerTables = false)
+    assert(results.map(_.config.folderName) == Seq("first"))
+    assert(spark.read.parquet(s"$dest/first/pageview").count() == 3)
+    assert(!new java.io.File(s"$dest/second").exists())
+  }
+
   test("an unknown chain function is rejected before any sink writes") {
     val dest = tmpDir
     val e = intercept[IllegalArgumentException] {
@@ -252,7 +265,7 @@ class IngestPipelineSpec extends SparkSpec {
     assert(rows(s"$dest/_quarantine") == 1)
   }
 
-  test("job budget: a batch shaped like the ingest benchmark's runs at most 15 jobs") {
+  test("job budget: a batch shaped like the ingest benchmark's runs at most 7 jobs") {
     // configs A (pii + lake, 3 types), B (lake + txlog, routed by its alt
     // id, 2 types), C inactive (2 types), plus unknown stream ids
     val configs = Seq(
@@ -291,6 +304,6 @@ class IngestPipelineSpec extends SparkSpec {
       sc.removeSparkListener(listener)
     }
     // the budget may go down, never up
-    assert(jobs.get <= 15, s"${jobs.get} jobs")
+    assert(jobs.get <= 7, s"${jobs.get} jobs")
   }
 }

@@ -40,10 +40,32 @@ class RouterSpec extends SparkSpec {
     assert(r.select("stream_id").as[String].collect().toSeq == Seq("id-1"))
   }
 
-  test("routing join stays broadcast (no shuffle of the message side)") {
-    val plan = Router.route(spark, msgs(("id-1", null)), configs)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"))
-    assert(!plan.contains("SortMergeJoin"))
+  test("routing plans no join and no exchange (the message side never shuffles)") {
+    val many = spark.range(100).select(
+      concat(lit("id-"), (col("id") % 4).cast("string")).as("stream_id"),
+      when(col("id") % 3 === 0, lit("alt-2")).as("stream_alt_id"),
+      lit("").as("message_type"), lit("{}").as("payload"))
+    val qe = Router.route(spark, many, configs).queryExecution
+    assert(qe.analyzed.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.isEmpty)
+    val plan = qe.executedPlan.toString
+    assert(!plan.contains("Join") && !plan.contains("Exchange"), plan)
+  }
+
+  test("configs sharing a stream id: each message routes once, to the first config") {
+    val shared = Seq(
+      StreamConfig("id-s", "", active = true, "first", 1, "", 2, 1, Seq("ingester")),
+      StreamConfig("id-s", "", active = true, "second", 1, "", 2, 1, Seq("deltawriter")),
+      StreamConfig("id-t", "alt-s", active = true, "by-alt", 1, "", 2, 1, Seq("ingester")),
+      StreamConfig("id-u", "alt-s", active = true, "by-alt-2", 1, "", 2, 1, Seq("ingester")))
+    val r = Router.route(spark, msgs(("id-s", null), ("id-s", "no-such-alt"), ("id-s", "alt-s")), shared)
+      .select("stream_alt_id", "cfg_message_type").as[(String, String)].collect().toSeq
+    assert(r.sortBy(x => String.valueOf(x._1)) ==
+      Seq(("alt-s", "by-alt"), ("no-such-alt", "first"), (null, "first")))
+  }
+
+  test("no configs: every message is unmatched") {
+    val r = Router.route(spark, msgs(("id-1", "alt-2")), Nil)
+    assert(r.head().isNullAt(r.schema.fieldIndex("cfg_stream_id")))
+    assert(Router.activeOnly(r).isEmpty)
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.functions.{col, from_json}
 import org.apache.spark.sql.types._
 
 class SchemaPolicySpec extends SparkSpec {
@@ -61,5 +62,18 @@ class SchemaPolicySpec extends SparkSpec {
     val row = parsed.selectExpr("p.name", "p.properties.age").head()
     assert(row.getString(0) == "user1")
     assert(row.getDouble(1) == 20.0)
+  }
+
+  test("parseJson hands JsonToStructs the schema as a type; rows equal from_json's") {
+    val df = Seq("""{"a":1.5,"b":{"c":"x"},"l":[1,2]}""", """{"a":2}""", "bad json")
+      .toDF("payload")
+    val schema = SchemaPolicy.inferColumn(spark, df, "payload")
+    val parsed = df.select(SchemaPolicy.parseJson(col("payload"), schema).as("p"))
+    val found = parsed.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+      case j: org.apache.spark.sql.catalyst.expressions.JsonToStructs => j.schema
+    }))
+    assert(found == Seq(schema))
+    assert(parsed.collect().toSeq ==
+      df.select(from_json(col("payload"), schema).as("p")).collect().toSeq)
   }
 }

@@ -69,4 +69,27 @@ class SchemaPropertySpec extends SparkSpec {
       }
     }
   }
+
+  /** A document of the keyed-inference property: mostly generated
+    * objects, plus the cases the merge and the policy must agree on. */
+  private val keyedDoc: Gen[String] = Gen.frequency(
+    6 -> jsonObject(2),
+    2 -> Gen.oneOf("""{"v":1,"w":[1,2]}""", """{"v":"x","w":["a"]}""", """{"v":2.5}"""),
+    1 -> Gen.oneOf("""{"z":null}""", """{"o":{},"a":[]}""", """{"o":{"p":null},"a":[{}]}"""),
+    1 -> Gen.oneOf("""not json {{""", """{"a":""", "42", "[]", """[{"v":true}]"""))
+
+  test("property: inferByKey equals spark.read.json run per key") {
+    samples(Gen.listOfN(14, Gen.zip(Gen.oneOf("k1", "k2", "k3"), keyedDoc)), 10).foreach { rows =>
+      val df = rows.toDF("k", "doc").repartition(3)
+      Seq(false, true).foreach { numerics =>
+        val got = SchemaPolicy.inferByKey(df, Seq("k"), "doc", referenceNumerics = numerics)
+        val want = rows.groupBy(_._1).map { case (k, rs) =>
+          val read = spark.read.option("dropFieldIfAllNull", true).json(rs.map(_._2).toDS()).schema
+          val cleaned = SchemaPolicy.clean(read).getOrElse(StructType(Nil))
+          Seq(k) -> (if (numerics) SchemaPolicy.widenIntegrals(cleaned) else cleaned)
+        }
+        assert(got == want, rows.mkString("\n"))
+      }
+    }
+  }
 }

@@ -1403,6 +1403,29 @@ class TxLogTableSpec extends SparkSpec {
     assert(TxLogTable.snapshotFiles(path, vd).isEmpty)
     assert(!new java.io.File(path).list().exists(_.startsWith("data-delete-")))
   }
+
+  test("footer stats: _stats.json of a fixed table is byte-identical to the pinned document") {
+    // the document the per-file-Configuration harvest wrote for this table,
+    // with the staged file names replaced by file0, file1 in name order
+    val path = tmp
+    val df = (1 to 40).map { i =>
+      (i.toLong, i * 0.5, f"s$i%02d", java.sql.Date.valueOf(f"2024-01-${i % 28 + 1}%02d"),
+        java.sql.Timestamp.from(java.time.Instant.parse(f"2024-02-01T${i % 24}%02d:00:00Z")),
+        BigDecimal(i) / 4, if (i % 3 == 0) null else s"n$i")
+    }.toDF("id", "x", "s", "d", "ts", "dec", "n").repartitionByRange(2, col("id"))
+    TxLogTable.append(spark, df, path)
+    val files = TxLogTable.snapshotFiles(path, 0).sorted
+    val dir = files.head.takeWhile(_ != '/')
+    val text = new String(Files.readAllBytes(
+      java.nio.file.Paths.get(path, dir, "_stats.json")), "UTF-8")
+    val pinned = files.map(_.drop(dir.length + 1)).zipWithIndex
+      .foldLeft(text) { case (t, (f, i)) => t.replace(f, s"file$i") }
+    // the files' order in the document is their staging order
+    val file0 = """"file0":{"id":{"min":1,"max":20},"x":{"min":0.5,"max":10.0},"s":{"min":"s01","max":"s20"},"d":{"min":19724,"max":19743},"ts":{"min":1706749200000000,"max":1706817600000000},"dec":{"min":0.250000000000000000,"max":5.000000000000000000},"n":{"min":"n1","max":"n8"}}"""
+    val file1 = """"file1":{"id":{"min":21,"max":40},"x":{"min":10.5,"max":20.0},"s":{"min":"s21","max":"s40"},"d":{"min":19723,"max":19750},"ts":{"min":1706745600000000,"max":1706828400000000},"dec":{"min":5.250000000000000000,"max":10.000000000000000000},"n":{"min":"n22","max":"n40"}}"""
+    assert(Seq(s"$file0,$file1", s"$file1,$file0").map(fs => s"""{"files":{$fs}}""")
+      .contains(pinned), pinned)
+  }
 }
 
 /** Latches the stage-scope test's UDFs wait on (executor tasks run in
